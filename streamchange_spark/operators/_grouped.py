@@ -9,7 +9,11 @@ crosses Arrow once per PARTITION: explicit hash repartition by key, then
 
 The repartition count is pinned (REPARTITION_BY_NUM) so AQE's size-based
 coalescing cannot fold a CPU-bound python stage onto one worker — per-key
-kernel work is invisible to size heuristics.
+kernel work is invisible to size heuristics. The partition of a row is
+``pmod(xxhash64(keys), n)``, not Spark's hash partitioning on the keys: a
+``repartition(n, *keys)`` after an aggregate on the same keys is dropped by
+the planner as redundant, and AQE then coalesces that aggregate's small
+shuffle, Python stage included, down to one task.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ from typing import Callable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def grouped_apply(
@@ -72,8 +77,9 @@ def grouped_apply(
             yield pd.concat(outs, ignore_index=True)
 
     if assume_partitioned:
-        # Caller guarantees rows are already hash-clustered by key; skip the
-        # exchange. WARNING: this is an unchecked contract — if any key's rows
+        # Caller guarantees rows are already clustered by key (every key's
+        # rows in one partition, under any hash); skip the exchange.
+        # WARNING: this is an unchecked contract — if any key's rows
         # span two partitions, ``run_one`` fires once per fragment and the
         # output silently contains duplicate/partial results for that key.
         # Only pass True when the immediately preceding op was a
@@ -87,4 +93,7 @@ def grouped_apply(
         # wire); use this only when the input is already key-clustered at
         # matching volume.
         return df.mapInPandas(run, schema)
-    return df.repartition(n, *key_cols).mapInPandas(run, schema)
+    # Partition ids, not a hash repartition on this bucket expression: that
+    # would re-hash n bucket values onto n partitions, and they collide.
+    bucket = F.pmod(F.xxhash64(*key_cols), F.lit(n)).cast("int")
+    return df.repartitionById(n, bucket).mapInPandas(run, schema)

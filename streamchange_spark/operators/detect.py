@@ -105,9 +105,10 @@ def standardize_per_key(
     compute (x - mean) / sample-stddev per key; constant or too-short
     series map to NULL here (NaN in the UDF twin — same dropna downstream).
 
-    Scale shape: one hash exchange on ``key_cols`` — the SAME partitioning
-    the grouped detector scan repartitions to, so a following
-    ``*_changepoints(assume_partitioned=True)`` reuses it; only
+    Scale shape: one hash exchange on ``key_cols``, so every key's rows
+    land in one partition. That key clustering is all a following
+    ``*_changepoints(assume_partitioned=True)`` needs; it need not be the
+    hash the grouped detector scan would repartition with. Only
     ``ddof=1``'s two extra aggregate columns ride the window, never text.
     """
     if ddof not in (0, 1):

@@ -47,15 +47,17 @@ HEAD are written via atomic rename.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
 import uuid
 from contextlib import contextmanager
-from typing import Iterable
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _atomic_write(path: str, payload: str):
@@ -282,6 +284,69 @@ def _rows_per_file(paths) -> dict[str, int]:
         return dict(zip(paths, pool.map(one, paths)))
 
 
+def _parquet_files(directory: str) -> list[str]:
+    """The parquet data files one Spark write left in ``directory``, sorted."""
+    return sorted(
+        os.path.join(directory, f)
+        for f in os.listdir(directory)
+        if f.endswith(".parquet")
+    )
+
+
+#: Footer key under which Spark's parquet writer stores the row schema.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema a Spark writer recorded in ``path``'s footer, or
+    None when the file was not written by Spark. This is the footer Spark's
+    own (non-merging) parquet schema inference reads, so passing it as an
+    explicit read schema plans the same DataFrame without the inference
+    job. One footer read, no data pages."""
+    import pyarrow.parquet as pq
+
+    raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_ROW_METADATA)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
+def _write_concurrently(
+    spark: SparkSession, write_one: Callable, items: list
+) -> list:
+    """``[write_one(item) for item in items]`` with the calls overlapped on
+    a bounded thread pool (2 x ``defaultParallelism`` threads, at most one
+    per item). At small partition sizes a store commit is per-job latency,
+    not data work, so independent partition writes run best side by side.
+
+    Every call is wrapped on its own by ``inheritable_thread_target``, so
+    each pool thread runs with a private copy of the caller's job group and
+    local properties (one shared copy would be mutated by every thread's SQL
+    execution). The ``outputTimestampType`` toggle wraps the whole batch
+    once: a per-write toggle would race once writes overlap. Results come
+    back in input order after every call has finished; when any call
+    raised, the first failure (in input order) is re-raised then, so a
+    caller that commits only after this returns commits nothing."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    def bind(item):
+        call = functools.partial(write_one, item)
+        # With PYSPARK_PIN_THREAD=false there are no per-thread JVM
+        # properties to copy, and the session comes back unwrapped.
+        wrap = inheritable_thread_target(spark)
+        return wrap(call) if callable(wrap) else call
+
+    with _stats_friendly_writes(spark):
+        if len(items) <= 1:
+            return [write_one(item) for item in items]
+        workers = min(2 * spark.sparkContext.defaultParallelism, len(items))
+        calls = [bind(item) for item in items]
+        # leaving the block waits for every call
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            futures = [pool.submit(call) for call in calls]
+    return [f.result() for f in futures]
+
+
 def zorder_column(df: DataFrame, cols, bits_per_col: int | None = None):
     """A Z-order (Morton) key over up to 4 columns, built entirely from JVM
     column expressions — the multi-dimensional clustering key behind
@@ -396,6 +461,26 @@ class SnapshotStore:
         # a manifest is MBs of JSON and every read/plan call consults it —
         # re-parsing per call would dominate driver-side planning.
         self._manifest_cache: dict[str, tuple[tuple, dict]] = {}
+        # path -> Spark schema from the file's footer (None: not written
+        # by Spark). Committed files are immutable, so it never goes stale.
+        self._schema_cache: dict[str, StructType | None] = {}
+
+    def _parquet(
+        self, spark: SparkSession, paths, merge_schema: bool = False
+    ) -> DataFrame:
+        """``spark.read.parquet(*paths)`` without Spark's one-task
+        schema-inference job: the schema comes from the footer of the file
+        that inference would read (the first path in sorted order),
+        memoized per path. Files not written by Spark fall back to
+        inference; ``merge_schema`` keeps Spark's merging inference."""
+        if merge_schema:
+            return spark.read.option("mergeSchema", "true").parquet(*paths)
+        first = min(paths)
+        if first not in self._schema_cache:
+            self._schema_cache[first] = _footer_schema(first)
+        schema = self._schema_cache[first]
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*paths)
 
     # -- manifest plumbing ---------------------------------------------------
     def _manifest_path(self, snapshot_id: str) -> str:
@@ -578,6 +663,16 @@ class SnapshotStore:
         unchanged (file reuse — no rewrite), so incremental jobs commit only
         the partitions they produced.
 
+        The per-partition writes are independent Spark jobs and run
+        concurrently from a bounded driver thread pool (2 x the session's
+        default parallelism, at most one thread per partition), each under
+        the caller's job group. Each write also drops its empty files and
+        reads its footer row counts and stats. The results fold into the
+        manifest in the order of ``partitions`` once every write has
+        finished; if any write fails, its error is raised then and nothing
+        is committed (the written files are orphans for
+        :meth:`remove_orphan_files`).
+
         ``stat_cols``: record per-FILE [min, max] manifest statistics for
         these columns (read from the parquet footers only — the Iceberg
         manifest column-stats analogue). :meth:`read` with ``ranges=``
@@ -630,7 +725,11 @@ class SnapshotStore:
             file_stats.update(parent_manifest.get("file_stats", {}))
 
         cluster_by = list(cluster_by) if cluster_by else None
-        for part_key, df in partitions.items():
+        if cluster_by and cluster_mode not in ("range", "zorder"):
+            raise ValueError(f"cluster_mode={cluster_mode!r}")
+
+        def write_one(item):
+            part_key, df = item
             part_dir = os.path.join(self.table_dir, "data", snapshot_id, part_key)
             t0 = time.time()
             if cluster_by:
@@ -638,10 +737,8 @@ class SnapshotStore:
                     z, _ = zorder_column(df, cluster_by)
                     df = df.withColumn("__z", z)
                     keys = ["__z"]
-                elif cluster_mode == "range":
-                    keys = cluster_by
                 else:
-                    raise ValueError(f"cluster_mode={cluster_mode!r}")
+                    keys = cluster_by
                 if cluster_files:
                     df = df.repartitionByRange(cluster_files, *keys)
                 else:
@@ -649,13 +746,8 @@ class SnapshotStore:
                 df = df.sortWithinPartitions(*keys)
                 if keys == ["__z"]:
                     df = df.drop("__z")
-            with _stats_friendly_writes(df.sparkSession):
-                df.write.mode("overwrite").parquet(part_dir)
-            part_files = sorted(
-                os.path.join(part_dir, f)
-                for f in os.listdir(part_dir)
-                if f.endswith(".parquet")
-            )
+            df.write.mode("overwrite").parquet(part_dir)
+            part_files = _parquet_files(part_dir)
             # Never commit empty task outputs (a wide cluster writing a
             # small partition leaves one empty file per idle task): they
             # bloat the manifest and schedule pointless scan tasks. Keep
@@ -668,10 +760,8 @@ class SnapshotStore:
             for f in part_files:
                 if f not in kept:
                     os.remove(f)
-            files[part_key] = kept
-            if stat_cols:
-                file_stats.update(_collect_file_stats(kept, stat_cols))
-            metrics[part_key] = {
+            stats = _collect_file_stats(kept, stat_cols) if stat_cols else {}
+            metric = {
                 "n_files": len(kept),
                 "n_rows": sum(rows_by_file.values()),
                 "bytes": sum(os.path.getsize(f) for f in kept),
@@ -681,8 +771,17 @@ class SnapshotStore:
             if cluster_by:
                 # Recorded so maintenance rewrites preserve the layout the
                 # file-skipping reads depend on (see compact_partitions).
-                metrics[part_key]["cluster_by"] = list(cluster_by)
-                metrics[part_key]["cluster_mode"] = cluster_mode
+                metric["cluster_by"] = list(cluster_by)
+                metric["cluster_mode"] = cluster_mode
+            return kept, metric, stats
+
+        items = list(partitions.items())
+        if items:
+            written = _write_concurrently(items[0][1].sparkSession, write_one, items)
+            for (part_key, _), (kept, metric, stats) in zip(items, written):
+                files[part_key] = kept
+                metrics[part_key] = metric
+                file_stats.update(stats)
 
         live = {f for pf in files.values() for f in pf}
         manifest = {
@@ -815,8 +914,11 @@ class SnapshotStore:
         (HEAD flips last, same contract as :meth:`commit_partitions`).
 
         Plan shape: each partition is read from exactly its own files and
-        ``coalesce``-d (no shuffle) down to the target file count; on a
-        cluster the per-partition rewrites are independent jobs. ``predicate``
+        ``coalesce``-d (no shuffle) down to the target file count. The
+        per-partition rewrites are independent jobs and run concurrently,
+        as in :meth:`commit_partitions`: results fold into the manifest in
+        partition order once every rewrite has finished, and a failed
+        rewrite commits nothing. ``predicate``
         restricts compaction to a partition family (e.g. only ``tier1h/``).
         Returns ``(snapshot_id | None, {partition: {files_before,
         files_after, bytes}})`` — snapshot_id is None when nothing needed
@@ -865,8 +967,9 @@ class SnapshotStore:
         files = dict(m["files"])
         metrics = dict(m.get("metrics", {}))
         file_stats = dict(m.get("file_stats", {}))
-        report: dict[str, dict] = {}
-        for part_key, n_out in todo.items():
+
+        def rewrite_one(part_key):
+            n_out = todo[part_key]
             old_files = files[part_key]
             # The compacted files inherit manifest stats on the union of the
             # columns the replaced files carried stats for.
@@ -900,41 +1003,43 @@ class SnapshotStore:
                     ).sortWithinPartitions(*ckeys)
             else:
                 src = src.coalesce(n_out)
-            with _stats_friendly_writes(spark):
-                src.write.mode("overwrite").parquet(part_dir)
-            new_files = sorted(
-                os.path.join(part_dir, f)
-                for f in os.listdir(part_dir)
-                if f.endswith(".parquet")
-            )
-            files[part_key] = new_files
-            for f in old_files:
-                file_stats.pop(f, None)
-            if stat_cols:
-                file_stats.update(_collect_file_stats(new_files, stat_cols))
+            src.write.mode("overwrite").parquet(part_dir)
+            new_files = _parquet_files(part_dir)
+            stats = _collect_file_stats(new_files, stat_cols) if stat_cols else {}
             # Compaction rewrites bytes, not data: incremental consumers
             # key off the last DATA write, carried through every rewrite.
-            prev = metrics.get(part_key, {})
             data_snapshot_id = prev.get(
                 "data_snapshot_id", prev.get("snapshot_id")
             )
-            part_bytes = sum(os.path.getsize(f) for f in new_files)
-            metrics[part_key] = {
+            metric = {
                 "n_files": len(new_files),
                 "n_rows": sum(_rows_per_file(new_files).values()),
-                "bytes": part_bytes,
+                "bytes": sum(os.path.getsize(f) for f in new_files),
                 "write_seconds": round(time.time() - t0, 3),
                 "snapshot_id": snapshot_id,
                 "compacted_from": len(old_files),
                 "data_snapshot_id": data_snapshot_id,
             }
             if ckeys:
-                metrics[part_key]["cluster_by"] = ckeys
-                metrics[part_key]["cluster_mode"] = cmode
+                metric["cluster_by"] = ckeys
+                metric["cluster_mode"] = cmode
+            return new_files, metric, stats
+
+        parts = list(todo)
+        report: dict[str, dict] = {}
+        for part_key, (new_files, metric, stats) in zip(
+            parts, _write_concurrently(spark, rewrite_one, parts)
+        ):
+            old_files = files[part_key]
+            files[part_key] = new_files
+            for f in old_files:
+                file_stats.pop(f, None)
+            file_stats.update(stats)
+            metrics[part_key] = metric
             report[part_key] = {
                 "files_before": len(old_files),
                 "files_after": len(new_files),
-                "bytes": part_bytes,
+                "bytes": metric["bytes"],
             }
 
         manifest = {
@@ -971,11 +1076,7 @@ class SnapshotStore:
         would otherwise have no file at all, so reads still infer a schema),
         append to the carried-over files, recompute footer stats for the new
         files and exact metadata row counts for the partition."""
-        new_files = sorted(
-            os.path.join(new_dir, f)
-            for f in os.listdir(new_dir)
-            if f.endswith(".parquet")
-        )
+        new_files = _parquet_files(new_dir)
         rows_by_file = _rows_per_file(new_files)
         nonempty = [f for f in new_files if rows_by_file[f] > 0]
         kept_new = nonempty or ([] if kept_files else new_files[:1])
@@ -1259,7 +1360,7 @@ class SnapshotStore:
                 None,
             )
             if schema_file is not None:
-                tgt_cols = spark.read.parquet(schema_file).columns
+                tgt_cols = self._parquet(spark, [schema_file]).columns
                 missing = set(tgt_cols) - set(source.columns)
                 if missing:
                     raise ValueError(
@@ -1851,13 +1952,9 @@ class SnapshotStore:
         del_dir = os.path.join(self.table_dir, "data", snapshot_id, "deletes")
         t0 = time.time()
         hits.coalesce(1).write.mode("overwrite").parquet(del_dir)
-        delete_paths = sorted(
-            os.path.join(del_dir, f)
-            for f in os.listdir(del_dir)
-            if f.endswith(".parquet")
-        )
+        delete_paths = _parquet_files(del_dir)
         per_file = (
-            spark.read.parquet(*delete_paths).groupBy("file").count().collect()
+            self._parquet(spark, delete_paths).groupBy("file").count().collect()
             if delete_paths
             else []
         )
@@ -1970,11 +2067,7 @@ class SnapshotStore:
         eq_dir = os.path.join(self.table_dir, "data", snapshot_id, "eq_deletes")
         t0 = time.time()
         keys.dropDuplicates().coalesce(1).write.mode("overwrite").parquet(eq_dir)
-        paths = sorted(
-            os.path.join(eq_dir, f)
-            for f in os.listdir(eq_dir)
-            if f.endswith(".parquet")
-        )
+        paths = _parquet_files(eq_dir)
         n_keys = sum(_rows_per_file(paths).values()) if paths else 0
         report = {
             "n_keys": n_keys,
@@ -2047,7 +2140,7 @@ class SnapshotStore:
         from pyspark.sql import functions as F
 
         dels = (
-            spark.read.parquet(*rel)
+            self._parquet(spark, rel)
             .select(
                 F.col("file").alias("__del_file"), F.col("pos").alias("__del_pos")
             )
@@ -2091,11 +2184,9 @@ class SnapshotStore:
         NULL-keyed rows). The key set rides a broadcast — equality deletes
         are tombstone-sized by construction (a CDC batch, a purge list),
         and compaction folds them into plain files before they grow."""
-        import functools
-
         from pyspark.sql import functions as F
 
-        keys = spark.read.parquet(*entry["paths"]).dropDuplicates()
+        keys = self._parquet(spark, entry["paths"]).dropDuplicates()
         cond = functools.reduce(
             lambda a, b: a & b,
             [df[c].eqNullSafe(keys[c]) for c in entry["cols"]],
@@ -2133,10 +2224,7 @@ class SnapshotStore:
         paths = list(paths)
 
         def build(group_paths):
-            reader = spark.read
-            if merge_schema:
-                reader = reader.option("mergeSchema", "true")
-            df = reader.parquet(*group_paths)
+            df = self._parquet(spark, group_paths, merge_schema)
             if file_col is not None:
                 df = df.withColumn(file_col, F.col("_metadata.file_path"))
             if pos_col is not None:

@@ -574,3 +574,35 @@ def test_standardize_per_key_matches_udf_twin(spark):
 
     with pytest.raises(ValueError, match="ddof"):
         standardize_per_key(df, ["key"], ["value"], ddof=2)
+
+
+def test_gapfill_fed_detector_stage_runs_wide_under_aqe(spark):
+    """A detector scan over a gap-filled tier must keep its n-way Python
+    stage. gapfill's window already hash-partitions on the key, so a plain
+    ``repartition(n, key)`` is dropped as redundant and AQE coalesces the
+    small shuffle, Python stage included, to one task. The final stage's
+    partition count is read after AQE re-planned it."""
+    from datetime import datetime, timedelta
+
+    from pyspark.sql import functions as F
+
+    from streamchange_spark.operators import gapfill
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    n = spark.sparkContext.defaultParallelism
+    rng = np.random.RandomState(11)
+    rows = [
+        (f"k{k}", datetime(2024, 1, 1) + timedelta(hours=int(h)), float(v))
+        for k in range(40)
+        for h, v in zip(
+            np.sort(rng.choice(96, 30, replace=False)), rng.normal(0.0, 1.0, 30)
+        )
+    ]
+    events = spark.createDataFrame(rows, "key string, ts timestamp, value double")
+    hourly = events.groupBy("key", F.date_trunc("hour", "ts").alias("ts")).agg(
+        F.sum("value").alias("value")
+    )
+    dense = gapfill(hourly, ["key"], "ts", "value", 3600)
+    factory = lambda: WindowSegmentor(CUSUM(penalty=BIC(scale=10)), 4, 24)
+    out = window_segmentor_changepoints(dense, factory, ["key"], "ts", ["value"])
+    assert out.rdd.getNumPartitions() >= n
