@@ -293,6 +293,57 @@ def _parquet_files(directory: str) -> list[str]:
     )
 
 
+def _new_snapshot_id() -> str:
+    return time.strftime("%Y%m%d%H%M%S") + "-" + uuid.uuid4().hex[:8]
+
+
+def _register_part_files(
+    new_dir: str | None,
+    carried: list,
+    stat_cols,
+    snapshot_id: str,
+    t0: float,
+    **extra,
+) -> tuple[list[str], dict, dict]:
+    """A partition's ``(files, metric, file_stats)`` after one write into
+    ``new_dir`` (None: the write produced no rows for it) on top of the
+    ``carried`` files it keeps. Empty task outputs are deleted and never
+    committed (a wide cluster writing a small partition leaves one empty
+    file per idle task): they bloat the manifest and schedule pointless scan
+    tasks. One is kept only when the partition would otherwise have no file
+    at all, so reads still infer a schema. Stats are read for the new files
+    only; row counts come from footers. ``extra`` lands in the metric —
+    callers pass the partition's cluster layout there, because dropping it
+    would make the next compaction fall back to plain coalesce and silently
+    de-cluster the partition (compact_partitions re-clusters on exactly the
+    recorded keys)."""
+    new_files = _parquet_files(new_dir) if new_dir else []
+    rows_by_file = _rows_per_file(new_files)
+    nonempty = [f for f in new_files if rows_by_file[f] > 0]
+    kept_new = nonempty or ([] if carried else new_files[:1])
+    for f in new_files:
+        if f not in kept_new:
+            os.remove(f)
+    files = sorted(carried) + kept_new
+    stats = _collect_file_stats(kept_new, stat_cols) if stat_cols else {}
+    metric = {
+        "n_files": len(files),
+        "n_rows": sum(rows_by_file[f] for f in kept_new)
+        + sum(_rows_per_file(carried).values()),
+        "bytes": sum(os.path.getsize(f) for f in files),
+        "write_seconds": round(time.time() - t0, 3),
+        "snapshot_id": snapshot_id,
+        **extra,
+    }
+    return files, metric, stats
+
+
+def _cluster_layout(metric: dict) -> dict:
+    """The cluster keys a partition metric records, to carry through a
+    rewrite of that partition."""
+    return {k: metric[k] for k in ("cluster_by", "cluster_mode") if k in metric}
+
+
 #: Footer key under which Spark's parquet writer stores the row schema.
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
@@ -584,6 +635,57 @@ class SnapshotStore:
             self._manifest_cache.pop(next(iter(self._manifest_cache)))
         return m
 
+    def _head_manifest(self) -> dict:
+        """The HEAD manifest a writer builds on; raises on an empty table."""
+        m = self.manifest()
+        if m is None:
+            raise FileNotFoundError(f"no snapshot in {self.table_dir}")
+        return m
+
+    @staticmethod
+    def _new_manifest(
+        snapshot_id: str,
+        m: dict | None,
+        files: dict,
+        metrics: dict,
+        file_stats: dict,
+        properties: dict,
+        **extra,
+    ) -> dict:
+        """The manifest of snapshot ``snapshot_id`` on top of parent manifest
+        ``m`` (None: the first snapshot) — what every writer commits. It
+        inherits the parent's watermark unless ``extra`` overrides it, and
+        keeps the ``file_stats`` of live files only. ``extra`` adds the
+        optional keys (``delete_files``, ``eq_delete_files``)."""
+        live = {f for pf in files.values() for f in pf}
+        return {
+            "snapshot_id": snapshot_id,
+            "parent": m["snapshot_id"] if m else None,
+            "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "watermark": (m or {}).get("watermark"),
+            "properties": properties,
+            "files": files,
+            "metrics": metrics,
+            "file_stats": {f: s for f, s in file_stats.items() if f in live},
+            **extra,
+        }
+
+    @staticmethod
+    def _bump_partitions(m: dict, parts, snapshot_id: str) -> dict:
+        """``m``'s metrics with ``parts`` marked as written by
+        ``snapshot_id``. Incremental consumers detect change via
+        ``metrics.snapshot_id``; a metadata-only delete changes a
+        partition's LOGICAL rows without rewriting its files, so it bumps
+        the write snapshot (and drops any compaction-carried
+        ``data_snapshot_id`` override) or changed_partitions()/follow()
+        would silently skip the delete."""
+        metrics = dict(m.get("metrics", {}))
+        for p in parts:
+            bumped = {**metrics.get(p, {}), "snapshot_id": snapshot_id}
+            bumped.pop("data_snapshot_id", None)
+            metrics[p] = bumped
+        return metrics
+
     # -- refs: tags + timestamp travel -----------------------------------------
     def _resolve_ref(self, ref: str) -> str:
         """A snapshot argument anywhere in the API may be a snapshot id OR a
@@ -711,22 +813,23 @@ class SnapshotStore:
         deletes the staged manifest and lets the orphan sweep reclaim its
         unique files. The gate a crawl pipeline wants before a bad dump
         becomes visible."""
-        parent = self.head()
-        parent_manifest = self.manifest(parent) if parent else None
-        snapshot_id = time.strftime("%Y%m%d%H%M%S") + "-" + uuid.uuid4().hex[:8]
+        m = self.manifest()
+        snapshot_id = _new_snapshot_id()
         stat_cols = set(stat_cols) if stat_cols else None
-
-        files: dict[str, list[str]] = {}
-        metrics: dict[str, dict] = {}
-        file_stats: dict[str, dict] = {}
-        if parent_manifest:
-            files.update(parent_manifest["files"])
-            metrics.update(parent_manifest.get("metrics", {}))
-            file_stats.update(parent_manifest.get("file_stats", {}))
+        files = dict((m or {}).get("files", {}))
+        metrics = dict((m or {}).get("metrics", {}))
+        file_stats = dict((m or {}).get("file_stats", {}))
 
         cluster_by = list(cluster_by) if cluster_by else None
         if cluster_by and cluster_mode not in ("range", "zorder"):
             raise ValueError(f"cluster_mode={cluster_mode!r}")
+        # Recorded so maintenance rewrites preserve the layout the
+        # file-skipping reads depend on (see compact_partitions).
+        layout = (
+            {"cluster_by": cluster_by, "cluster_mode": cluster_mode}
+            if cluster_by
+            else {}
+        )
 
         def write_one(item):
             part_key, df = item
@@ -747,33 +850,9 @@ class SnapshotStore:
                 if keys == ["__z"]:
                     df = df.drop("__z")
             df.write.mode("overwrite").parquet(part_dir)
-            part_files = _parquet_files(part_dir)
-            # Never commit empty task outputs (a wide cluster writing a
-            # small partition leaves one empty file per idle task): they
-            # bloat the manifest and schedule pointless scan tasks. Keep
-            # one only when the whole partition is empty, so reads still
-            # infer a schema. The dropped files are deleted immediately —
-            # nothing references them yet.
-            rows_by_file = _rows_per_file(part_files)
-            nonempty = [f for f in part_files if rows_by_file[f] > 0]
-            kept = nonempty or part_files[:1]
-            for f in part_files:
-                if f not in kept:
-                    os.remove(f)
-            stats = _collect_file_stats(kept, stat_cols) if stat_cols else {}
-            metric = {
-                "n_files": len(kept),
-                "n_rows": sum(rows_by_file.values()),
-                "bytes": sum(os.path.getsize(f) for f in kept),
-                "write_seconds": round(time.time() - t0, 3),
-                "snapshot_id": snapshot_id,
-            }
-            if cluster_by:
-                # Recorded so maintenance rewrites preserve the layout the
-                # file-skipping reads depend on (see compact_partitions).
-                metric["cluster_by"] = list(cluster_by)
-                metric["cluster_mode"] = cluster_mode
-            return kept, metric, stats
+            return _register_part_files(
+                part_dir, [], stat_cols, snapshot_id, t0, **layout
+            )
 
         items = list(partitions.items())
         if items:
@@ -783,19 +862,14 @@ class SnapshotStore:
                 metrics[part_key] = metric
                 file_stats.update(stats)
 
-        live = {f for pf in files.values() for f in pf}
-        manifest = {
-            "snapshot_id": snapshot_id,
-            "parent": parent,
-            "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "watermark": watermark,
-            "properties": properties or {},
-            "files": files,
-            "metrics": metrics,
-            "file_stats": {f: s for f, s in file_stats.items() if f in live},
-        }
+        properties = dict(properties or {})
         if stage:
-            manifest["properties"]["staged"] = True
+            properties["staged"] = True
+        manifest = self._new_manifest(
+            snapshot_id, m, files, metrics, file_stats, properties,
+            watermark=watermark,
+        )
+        if stage:
             # Same invariants as a direct commit (delete carry, sequence
             # stamps): a staged manifest missing them would resurrect
             # purged rows the moment it publishes.
@@ -861,32 +935,19 @@ class SnapshotStore:
         snapshots still sees the expired partitions until
         :meth:`expire_snapshots` reclaims them. Returns
         (snapshot_id, dropped_keys)."""
-        parent = self.head()
-        m = self.manifest(parent)
-        if m is None:
-            raise FileNotFoundError(f"no snapshot in {self.table_dir}")
+        m = self._head_manifest()
         dropped = sorted(k for k in m["files"] if predicate(k))
         files = {k: v for k, v in m["files"].items() if k not in dropped}
         metrics = {
             k: v for k, v in m.get("metrics", {}).items() if k not in dropped
         }
-        live = {f for pf in files.values() for f in pf}
-        snapshot_id = time.strftime("%Y%m%d%H%M%S") + "-" + uuid.uuid4().hex[:8]
-        manifest = {
-            "snapshot_id": snapshot_id,
-            "parent": parent,
-            "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "watermark": m.get("watermark"),
-            "properties": {**(properties or {}), "expired_partitions": dropped},
-            "files": files,
-            "metrics": metrics,
-            "file_stats": {
-                f: s
-                for f, s in m.get("file_stats", {}).items()
-                if f in live
-            },
-        }
-        self._commit_manifest(manifest)
+        snapshot_id = _new_snapshot_id()
+        self._commit_manifest(
+            self._new_manifest(
+                snapshot_id, m, files, metrics, m.get("file_stats", {}),
+                {**(properties or {}), "expired_partitions": dropped},
+            )
+        )
         return snapshot_id, dropped
 
     def compact_partitions(
@@ -924,10 +985,7 @@ class SnapshotStore:
         files_after, bytes}})`` — snapshot_id is None when nothing needed
         compaction.
         """
-        parent = self.head()
-        m = self.manifest(parent)
-        if m is None:
-            raise FileNotFoundError(f"no snapshot in {self.table_dir}")
+        m = self._head_manifest()
         # Partitions carrying merge-on-read positional deletes or covered
         # by equality tombstones are always rewritten (even when already
         # bin-packed): compaction is the purge step that folds outstanding
@@ -937,18 +995,11 @@ class SnapshotStore:
         eq_entries = m.get("eq_delete_files", [])
         fseq = m.get("file_seq", {})
         parts_with_deletes = {
-            p for p, pf in m["files"].items() if any(f in dmap for f in pf)
+            p
+            for p, pf in m["files"].items()
+            if any(f in dmap for f in pf)
+            or self._live_eq_deletes(eq_entries, {p: pf}, fseq)
         }
-        for p, pf in m["files"].items():
-            if p in parts_with_deletes:
-                continue
-            for e in eq_entries:
-                pfx = e.get("prefix")
-                if pfx is not None and not p.startswith(pfx):
-                    continue
-                if any(fseq.get(f, 0) < e["seq"] for f in pf):
-                    parts_with_deletes.add(p)
-                    break
         todo: dict[str, int] = {}
         for part_key, part_files in m["files"].items():
             if predicate is not None and not predicate(part_key):
@@ -963,7 +1014,7 @@ class SnapshotStore:
         if not todo:
             return None, {}
 
-        snapshot_id = time.strftime("%Y%m%d%H%M%S") + "-" + uuid.uuid4().hex[:8]
+        snapshot_id = _new_snapshot_id()
         files = dict(m["files"])
         metrics = dict(m.get("metrics", {}))
         file_stats = dict(m.get("file_stats", {}))
@@ -1030,79 +1081,133 @@ class SnapshotStore:
         for part_key, (new_files, metric, stats) in zip(
             parts, _write_concurrently(spark, rewrite_one, parts)
         ):
-            old_files = files[part_key]
-            files[part_key] = new_files
-            for f in old_files:
-                file_stats.pop(f, None)
-            file_stats.update(stats)
-            metrics[part_key] = metric
             report[part_key] = {
-                "files_before": len(old_files),
+                "files_before": len(files[part_key]),
                 "files_after": len(new_files),
                 "bytes": metric["bytes"],
             }
+            files[part_key] = new_files
+            file_stats.update(stats)
+            metrics[part_key] = metric
 
-        manifest = {
-            "snapshot_id": snapshot_id,
-            "parent": parent,
-            "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "watermark": m.get("watermark"),
-            "properties": {
-                **(properties or {}),
-                "compacted_partitions": sorted(todo),
-            },
-            "files": files,
-            "metrics": metrics,
-            "file_stats": file_stats,
-        }
-        self._commit_manifest(manifest)
+        self._commit_manifest(
+            self._new_manifest(
+                snapshot_id, m, files, metrics, file_stats,
+                {**(properties or {}), "compacted_partitions": sorted(todo)},
+            )
+        )
         return snapshot_id, report
 
-    def _register_part_files(
+    def _candidates(
+        self, m: dict, prefix: str | None, ranges: dict | None, count_key: str
+    ) -> tuple[list[str], dict]:
+        """A row-level verb's stats-pruned candidate files under ``prefix``
+        and its report, with ``count_key`` and ``touched_files`` at zero."""
+        all_files = self.files_for(m["snapshot_id"], prefix)
+        cand = self.files_for(m["snapshot_id"], prefix, ranges)
+        return cand, {
+            count_key: 0,
+            "touched_files": 0,
+            "candidate_files": len(cand),
+            "pruned_files": len(all_files) - len(cand),
+        }
+
+    @staticmethod
+    def _probe_touched(
+        probe: DataFrame, m: dict
+    ) -> tuple[dict[str, list[str]], int]:
+        """Resolve a probe scan carrying each row's source-file URI in
+        ``__file`` to ``({partition: sorted manifest paths}, matched rows)``,
+        partitions in sorted order. The URIs are absolute ``file:`` paths;
+        manifests may hold relative ones, so the lookup normalizes through
+        ``abspath`` but hands back the manifest spelling. One Spark job."""
+        from urllib.parse import unquote, urlparse
+
+        by_abs = {
+            os.path.abspath(f): (f, p) for p, pf in m["files"].items() for f in pf
+        }
+        touched: dict[str, set] = {}
+        n_rows = 0
+        for r in probe.groupBy("__file").count().collect():
+            path = unquote(urlparse(r["__file"]).path) or r["__file"]
+            hit = by_abs.get(os.path.abspath(path))
+            if hit is None:
+                raise RuntimeError(f"probe saw unmanifested file {path}")
+            touched.setdefault(hit[1], set()).add(hit[0])
+            n_rows += r["count"]
+        return {p: sorted(fs) for p, fs in sorted(touched.items())}, n_rows
+
+    def _rewrite_touched(
         self,
-        files: dict,
-        metrics: dict,
-        file_stats: dict,
+        spark: SparkSession,
+        m: dict,
         snapshot_id: str,
-        part_key: str,
-        kept_files: list,
-        new_dir: str,
-        stat_cols,
-        t0: float,
-        extra: dict,
-    ) -> None:
-        """Fold a just-written directory of data files into an in-progress
-        manifest: drop empty task outputs (one kept only when the partition
-        would otherwise have no file at all, so reads still infer a schema),
-        append to the carried-over files, recompute footer stats for the new
-        files and exact metadata row counts for the partition."""
-        new_files = _parquet_files(new_dir)
-        rows_by_file = _rows_per_file(new_files)
-        nonempty = [f for f in new_files if rows_by_file[f] > 0]
-        kept_new = nonempty or ([] if kept_files else new_files[:1])
-        for f in new_files:
-            if f not in kept_new:
-                os.remove(f)
-        files[part_key] = sorted(kept_files) + kept_new
-        if stat_cols:
-            file_stats.update(_collect_file_stats(kept_new, stat_cols))
-        # Carry the recorded cluster layout through DML rewrites: dropping
-        # it would make the next compaction fall back to plain coalesce and
-        # silently de-cluster the partition (compact_partitions re-clusters
-        # on exactly these recorded keys).
-        prev = metrics.get(part_key, {})
-        layout = {
-            k: prev[k] for k in ("cluster_by", "cluster_mode") if k in prev
+        touched: dict[str, list[str]],
+        row_fn: Callable[[DataFrame], DataFrame],
+        metric_key: str,
+    ) -> tuple[dict, dict, dict, list[str]]:
+        """The copy-on-write step every row-level verb shares: ``m``'s
+        ``(files, metrics, file_stats)`` with each touched file replaced by
+        ``row_fn`` applied to a live scan of the partition's touched files,
+        plus the partitions dropped because no row survived anywhere in them.
+
+        Live (not raw) scans keep earlier merge-on-read deletes deleted: a
+        raw rewrite would resurrect those rows because the new file sheds
+        the parent's positional-delete entries. Every partition's
+        replacement rows are written in ONE Spark job via dynamic partition
+        directories, so on a cluster the rewrites parallelize across
+        executors instead of paying one sequential job per partition.
+        Untouched files are carried by reference. A partition whose touched
+        files lost every row keeps its untouched files, or is dropped when
+        it has none (the expire_partitions shape, not a husk). Rewritten
+        files get stats on the columns the replaced files carried stats
+        for, and each rewritten partition keeps its cluster layout; its
+        metric records ``{metric_key: number of files replaced}``."""
+        from urllib.parse import unquote
+
+        from pyspark.sql import functions as F
+
+        files = dict(m["files"])
+        metrics = dict(m.get("metrics", {}))
+        file_stats = dict(m.get("file_stats", {}))
+        if not touched:
+            return files, metrics, file_stats, []
+        rewritten = [
+            row_fn(self._scan_live(spark, paths, m)).withColumn(
+                "__cowpart", F.lit(part_key)
+            )
+            for part_key, paths in touched.items()
+        ]
+        cow_dir = os.path.join(self.table_dir, "data", snapshot_id, "__cow__")
+        t0 = time.time()
+        n_out = max(1, sum(len(paths) for paths in touched.values()))
+        with _stats_friendly_writes(spark):
+            functools.reduce(DataFrame.unionByName, rewritten).coalesce(
+                n_out
+            ).write.partitionBy("__cowpart").mode("overwrite").parquet(cow_dir)
+        sub_by_part = {
+            unquote(d.split("=", 1)[1]): os.path.join(cow_dir, d)
+            for d in os.listdir(cow_dir)
+            if d.startswith("__cowpart=")
         }
-        metrics[part_key] = {
-            "n_files": len(files[part_key]),
-            "n_rows": sum(_rows_per_file(files[part_key]).values()),
-            "bytes": sum(os.path.getsize(f) for f in files[part_key]),
-            "write_seconds": round(time.time() - t0, 3),
-            "snapshot_id": snapshot_id,
-            **layout,
-            **extra,
-        }
+        dropped = []
+        for part_key, paths in touched.items():
+            replaced = frozenset(paths)
+            carried = [f for f in files[part_key] if f not in replaced]
+            sub = sub_by_part.get(part_key)
+            if sub is None and not carried:
+                files.pop(part_key)
+                metrics.pop(part_key, None)
+                dropped.append(part_key)
+                continue
+            stat_cols = {c for f in paths for c in file_stats.get(f, {})}
+            files[part_key], metrics[part_key], stats = _register_part_files(
+                sub, carried, stat_cols, snapshot_id, t0,
+                **_cluster_layout(metrics.get(part_key, {})),
+                **{metric_key: len(paths)},
+            )
+            file_stats.update(stats)
+        return files, metrics, file_stats, dropped
 
     def merge_into(
         self,
@@ -1137,7 +1242,8 @@ class SnapshotStore:
         3. *Rewrite*: each touched file set is re-read once, left-joined
            against the broadcast source with a match marker (exact
            NULL-update semantics — no ``coalesce`` trap), and written as
-           new files; untouched files are carried over by reference.
+           new files in the one write of :meth:`_rewrite_touched`;
+           untouched files are carried over by reference.
         4. *Append*: unmatched source rows land as NEW files appended to
            ``insert_partition``'s file list — O(increment), no rewrite.
 
@@ -1158,8 +1264,6 @@ class SnapshotStore:
         Returns ``(snapshot_id | None, report)`` — ``None`` when the merge
         was a provable no-op (empty source, or no matches and nothing to
         insert)."""
-        from urllib.parse import unquote, urlparse
-
         from pyspark.sql import functions as F
 
         key_cols = list(key_cols)
@@ -1167,10 +1271,7 @@ class SnapshotStore:
             raise ValueError(f"when_not_matched={when_not_matched!r}")
         if when_not_matched == "insert" and insert_partition is None:
             raise ValueError("when_not_matched='insert' needs insert_partition")
-        parent = self.head()
-        m = self.manifest(parent)
-        if m is None:
-            raise FileNotFoundError(f"no snapshot in {self.table_dir}")
+        m = self._head_manifest()
 
         # One pass over the (small) source: per-key-column bounds for stats
         # pruning + the MERGE cardinality check, a single tiny agg job.
@@ -1195,236 +1296,144 @@ class SnapshotStore:
             if lo is not None and hi is not None:
                 ranges[c] = (lo, hi)
 
-        all_files = self.files_for(parent, prefix)
-        cand = self.files_for(parent, prefix, ranges or None)
-        # input_file_name() yields file: URIs with absolute paths; manifests
-        # may hold relative ones — normalize through abspath for the lookup
-        # but keep manifest spelling everywhere else.
-        abs_to_manifest = {
-            os.path.abspath(f): (f, p)
-            for p, pf in m["files"].items()
-            for f in pf
-        }
-
-        # Probe scan: key columns only, semi-joined against the broadcast
-        # source keys; yields both the touched files and the matched keys.
-        touched_by_part: dict[str, set] = {}
-        matched_rows = 0
+        cand, report = self._candidates(m, prefix, ranges or None, "matched_rows")
+        report["inserted_rows"] = 0
+        touched: dict[str, list[str]] = {}
         hits = None
-        if cand:
-            probe = self._scan_live(spark, cand, m, file_col="__file").select(
-                "__file", *key_cols
-            )
-            hits = probe.join(F.broadcast(src_keys), key_cols, "leftsemi").persist()
-            for r in hits.groupBy("__file").count().collect():
-                path = unquote(urlparse(r["__file"]).path) or r["__file"]
-                hit = abs_to_manifest.get(os.path.abspath(path))
-                if hit is None:
-                    raise RuntimeError(f"probe saw unmanifested file {path}")
-                manifest_path, part = hit
-                touched_by_part.setdefault(part, set()).add(manifest_path)
-                matched_rows += r["count"]
-
-        # Split the source: matched keys update in place, the rest insert.
-        if hits is not None and matched_rows:
-            matched_keys = hits.select(*key_cols).distinct()
-            unmatched = source.join(F.broadcast(matched_keys), key_cols, "left_anti")
-        else:
-            unmatched = source
-        n_insert = 0
-        if when_not_matched == "error":
-            stray = unmatched.count()
-            if stray:
-                if hits is not None:
-                    hits.unpersist()
-                raise ValueError(
-                    f"{stray} source rows match no target row "
-                    "(when_not_matched='error')"
+        try:
+            if cand:
+                # Probe scan: key columns only, semi-joined against the
+                # broadcast source keys; persisted once, it yields both the
+                # touched files and the matched keys.
+                hits = (
+                    self._scan_live(spark, cand, m, file_col="__file")
+                    .select("__file", *key_cols)
+                    .join(F.broadcast(src_keys), key_cols, "leftsemi")
+                    .persist()
                 )
-        if not touched_by_part and when_not_matched != "insert":
-            if hits is not None:
-                hits.unpersist()
-            return None, {
-                "matched_rows": 0,
-                "inserted_rows": 0,
-                "touched_files": 0,
-                "candidate_files": len(cand),
-                "pruned_files": len(all_files) - len(cand),
-            }
-
-        snapshot_id = time.strftime("%Y%m%d%H%M%S") + "-" + uuid.uuid4().hex[:8]
-        files = dict(m["files"])
-        metrics = dict(m.get("metrics", {}))
-        file_stats = dict(m.get("file_stats", {}))
-        rewritten: dict[str, dict] = {}
-
-        def _finish_part(part_key, kept_files, new_dir, stat_cols, t0, extra):
-            self._register_part_files(
-                files,
-                metrics,
-                file_stats,
-                snapshot_id,
-                part_key,
-                kept_files,
-                new_dir,
-                stat_cols,
-                t0,
-                extra,
-            )
-
-        # Build every partition's replacement rows, then write them all in
-        # ONE Spark job via dynamic partition directories — on a cluster the
-        # rewrites parallelize across executors instead of running as one
-        # sequential job per partition (driver-side job latency would
-        # otherwise dominate small merges).
-        union_df = None
-        plan: list[tuple[str, list[str]]] = []
-        for part_key, touched in sorted(touched_by_part.items()):
-            touched = sorted(touched)
-            old = self._scan_live(spark, touched, m)
-            data_cols = [c for c in old.columns if c not in key_cols]
-            missing = set(old.columns) - set(source.columns)
-            if missing:
-                raise ValueError(
-                    f"source lacks target columns {sorted(missing)} "
-                    "(MERGE is UPDATE SET * — schemas must align)"
+                touched, report["matched_rows"] = self._probe_touched(hits, m)
+            # Split the source: matched keys update in place, the rest insert.
+            if touched:
+                matched_keys = hits.select(*key_cols).distinct()
+                unmatched = source.join(
+                    F.broadcast(matched_keys), key_cols, "left_anti"
                 )
-            src_marked = F.broadcast(
-                source.select(
-                    *key_cols,
-                    *[F.col(c).alias(f"__src_{c}") for c in data_cols],
-                    F.lit(True).alias("__matched"),
-                )
-            )
-            # Exact NULL-update semantics: a marker column, not coalesce —
-            # a source row that sets a value to NULL must win.
-            new_data = (
-                old.join(src_marked, key_cols, "left")
-                .select(
-                    *key_cols,
-                    *[
-                        F.when(F.col("__matched"), F.col(f"__src_{c}"))
-                        .otherwise(F.col(c))
-                        .alias(c)
-                        for c in data_cols
-                    ],
-                )
-                .select(*old.columns)
-                .withColumn("__cowpart", F.lit(part_key))
-            )
-            union_df = (
-                new_data if union_df is None else union_df.unionByName(new_data)
-            )
-            plan.append((part_key, touched))
-        if union_df is not None:
-            cow_dir = os.path.join(self.table_dir, "data", snapshot_id, "__cow__")
-            t0 = time.time()
-            n_out = max(1, sum(len(t) for _, t in plan))
-            with _stats_friendly_writes(spark):
-                union_df.coalesce(n_out).write.partitionBy(
-                    "__cowpart"
-                ).mode("overwrite").parquet(cow_dir)
-            sub_by_part = {
-                unquote(d.split("=", 1)[1]): os.path.join(cow_dir, d)
-                for d in os.listdir(cow_dir)
-                if d.startswith("__cowpart=")
-            }
-            for part_key, touched in plan:
-                kept_files = [f for f in files[part_key] if f not in set(touched)]
-                stat_cols = {c for f in touched for c in file_stats.get(f, {})}
-                for f in touched:
-                    file_stats.pop(f, None)
-                _finish_part(
-                    part_key,
-                    kept_files,
-                    sub_by_part[part_key],
-                    stat_cols,
-                    t0,
-                    {"merged_files": len(touched)},
-                )
-                rewritten[part_key] = {"files_rewritten": len(touched)}
+            else:
+                unmatched = source
+            if when_not_matched == "error":
+                stray = unmatched.count()
+                if stray:
+                    raise ValueError(
+                        f"{stray} source rows match no target row "
+                        "(when_not_matched='error')"
+                    )
+            if not touched and when_not_matched != "insert":
+                return None, report
 
-        if when_not_matched == "insert":
-            existing = files.get(insert_partition, [])
-            # Align inserts to the table's schema: the insert partition's
-            # own files if it exists, else any file under the MERGE prefix
-            # (one table, one schema — source-only columns like a CDC
-            # version/op column must not leak into the store), else (truly
-            # empty table) the source verbatim.
-            schema_file = existing[0] if existing else next(
-                (
-                    pf[0]
-                    for part, pf in sorted(files.items())
-                    if pf and (prefix is None or part.startswith(prefix))
-                ),
-                None,
-            )
-            if schema_file is not None:
-                tgt_cols = self._parquet(spark, [schema_file]).columns
-                missing = set(tgt_cols) - set(source.columns)
+            def merged_rows(old: DataFrame) -> DataFrame:
+                missing = set(old.columns) - set(source.columns)
                 if missing:
                     raise ValueError(
-                        f"source lacks {sorted(missing)} of insert partition "
-                        f"{insert_partition!r}"
+                        f"source lacks target columns {sorted(missing)} "
+                        "(MERGE is UPDATE SET * — schemas must align)"
                     )
-                ins = unmatched.select(*tgt_cols)
-            else:
-                ins = unmatched
-            # A dedicated subdir: when insert_partition was ALSO rewritten
-            # above, its new files already live in data/<sid>/<part>/ and an
-            # overwrite-mode write there would wipe them.
-            part_dir = os.path.join(
-                self.table_dir, "data", snapshot_id, insert_partition, "__append__"
-            )
-            t0 = time.time()
-            stat_cols = {c for f in existing for c in file_stats.get(f, {})}
-            with _stats_friendly_writes(spark):
-                ins.write.mode("overwrite").parquet(part_dir)
-            before = metrics.get(insert_partition, {}).get("n_rows", 0)
-            _finish_part(
-                insert_partition, list(existing), part_dir, stat_cols, t0, {}
-            )
-            n_insert = metrics[insert_partition]["n_rows"] - before
+                data_cols = [c for c in old.columns if c not in key_cols]
+                src_marked = F.broadcast(
+                    source.select(
+                        *key_cols,
+                        *[F.col(c).alias(f"__src_{c}") for c in data_cols],
+                        F.lit(True).alias("__matched"),
+                    )
+                )
+                # Exact NULL-update semantics: a marker column, not
+                # coalesce — a source row that sets a value to NULL must win.
+                return (
+                    old.join(src_marked, key_cols, "left")
+                    .select(
+                        *key_cols,
+                        *[
+                            F.when(F.col("__matched"), F.col(f"__src_{c}"))
+                            .otherwise(F.col(c))
+                            .alias(c)
+                            for c in data_cols
+                        ],
+                    )
+                    .select(*old.columns)
+                )
 
-        if hits is not None:
-            hits.unpersist()
-        if not touched_by_part and not n_insert:
+            snapshot_id = _new_snapshot_id()
+            files, metrics, file_stats, _ = self._rewrite_touched(
+                spark, m, snapshot_id, touched, merged_rows, "merged_files"
+            )
+            if when_not_matched == "insert":
+                existing = files.get(insert_partition, [])
+                # Align inserts to the table's schema: the insert partition's
+                # own files if it exists, else any file under the MERGE
+                # prefix (one table, one schema — source-only columns like a
+                # CDC version/op column must not leak into the store), else
+                # (truly empty table) the source verbatim.
+                schema_file = existing[0] if existing else next(
+                    (
+                        pf[0]
+                        for part, pf in sorted(files.items())
+                        if pf and (prefix is None or part.startswith(prefix))
+                    ),
+                    None,
+                )
+                if schema_file is not None:
+                    tgt_cols = self._parquet(spark, [schema_file]).columns
+                    missing = set(tgt_cols) - set(source.columns)
+                    if missing:
+                        raise ValueError(
+                            f"source lacks {sorted(missing)} of insert "
+                            f"partition {insert_partition!r}"
+                        )
+                    unmatched = unmatched.select(*tgt_cols)
+                # A subdir of its own: an overwrite-mode write must never
+                # land on another output of this snapshot.
+                part_dir = os.path.join(
+                    self.table_dir, "data", snapshot_id, insert_partition,
+                    "__append__",
+                )
+                t0 = time.time()
+                stat_cols = {c for f in existing for c in file_stats.get(f, {})}
+                with _stats_friendly_writes(spark):
+                    unmatched.write.mode("overwrite").parquet(part_dir)
+                before = metrics.get(insert_partition, {}).get("n_rows", 0)
+                files[insert_partition], metrics[insert_partition], stats = (
+                    _register_part_files(
+                        part_dir, existing, stat_cols, snapshot_id, t0,
+                        **_cluster_layout(metrics.get(insert_partition, {})),
+                    )
+                )
+                file_stats.update(stats)
+                report["inserted_rows"] = (
+                    metrics[insert_partition]["n_rows"] - before
+                )
+        finally:
+            if hits is not None:
+                hits.unpersist()
+        if not touched and not report["inserted_rows"]:
             # Inserts resolved to zero rows and nothing matched: drop the
             # would-be snapshot rather than committing a no-op.
-            return None, {
-                "matched_rows": 0,
-                "inserted_rows": 0,
-                "touched_files": 0,
-                "candidate_files": len(cand),
-                "pruned_files": len(all_files) - len(cand),
-            }
-        live = {f for pf in files.values() for f in pf}
-        manifest = {
-            "snapshot_id": snapshot_id,
-            "parent": parent,
-            "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "watermark": m.get("watermark"),
-            "properties": {
-                **(properties or {}),
-                "merge_keys": key_cols,
-                "merged_partitions": sorted(rewritten),
-                "merge_inserted_into": insert_partition
-                if (when_not_matched == "insert" and n_insert)
-                else None,
-            },
-            "files": files,
-            "metrics": metrics,
-            "file_stats": {f: s for f, s in file_stats.items() if f in live},
+            return None, report
+        report["touched_files"] = sum(len(p) for p in touched.values())
+        report["rewritten_partitions"] = {
+            p: {"files_rewritten": len(paths)} for p, paths in touched.items()
         }
-        self._commit_manifest(manifest)
-        report = {
-            "matched_rows": matched_rows,
-            "inserted_rows": n_insert,
-            "candidate_files": len(cand),
-            "pruned_files": len(all_files) - len(cand),
-            "touched_files": sum(len(v) for v in touched_by_part.values()),
-            "rewritten_partitions": rewritten,
-        }
+        self._commit_manifest(
+            self._new_manifest(
+                snapshot_id, m, files, metrics, file_stats,
+                {
+                    **(properties or {}),
+                    "merge_keys": key_cols,
+                    "merged_partitions": sorted(touched),
+                    "merge_inserted_into": (
+                        insert_partition if report["inserted_rows"] else None
+                    ),
+                },
+            )
+        )
         return snapshot_id, report
 
     def delete_where(
@@ -1459,163 +1468,56 @@ class SnapshotStore:
         single-url purge over a url-range-clustered table. One probe scan
         of the candidates (predicate columns only, via the filter's own
         column pruning) counts matching rows per file; only files with a
-        hit are rewritten (``.where(~condition)``), everything else is
-        carried by reference. A partition whose every row dies keeps one
-        empty file so reads still infer a schema (the retention verb for
-        dropping WHOLE partitions is :meth:`expire_partitions`, a pure
-        metadata operation — prefer it when the predicate is the partition
-        key). Commits ONE snapshot under the optimistic-concurrency check;
+        hit are rewritten (``.where(~condition)``, the shared copy-on-write
+        step :meth:`_rewrite_touched`), everything else is carried by
+        reference. A partition whose every row dies is dropped from the
+        manifest (the retention verb for dropping WHOLE partitions is
+        :meth:`expire_partitions`, a pure metadata operation — prefer it
+        when the predicate is the partition key). Commits ONE snapshot under the optimistic-concurrency check;
         time travel to the pre-delete snapshot still sees the deleted rows
         until :meth:`expire_snapshots` reclaims them (document retention
         obligations accordingly). Returns ``(snapshot_id | None, report)``
         — ``None`` when no row matched."""
-        from urllib.parse import unquote, urlparse
-
         from pyspark.sql import functions as F
 
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        parent = self.head()
-        m = self.manifest(parent)
-        if m is None:
-            raise FileNotFoundError(f"no snapshot in {self.table_dir}")
-        all_files = self.files_for(parent, prefix)
-        cand = self.files_for(parent, prefix, ranges)
-        abs_to_manifest = {
-            os.path.abspath(f): (f, p)
-            for p, pf in m["files"].items()
-            for f in pf
-        }
-        report = {
-            "deleted_rows": 0,
-            "touched_files": 0,
-            "candidate_files": len(cand),
-            "pruned_files": len(all_files) - len(cand),
-        }
+        m = self._head_manifest()
+        cand, report = self._candidates(m, prefix, ranges, "deleted_rows")
         if not cand:
             return None, report
         if mode == "merge-on-read":
             return self._delete_merge_on_read(
-                spark, cond, condition, parent, m, cand, abs_to_manifest,
-                report, properties,
+                spark, cond, condition, m, cand, report, properties
             )
         if mode != "copy-on-write":
             raise ValueError(
                 f"mode must be 'copy-on-write' or 'merge-on-read', got {mode!r}"
             )
-
-        touched_by_part: dict[str, set] = {}
-        for r in (
-            self._scan_live(spark, cand, m, file_col="__file")
-            .where(cond)
-            .groupBy("__file")
-            .count()
-            .collect()
-        ):
-            path = unquote(urlparse(r["__file"]).path) or r["__file"]
-            hit = abs_to_manifest.get(os.path.abspath(path))
-            if hit is None:
-                raise RuntimeError(f"probe saw unmanifested file {path}")
-            manifest_path, part = hit
-            touched_by_part.setdefault(part, set()).add(manifest_path)
-            report["deleted_rows"] += r["count"]
-            report["touched_files"] += 1
-        if not touched_by_part:
+        touched, report["deleted_rows"] = self._probe_touched(
+            self._scan_live(spark, cand, m, file_col="__file").where(cond), m
+        )
+        report["touched_files"] = sum(len(p) for p in touched.values())
+        if not touched:
             return None, report
-
-        snapshot_id = time.strftime("%Y%m%d%H%M%S") + "-" + uuid.uuid4().hex[:8]
-        files = dict(m["files"])
-        metrics = dict(m.get("metrics", {}))
-        file_stats = dict(m.get("file_stats", {}))
-        # One Spark job rewrites every touched partition's survivors via
-        # dynamic partition directories (same shape as merge_into): the
-        # rewrites parallelize across executors instead of paying one
-        # sequential job per partition.
-        union_df = None
-        plan: list[tuple[str, list[str]]] = []
-        for part_key, touched in sorted(touched_by_part.items()):
-            touched = sorted(touched)
-            # NULL predicate rows are NOT deleted (SQL DELETE semantics), so
-            # they must survive: plain ~cond would drop them too. Scanning
-            # live (not raw) keeps earlier merge-on-read deletes deleted —
-            # a raw rewrite would resurrect those rows because the new file
-            # sheds the parent's positional-delete entries.
-            survivors = (
-                self._scan_live(spark, touched, m)
-                .where(~F.coalesce(cond, F.lit(False)))
-                .withColumn("__cowpart", F.lit(part_key))
+        snapshot_id = _new_snapshot_id()
+        # NULL predicate rows are NOT deleted (SQL DELETE semantics), so
+        # they must survive: plain ~cond would drop them too.
+        keep = ~F.coalesce(cond, F.lit(False))
+        files, metrics, file_stats, dropped = self._rewrite_touched(
+            spark, m, snapshot_id, touched, lambda live: live.where(keep),
+            "deleted_from_files",
+        )
+        self._commit_manifest(
+            self._new_manifest(
+                snapshot_id, m, files, metrics, file_stats,
+                {
+                    **(properties or {}),
+                    "delete_condition": str(condition),
+                    "deleted_partitions": sorted(touched),
+                    "dropped_partitions": dropped,
+                },
             )
-            union_df = (
-                survivors if union_df is None else union_df.unionByName(survivors)
-            )
-            plan.append((part_key, touched))
-        cow_dir = os.path.join(self.table_dir, "data", snapshot_id, "__cow__")
-        t0 = time.time()
-        n_out = max(1, sum(len(t) for _, t in plan))
-        with _stats_friendly_writes(spark):
-            union_df.coalesce(n_out).write.partitionBy("__cowpart").mode(
-                "overwrite"
-            ).parquet(cow_dir)
-        sub_by_part = {
-            unquote(d.split("=", 1)[1]): os.path.join(cow_dir, d)
-            for d in os.listdir(cow_dir)
-            if d.startswith("__cowpart=")
-        }
-        dropped_parts = []
-        for part_key, touched in plan:
-            kept_files = [f for f in files[part_key] if f not in set(touched)]
-            stat_cols = {c for f in touched for c in file_stats.get(f, {})}
-            for f in touched:
-                file_stats.pop(f, None)
-            sub = sub_by_part.get(part_key)
-            if sub is None and not kept_files:
-                # Every row of the partition died: drop it from the manifest
-                # (the expire_partitions shape) instead of keeping a husk.
-                files.pop(part_key)
-                metrics.pop(part_key, None)
-                dropped_parts.append(part_key)
-                continue
-            if sub is None:
-                # No survivors from the touched files; the partition keeps
-                # only its untouched files.
-                files[part_key] = sorted(kept_files)
-                metrics[part_key] = {
-                    "n_files": len(kept_files),
-                    "n_rows": sum(_rows_per_file(kept_files).values()),
-                    "bytes": sum(os.path.getsize(f) for f in kept_files),
-                    "write_seconds": round(time.time() - t0, 3),
-                    "snapshot_id": snapshot_id,
-                    "deleted_from_files": len(touched),
-                }
-                continue
-            self._register_part_files(
-                files,
-                metrics,
-                file_stats,
-                snapshot_id,
-                part_key,
-                kept_files,
-                sub,
-                stat_cols,
-                t0,
-                {"deleted_from_files": len(touched)},
-            )
-        live = {f for pf in files.values() for f in pf}
-        manifest = {
-            "snapshot_id": snapshot_id,
-            "parent": parent,
-            "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "watermark": m.get("watermark"),
-            "properties": {
-                **(properties or {}),
-                "delete_condition": str(condition),
-                "deleted_partitions": sorted(touched_by_part),
-                "dropped_partitions": dropped_parts,
-            },
-            "files": files,
-            "metrics": metrics,
-            "file_stats": {f: s for f, s in file_stats.items() if f in live},
-        }
-        self._commit_manifest(manifest)
+        )
         return snapshot_id, report
 
     def update_where(
@@ -1638,81 +1540,42 @@ class SnapshotStore:
         type so the table schema never drifts, and applied only where
         ``condition`` is TRUE (NULL-predicate rows keep their values).
 
-        Scale shape is :meth:`delete_where`'s: ``ranges`` prunes candidate
-        files from the manifest stats, one live probe scan finds the files
-        with a hit, only those are rewritten (ONE dynamic-partition Spark
-        job), everything else is carried by reference and keeps its
+        Scale shape is :meth:`_rewrite_touched`'s, shared with
+        :meth:`delete_where` and :meth:`merge_into`: ``ranges`` prunes
+        candidate files from the manifest stats, one live probe scan finds
+        the files with a hit, only those are rewritten (ONE
+        dynamic-partition Spark job), everything else is carried by reference and keeps its
         positional-delete entries. Updating a cluster-key column leaves the
         rewritten files' NEW stats correct but no longer key-disjoint with
         their neighbors — re-cluster via :meth:`compact_partitions` if
         range pruning on that key matters. Returns
         ``(snapshot_id | None, report)`` — ``None`` when no row matched."""
-        from urllib.parse import unquote, urlparse
-
         from pyspark.sql import functions as F
 
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        parent = self.head()
-        m = self.manifest(parent)
-        if m is None:
-            raise FileNotFoundError(f"no snapshot in {self.table_dir}")
+        m = self._head_manifest()
         if not set:
             raise ValueError("update_where needs at least one SET assignment")
         assignments = {
             c: (F.expr(v) if isinstance(v, str) else v) for c, v in set.items()
         }
-        all_files = self.files_for(parent, prefix)
-        cand = self.files_for(parent, prefix, ranges)
-        abs_to_manifest = {
-            os.path.abspath(f): (f, p)
-            for p, pf in m["files"].items()
-            for f in pf
-        }
-        report = {
-            "updated_rows": 0,
-            "touched_files": 0,
-            "candidate_files": len(cand),
-            "pruned_files": len(all_files) - len(cand),
-        }
+        cand, report = self._candidates(m, prefix, ranges, "updated_rows")
         if not cand:
             return None, report
-        touched_by_part: dict[str, set] = {}
-        for r in (
-            self._scan_live(spark, cand, m, file_col="__file")
-            .where(cond)
-            .groupBy("__file")
-            .count()
-            .collect()
-        ):
-            path = unquote(urlparse(r["__file"]).path) or r["__file"]
-            hit = abs_to_manifest.get(os.path.abspath(path))
-            if hit is None:
-                raise RuntimeError(f"probe saw unmanifested file {path}")
-            manifest_path, part = hit
-            # {literal} instead of set(): the SET-clause parameter shadows
-            # the builtin in this scope
-            touched_by_part.setdefault(part, {manifest_path}).add(manifest_path)
-            report["updated_rows"] += r["count"]
-            report["touched_files"] += 1
-        if not touched_by_part:
+        touched, report["updated_rows"] = self._probe_touched(
+            self._scan_live(spark, cand, m, file_col="__file").where(cond), m
+        )
+        report["touched_files"] = sum(len(p) for p in touched.values())
+        if not touched:
             return None, report
-
-        snapshot_id = time.strftime("%Y%m%d%H%M%S") + "-" + uuid.uuid4().hex[:8]
-        files = dict(m["files"])
-        metrics = dict(m.get("metrics", {}))
-        file_stats = dict(m.get("file_stats", {}))
-        union_df = None
-        plan: list[tuple[str, list[str]]] = []
         matched = F.coalesce(cond, F.lit(False))
-        for part_key, touched in sorted(touched_by_part.items()):
-            touched = sorted(touched)
-            cur = self._scan_live(spark, touched, m)
+
+        def updated_rows(cur: DataFrame) -> DataFrame:
             types = dict(cur.dtypes)
-            # NB: the parameter named ``set`` shadows the builtin in here
             unknown = [c for c in assignments if c not in types]
             if unknown:
                 raise ValueError(f"SET references unknown columns {sorted(unknown)}")
-            rewritten = cur.select(
+            return cur.select(
                 *[
                     (
                         F.when(matched, assignments[c].cast(types[c]))
@@ -1723,58 +1586,23 @@ class SnapshotStore:
                     )
                     for c in cur.columns
                 ]
-            ).withColumn("__cowpart", F.lit(part_key))
-            union_df = (
-                rewritten if union_df is None else union_df.unionByName(rewritten)
             )
-            plan.append((part_key, touched))
-        cow_dir = os.path.join(self.table_dir, "data", snapshot_id, "__cow__")
-        t0 = time.time()
-        n_out = max(1, sum(len(t) for _, t in plan))
-        with _stats_friendly_writes(spark):
-            union_df.coalesce(n_out).write.partitionBy("__cowpart").mode(
-                "overwrite"
-            ).parquet(cow_dir)
-        sub_by_part = {
-            unquote(d.split("=", 1)[1]): os.path.join(cow_dir, d)
-            for d in os.listdir(cow_dir)
-            if d.startswith("__cowpart=")
-        }
-        for part_key, touched in plan:
-            touched_set = frozenset(touched)
-            kept_files = [f for f in files[part_key] if f not in touched_set]
-            stat_cols = {c for f in touched for c in file_stats.get(f, {})}
-            for f in touched:
-                file_stats.pop(f, None)
-            self._register_part_files(
-                files,
-                metrics,
-                file_stats,
-                snapshot_id,
-                part_key,
-                kept_files,
-                sub_by_part[part_key],
-                stat_cols,
-                t0,
-                {"updated_from_files": len(touched)},
+
+        snapshot_id = _new_snapshot_id()
+        files, metrics, file_stats, _ = self._rewrite_touched(
+            spark, m, snapshot_id, touched, updated_rows, "updated_from_files"
+        )
+        self._commit_manifest(
+            self._new_manifest(
+                snapshot_id, m, files, metrics, file_stats,
+                {
+                    **(properties or {}),
+                    "update_condition": str(condition),
+                    "update_set": {c: str(v) for c, v in set.items()},
+                    "updated_partitions": sorted(touched),
+                },
             )
-        live = {f for pf in files.values() for f in pf}
-        manifest = {
-            "snapshot_id": snapshot_id,
-            "parent": parent,
-            "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "watermark": m.get("watermark"),
-            "properties": {
-                **(properties or {}),
-                "update_condition": str(condition),
-                "update_set": {c: str(v) for c, v in set.items()},
-                "updated_partitions": sorted(touched_by_part),
-            },
-            "files": files,
-            "metrics": metrics,
-            "file_stats": {f: s for f, s in file_stats.items() if f in live},
-        }
-        self._commit_manifest(manifest)
+        )
         return snapshot_id, report
 
     def rollback(self, snapshot_id: str, purge_abandoned: bool = False) -> list[str]:
@@ -1912,10 +1740,8 @@ class SnapshotStore:
         spark: SparkSession,
         cond,
         condition,
-        parent: str | None,
         m: dict,
         cand: list,
-        abs_to_manifest: dict,
         report: dict,
         properties: dict | None,
     ) -> tuple[str | None, dict]:
@@ -1936,11 +1762,9 @@ class SnapshotStore:
         pre-delete values (the Iceberg v2 convention): stats-based file
         skipping only ever skips files that cannot match, and
         :meth:`compact_partitions` restores exact counts when it purges."""
-        from urllib.parse import unquote, urlparse
-
         from pyspark.sql import functions as F
 
-        snapshot_id = time.strftime("%Y%m%d%H%M%S") + "-" + uuid.uuid4().hex[:8]
+        snapshot_id = _new_snapshot_id()
         hits = (
             self._scan_live(spark, cand, m, file_col="__file", pos_col="__pos")
             .where(cond)
@@ -1953,58 +1777,38 @@ class SnapshotStore:
         t0 = time.time()
         hits.coalesce(1).write.mode("overwrite").parquet(del_dir)
         delete_paths = _parquet_files(del_dir)
-        per_file = (
-            self._parquet(spark, delete_paths).groupBy("file").count().collect()
-            if delete_paths
-            else []
-        )
-        if not per_file:
+        touched = {}
+        if delete_paths:
+            touched, report["deleted_rows"] = self._probe_touched(
+                self._parquet(spark, delete_paths).select(
+                    F.col("file").alias("__file")
+                ),
+                m,
+            )
+        if not touched:
             shutil.rmtree(os.path.dirname(del_dir), ignore_errors=True)
             return None, report
-        new_entries: dict[str, list[str]] = {}
-        touched_parts: set[str] = set()
-        for r in per_file:
-            path = unquote(urlparse(r["file"]).path) or r["file"]
-            hit = abs_to_manifest.get(os.path.abspath(path))
-            if hit is None:
-                raise RuntimeError(f"probe saw unmanifested file {path}")
-            new_entries[hit[0]] = delete_paths
-            touched_parts.add(hit[1])
-            report["deleted_rows"] += r["count"]
-            report["touched_files"] += 1
+        report["touched_files"] = sum(len(p) for p in touched.values())
         dmap = self._live_delete_files(m, m["files"])
-        for f, paths in new_entries.items():
-            dmap[f] = sorted(set(dmap.get(f, [])) | set(paths))
+        for f in (f for paths in touched.values() for f in paths):
+            dmap[f] = sorted(set(dmap.get(f, [])) | set(delete_paths))
         report["delete_files_written"] = len(delete_paths)
         report["delete_bytes"] = sum(os.path.getsize(p) for p in delete_paths)
         report["write_seconds"] = round(time.time() - t0, 3)
-        # Incremental consumers detect change via metrics.snapshot_id; a
-        # MoR delete changes a partition's LOGICAL rows without rewriting
-        # its files, so bump the touched partitions' write snapshot (and
-        # drop any compaction-carried data_snapshot_id override) or
-        # changed_partitions()/follow() would silently skip the delete.
-        metrics = dict(m.get("metrics", {}))
-        for p in touched_parts:
-            bumped = {**metrics.get(p, {}), "snapshot_id": snapshot_id}
-            bumped.pop("data_snapshot_id", None)
-            metrics[p] = bumped
-        manifest = {
-            "snapshot_id": snapshot_id,
-            "parent": parent,
-            "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "watermark": m.get("watermark"),
-            "properties": {
-                **(properties or {}),
-                "delete_condition": str(condition),
-                "delete_mode": "merge-on-read",
-                "deleted_partitions": sorted(touched_parts),
-            },
-            "files": dict(m["files"]),
-            "metrics": metrics,
-            "file_stats": dict(m.get("file_stats", {})),
-            "delete_files": dmap,
-        }
-        self._commit_manifest(manifest)
+        self._commit_manifest(
+            self._new_manifest(
+                snapshot_id, m, m["files"],
+                self._bump_partitions(m, touched, snapshot_id),
+                m.get("file_stats", {}),
+                {
+                    **(properties or {}),
+                    "delete_condition": str(condition),
+                    "delete_mode": "merge-on-read",
+                    "deleted_partitions": sorted(touched),
+                },
+                delete_files=dmap,
+            )
+        )
         return snapshot_id, report
 
     def delete_keys(
@@ -2036,10 +1840,7 @@ class SnapshotStore:
         which partitions actually held matches without the probe it
         exists to avoid, so consumers conservatively reprocess the
         family). Returns ``(snapshot_id | None, report)``."""
-        parent = self.head()
-        m = self.manifest(parent)
-        if m is None:
-            raise FileNotFoundError(f"no snapshot in {self.table_dir}")
+        m = self._head_manifest()
         key_cols = list(keys.columns)
         if not key_cols:
             raise ValueError("delete_keys needs at least one key column")
@@ -2063,7 +1864,7 @@ class SnapshotStore:
                     f"{part!r} — scope the delete with prefix= to the "
                     "families that carry them"
                 )
-        snapshot_id = time.strftime("%Y%m%d%H%M%S") + "-" + uuid.uuid4().hex[:8]
+        snapshot_id = _new_snapshot_id()
         eq_dir = os.path.join(self.table_dir, "data", snapshot_id, "eq_deletes")
         t0 = time.time()
         keys.dropDuplicates().coalesce(1).write.mode("overwrite").parquet(eq_dir)
@@ -2085,29 +1886,21 @@ class SnapshotStore:
         marked = [
             p for p in m["files"] if prefix is None or p.startswith(prefix)
         ]
-        metrics = dict(m.get("metrics", {}))
-        for p in marked:
-            bumped = {**metrics.get(p, {}), "snapshot_id": snapshot_id}
-            bumped.pop("data_snapshot_id", None)
-            metrics[p] = bumped
         report["partitions_marked"] = len(marked)
-        manifest = {
-            "snapshot_id": snapshot_id,
-            "parent": parent,
-            "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "watermark": m.get("watermark"),
-            "properties": {
-                **(properties or {}),
-                "delete_mode": "equality",
-                "delete_key_cols": key_cols,
-                "delete_prefix": prefix,
-            },
-            "files": dict(m["files"]),
-            "metrics": metrics,
-            "file_stats": dict(m.get("file_stats", {})),
-            "eq_delete_files": kept + [entry],
-        }
-        self._commit_manifest(manifest)
+        self._commit_manifest(
+            self._new_manifest(
+                snapshot_id, m, m["files"],
+                self._bump_partitions(m, marked, snapshot_id),
+                m.get("file_stats", {}),
+                {
+                    **(properties or {}),
+                    "delete_mode": "equality",
+                    "delete_key_cols": key_cols,
+                    "delete_prefix": prefix,
+                },
+                eq_delete_files=kept + [entry],
+            )
+        )
         return snapshot_id, report
 
     @staticmethod

@@ -850,15 +850,23 @@ def test_merge_into_stats_pruning_engages(spark, tmp_path):
 
 def test_merge_into_modes_and_cardinality(spark, tmp_path):
     store, s1 = _merge_fixture(spark, tmp_path)
+    spark.catalog.clearCache()
+
+    def assert_nothing_cached():
+        # a failed merge must release its persisted probe
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
     dup = spark.createDataFrame(
         [(1, 0, "a"), (1, 1, "b")], "id long, v long, tag string"
     )
     with pytest.raises(ValueError, match="cardinality"):
         store.merge_into(spark, dup, ["id"], insert_partition="t/d1")
+    assert_nothing_cached()
 
     stray = spark.createDataFrame([(999, 0, "s")], "id long, v long, tag string")
     with pytest.raises(ValueError, match="match no target row"):
         store.merge_into(spark, stray, ["id"], when_not_matched="error")
+    assert_nothing_cached()
 
     # ignore: unmatched rows dropped; no match at all -> provable no-op
     out, report = store.merge_into(
@@ -876,6 +884,15 @@ def test_merge_into_modes_and_cardinality(spark, tmp_path):
     bad = spark.createDataFrame([(1, 5)], "id long, v long")
     with pytest.raises(ValueError, match="schemas must align"):
         store.merge_into(spark, bad, ["id"], insert_partition="t/d1")
+    assert_nothing_cached()
+
+    # ... also when nothing matches and the inserts lack a column: the key
+    # range [-5, 250] keeps every file a candidate, so the probe ran
+    bad_insert = spark.createDataFrame([(-5, 5), (250, 5)], "id long, v long")
+    with pytest.raises(ValueError, match="of insert partition"):
+        store.merge_into(spark, bad_insert, ["id"], insert_partition="t/d1")
+    assert_nothing_cached()
+    assert store.head() == s1
 
 
 def test_rollback_and_purge(spark, tmp_path):

@@ -6,7 +6,8 @@ every partition had been written alone, a failed write must commit nothing,
 and the pool's jobs must run under the caller's job group. Store reads take
 their schema from the parquet footer instead of running Spark's one-task
 schema-inference job, so planning a read starts no Spark job and yields the
-schema ``spark.read.parquet`` would infer.
+schema ``spark.read.parquet`` would infer. The copy-on-write DML verbs each
+run a pinned number of Spark jobs and write a pinned number of files.
 """
 
 import sys
@@ -246,3 +247,57 @@ def test_merge_schema_still_merges_added_columns(spark, tmp_path):
     files = store.files_for(prefix="t/")
     assert plain.schema == spark.read.parquet(*files).schema
     assert plain.schema == spark.read.parquet(*reversed(files)).schema
+
+
+def _live_files(store):
+    return {f for pf in store.manifest()["files"].values() for f in pf}
+
+
+def test_dml_verbs_keep_their_job_and_file_counts(spark, tmp_path):
+    """Each copy-on-write verb runs a fixed number of Spark jobs and writes
+    one new file per touched file (plus, for MERGE, one insert file): an
+    extra probe, write or schema job shows up here before it shows up as a
+    slower benchmark."""
+    sc = spark.sparkContext
+    store = SnapshotStore(str(tmp_path / "dml_shape"))
+    store.commit_partitions(
+        {
+            "t/d1": spark.range(0, 100).select(
+                "id", (F.col("id") * 10).alias("v"), F.lit("d1").alias("tag")
+            ),
+            "t/d2": spark.range(100, 200).select(
+                "id", (F.col("id") * 10).alias("v"), F.lit("d2").alias("tag")
+            ),
+        },
+        stat_cols=["id"],
+        cluster_by=["id"],
+        cluster_files=4,
+    )
+    src = spark.createDataFrame(
+        [(3, 999, "a"), (150, -1, "b"), (500, 7, "new")],
+        "id long, v long, tag string",
+    )
+    verbs = [
+        # stats agg, probe, matched/unmatched split, rewrite, insert, and
+        # the broadcasts of source keys and marked source rows
+        ("merge", lambda: store.merge_into(
+            spark, src, ["id"], prefix="t/", insert_partition="t/d2"), 12, 3),
+        # probe (map + result stage) and the one rewrite
+        ("delete", lambda: store.delete_where(
+            spark, "(id >= 40 and id < 45) or id = 120", prefix="t/"), 3, 2),
+        ("update", lambda: store.update_where(
+            spark, "id in (7, 160)", {"v": "v + 1"}, prefix="t/"), 3, 2),
+    ]
+    for name, run, want_jobs, want_files in verbs:
+        before = _live_files(store)
+        group = f"{name}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, name)
+        try:
+            snap, report = run()
+        finally:
+            _clear_job_group(spark)
+        assert snap is not None and report["touched_files"] == 2, name
+        assert len(_jobs_in_group(spark, group)) == want_jobs, name
+        after = _live_files(store)
+        assert len(after - before) == want_files, name
+        assert len(before - after) == 2, name

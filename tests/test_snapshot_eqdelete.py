@@ -162,11 +162,23 @@ def test_delete_keys_validates_columns_against_covered_partitions(spark, tmp_pat
 
 def test_cluster_layout_survives_dml_and_recompaction(spark, tmp_path):
     """A CoW rewrite must keep the partition's recorded cluster keys so the
-    nightly compaction re-clusters instead of de-clustering."""
+    nightly compaction re-clusters instead of de-clustering — also when a
+    delete kills every row of the files it touches and only untouched files
+    remain."""
     store, _ = _fixture(spark, tmp_path)
     store.update_where(spark, "id >= 40 and id < 45", {"v": "v + 1"})
     m = store.manifest()
     assert m["metrics"]["t/d1"].get("cluster_by") == ["id"]
+    # delete exactly the rows of t/d1's top-key file (files are disjoint)
+    lo, hi = max(m["file_stats"][f]["id"] for f in m["files"]["t/d1"])
+    _, report = store.delete_where(
+        spark, f"id between {lo} and {hi}", ranges={"id": (lo, hi)}
+    )
+    assert report["touched_files"] == 1
+    m = store.manifest()
+    assert len(m["files"]["t/d1"]) == 3
+    assert m["metrics"]["t/d1"].get("cluster_by") == ["id"]
+    assert m["metrics"]["t/d1"]["n_rows"] == 100 - report["deleted_rows"]
     snap, _ = store.compact_partitions(spark, target_file_bytes=1)
     m2 = store.manifest(snap)
     assert m2["metrics"]["t/d1"].get("cluster_by") == ["id"]
