@@ -121,16 +121,24 @@ def state_tier(
     Output: key_cols, bucket_start, state, held_us (long), n_spans (long —
     spans STARTING in the bucket; every observation with a successor starts
     one, so SUM(n_spans) over all buckets = #observations − #keys, whether
-    or not adjacent observations change state)."""
+    or not adjacent observations change state).
+
+    Duplicate ``(key, ts)`` observations are ordered by ``(ts, state)``:
+    the greatest state among them holds the span that follows, whatever
+    the input's partition order. The window still sorts on ``ts`` alone (a
+    layout sorted by (key, ts) needs no Sort): every row of a ``ts`` tie
+    carries the tie's greatest state, and only the tie's last row opens a
+    non-empty span."""
     seconds = TIER_SECONDS[tier]
     bucket_us = seconds * 1_000_000
     w = Window.partitionBy(*key_cols).orderBy(ts_col)
+    ts_peers = w.rangeBetween(Window.currentRow, Window.currentRow)
     s_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     spans = (
         df.where(F.col(state_col).isNotNull())
         .select(
             *key_cols,
-            F.col(state_col).alias("state"),
+            F.max(state_col).over(ts_peers).alias("state"),
             s_us.alias("_s"),
             F.lead(s_us).over(w).alias("_e"),
         )
@@ -262,7 +270,11 @@ def encode_state_runs(
     bounded by the run span). ``collapse=False`` stores one run per
     observation — no compaction, and :func:`state_tier_from_runs` is then
     exact under arbitrary late/out-of-order arrivals, which is why the
-    flagship pipeline defaults to it for its refresh contract."""
+    flagship pipeline defaults to it for its refresh contract.
+
+    Observations sharing a ``(key, ts)`` are ordered by ``(ts, state)``,
+    the same rule as :func:`state_tier`, so the runs do not depend on the
+    input's partition order."""
     if not collapse:
         ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
         return df.where(F.col(state_col).isNotNull()).select(
@@ -272,7 +284,7 @@ def encode_state_runs(
             ts_us.alias("run_end_us"),
             F.lit(1).cast("long").alias("n_obs"),
         )
-    w = Window.partitionBy(*key_cols).orderBy(ts_col)
+    w = Window.partitionBy(*key_cols).orderBy(ts_col, state_col)
     ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     new_run = (
         F.lag(state_col).over(w).isNull()

@@ -19,6 +19,7 @@ nothing else changes. Partitioning strategy:
 from __future__ import annotations
 
 import time
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,7 +33,6 @@ from .operators import (
     kmv_rollup,
     kmv_tier,
     merge_tier,
-    rollup_all_tiers,
     rollup_raw,
     sketch_percentiles,
     sketch_rollup,
@@ -65,6 +65,122 @@ def default_detector_factory():
 #: ~ 1/sqrt(k)); the sig/{day} tier stores k+2 small columns per snapshot.
 SIG_HASHES = 16
 
+#: Manifest column stats the tier commits record (each family records
+#: whichever of these it carries): a url- or time-range read over the
+#: committed tiers then opens only the overlapping files (files_for).
+_STAT_COLS = ["url", "bucket_start", "warc_ts", "run_start_us"]
+
+
+class _Family(NamedTuple):
+    """One tier family of a crawl day. ``build(day_metrics, day_pages)``
+    makes the day's 1h partial from raw rows; ``merge(committed, fresh)``
+    folds a late partial into the committed one at the same tier (the
+    continuous-aggregate refresh: aggregate only the late rows, then
+    merge). ``row_keyed`` families carry the url on every row, so a purge
+    deletes from them; the others are rebuilt. A family without ``build``
+    is derived from the day's (merged) ``tier1h`` partition."""
+
+    prefix: str
+    build: Callable[[DataFrame, DataFrame], DataFrame] | None
+    merge: Callable[[DataFrame, DataFrame], DataFrame] | None
+    row_keyed: bool
+
+
+# Every family rides the day's one raw scan, and the coarser 1d/30d reads
+# merge FROM the committed 1h partials, never re-scanning raw. Builds and
+# merges are lambdas so each call looks the operator up in this module at
+# call time: a wrapper installed on those names at runtime sees every call.
+_FAMILIES = (
+    # additive 1h tier: merge_tier keeps associative state, so
+    # merge(tier(base), tier(late)) == tier(base ∪ late) exactly
+    _Family("tier1h",
+            lambda m, p: rollup_raw(m, ["url"], "warc_ts", "text_len", "1h"),
+            lambda old, new: merge_tier([old, new], ["url"]), True),
+    # Gorilla blobs are day-local by layout: compressed from the day's
+    # (merged) tier1h partition in _day_partitions.
+    _Family("gorilla1h", None, None, True),
+    # Mergeable percentile sketches: coarser percentile tiers merge FROM
+    # the 1h blobs (sketch_rollup); a GK merge keeps its carried error bound.
+    _Family("qsketch1h",
+            lambda m, p: sketch_tier(m, ["url"], "warc_ts", "text_len", tier="1h"),
+            lambda old, new: sketch_rollup(old.unionByName(new), ["url"], "1h"),
+            True),
+    # Crawl breadth: unique urls per hour as a keyless bottom-k (KMV)
+    # sketch; bottom-k is closed under union, so merges are bit-exact.
+    _Family("kmv1h", lambda m, p: kmv_tier(m, [], "warc_ts", "url", tier="1h"),
+            lambda old, new: kmv_rollup(old.unionByName(new), [], "1h"), False),
+    # Regression moments (the 1d/30d text-length TREND): per-(url, 1h)
+    # partial sums, closed under addition — re-bucketing at the same tier
+    # is a pure per-(url, bucket) SUM (origin shift c = 0).
+    _Family("stats1h",
+            lambda m, p: stats_tier(m, ["url"], "warc_ts", "text_len", tier="1h"),
+            lambda old, new: stats_rollup(old.unionByName(new), ["url"], "1h"),
+            True),
+    # Time-in-state runs: each crawl's lang held LOCF until the url's next
+    # crawl. Stored per-OBSERVATION (collapse=False) so the read-time span
+    # stitch — which crosses day boundaries the per-day scan cannot see —
+    # stays exact under arbitrary late/out-of-order refresh batches: union
+    # IS the refresh.
+    _Family("staterun",
+            lambda m, p: encode_state_runs(p, ["url"], "warc_ts", "lang",
+                                           collapse=False),
+            DataFrame.unionByName, True),
+    # The change-score TEXT PASS: signatures depend only on each
+    # snapshot's own text, so per-day partials (and late ones) concatenate
+    # into the table a global pass would give. xxhash is the scale default:
+    # md5's 16 JVM digests per shingle made the pass 3.4-4.5x slower at
+    # every parallelism level (BASELINE.md churn rows), and change scores
+    # only compare signature equality, so the hash is statistically neutral.
+    _Family("sig",
+            lambda m, p: snapshot_signatures(p, "url", "warc_ts", "text",
+                                             num_hashes=SIG_HASHES, hash_fn="xxhash"),
+            DataFrame.unionByName, True),
+)
+
+
+def _on_day(df: DataFrame, day: str) -> DataFrame:
+    return df.where(F.to_date("warc_ts") == F.lit(day))
+
+
+def _crawl_days(df: DataFrame) -> list[str]:
+    """The sorted distinct ``to_date(warc_ts)`` days of ``df`` (one job)."""
+    days = df.select(F.to_date("warc_ts").alias("day")).distinct().collect()
+    return sorted(str(r["day"]) for r in days)
+
+
+def _day_partitions(
+    metrics: DataFrame,
+    pages: DataFrame,
+    days: list[str],
+    chunk_points: int | None,
+    committed: Callable[[str], DataFrame | None] = lambda key: None,
+) -> dict[str, DataFrame]:
+    """Every family's ``{prefix}/{day}`` partition for ``days``, in family
+    table order. ``committed(key)`` returns the stored partition a fresh
+    partial merges into, or None to commit the fresh partial as is."""
+    partitions = {}
+    for day in days:
+        day_metrics, day_pages = _on_day(metrics, day), _on_day(pages, day)
+        for fam in _FAMILIES:
+            key = f"{fam.prefix}/{day}"
+            if fam.build is None:
+                # chunk_points bounds the skew tail at scale: a hot url
+                # whose 1h series runs to millions of points would
+                # otherwise become one giant blob (single sequential
+                # decode stream, one fat task); 64k-point chunks decode at
+                # full lockstep width and re-compress independently under
+                # retention rewrites. The raw operator keeps chunking
+                # opt-in; the pipeline defaults it ON.
+                partitions[key] = compress_series(
+                    partitions[f"tier1h/{day}"], ["url"], "bucket_start",
+                    "sum_v", chunk_points=chunk_points,
+                )
+                continue
+            part = fam.build(day_metrics, day_pages)
+            old = committed(key)
+            partitions[key] = part if old is None else fam.merge(old, part)
+    return partitions
+
 
 def run_pipeline(
     spark: SparkSession,
@@ -78,89 +194,18 @@ def run_pipeline(
     day-partitions are skipped (snapshot manifest is the checkpoint)."""
     store = SnapshotStore(store_dir)
     metrics = extract_metrics(pages)
-
-    days = [
-        str(r["day"])
-        for r in metrics.select(F.to_date("warc_ts").alias("day")).distinct().collect()
-    ]
+    days = _crawl_days(metrics)
     done = store.completed_partitions()
-    todo = sorted(d for d in days if f"tier1h/{d}" not in done)
+    todo = [d for d in days if f"tier1h/{d}" not in done]
 
     t0 = time.time()
     committed = None
     if todo:
-        partitions = {}
-        for day in todo:
-            day_metrics = metrics.where(F.to_date("warc_ts") == F.lit(day))
-            tiers = rollup_all_tiers(day_metrics, ["url"], "warc_ts", "text_len")
-            partitions[f"tier1h/{day}"] = tiers["1h"]
-            # chunk_points bounds the skew tail at scale: a hot url whose 1h
-            # series runs to millions of points would otherwise become one
-            # giant blob (single sequential decode stream, one fat task);
-            # 64k-point chunks decode at full lockstep width and re-compress
-            # independently under retention rewrites. The raw operator keeps
-            # chunking opt-in; the pipeline defaults it ON.
-            partitions[f"gorilla1h/{day}"] = compress_series(
-                tiers["1h"], ["url"], "bucket_start", "sum_v",
-                chunk_points=chunk_points,
-            )
-            # Mergeable percentile sketches ride the same raw scan: the 1h
-            # blobs commit next to the additive tier, and coarser
-            # percentile tiers merge FROM them (sketch_rollup) instead of
-            # re-scanning raw — the percentile analogue of the
-            # continuous-aggregate contract.
-            partitions[f"qsketch1h/{day}"] = sketch_tier(
-                day_metrics, ["url"], "warc_ts", "text_len", tier="1h"
-            )
-            # Crawl breadth rides along too: unique urls per hour as a
-            # bottom-k (KMV) sketch — the day's 1d/30d distinct-url tiers
-            # merge FROM these persisted arrays bit-exactly (bottom-k is
-            # closed under union), never re-scanning the day's pages.
-            partitions[f"kmv1h/{day}"] = kmv_tier(
-                day_metrics, [], "warc_ts", "url", tier="1h"
-            )
-            # Regression moments ride the same raw scan: per-(url, 1h)
-            # partial sums, closed under addition — the 1d/30d TREND of a
-            # page's text length (is it drifting between change points?)
-            # merges from these, never re-scanning raw (statsagg.py).
-            partitions[f"stats1h/{day}"] = stats_tier(
-                day_metrics, ["url"], "warc_ts", "text_len", tier="1h"
-            )
-            # The change-score TEXT PASS is also per-day incremental:
-            # signatures depend only on each snapshot's own text, so the
-            # per-day partials concatenate into the same table a global
-            # pass would give; the cross-day score window later reads k+2
-            # small columns per snapshot, never text again.
-            day_pages = pages.where(F.to_date("warc_ts") == F.lit(day))
-            # Time-in-state runs (stateagg.py): each crawl's lang held LOCF
-            # until the url's next crawl. Stored per-OBSERVATION
-            # (collapse=False) so the read-time span stitch — which crosses
-            # day boundaries the per-day scan cannot see — stays exact
-            # under arbitrary late/out-of-order refresh batches; the
-            # queryable per-day/monthly lang-duration tier stitches from
-            # these 3-small-column rows, never re-reading text.
-            partitions[f"staterun/{day}"] = encode_state_runs(
-                day_pages, ["url"], "warc_ts", "lang", collapse=False
-            )
-            partitions[f"sig/{day}"] = snapshot_signatures(
-                day_pages, "url", "warc_ts", "text", num_hashes=SIG_HASHES,
-                # xxhash = the scale default (same convention as the corpus
-                # stage): the md5 default exists for cross-engine oracle
-                # reproducibility, but its 16 JVM digests per shingle made
-                # the signature pass 3.4-4.5x slower than xxhash64 at every
-                # parallelism level (BASELINE.md churn rows). Change-score
-                # semantics only compare signature equality, so the hash
-                # choice is statistically neutral.
-                hash_fn="xxhash",
-            )
         committed = store.commit_partitions(
-            partitions,
+            _day_partitions(metrics, pages, todo, chunk_points),
             watermark=max(todo),
             properties={"stage": "tiers"},
-            # Manifest column stats (each family records whichever of these
-            # it carries): a url- or time-range read over the committed
-            # tiers then opens only the overlapping files (files_for).
-            stat_cols=["url", "bucket_start", "warc_ts", "run_start_us"],
+            stat_cols=_STAT_COLS,
         )
     tiers_sec = time.time() - t0
 
@@ -318,7 +363,10 @@ def read_lang_state_tier(
     whenever no url is silent for longer than the horizon across either
     edge (longer silences lose only the carry beyond the horizon; inside
     the range every duration is evidenced by in-slice runs). Raises
-    ``FileNotFoundError`` when the range prunes every file."""
+    ``FileNotFoundError`` when the range prunes every file. The pruning is
+    exact only for per-observation runs (``collapse=False``, what the
+    pipeline commits): a collapsed run (``run_end_us > run_start_us``) in
+    the scanned slice fails the query instead of silently losing carry."""
     import datetime as _dt
 
     start = _dt.datetime.fromisoformat(start_day)
@@ -327,9 +375,18 @@ def read_lang_state_tier(
     h_us = horizon_days * 86_400_000_000
     lo_us = int((start - epoch).total_seconds()) * 1_000_000 - h_us
     hi_us = int((end - epoch).total_seconds()) * 1_000_000 + h_us
+    # assert_true yields NULL when the check holds, so the per-observation
+    # check rides the same scan and adds no job.
     runs = store.read(
         spark, prefix=prefix, ranges={"run_start_us": (lo_us, hi_us)}
-    ).where(F.col("run_start_us").between(lo_us, hi_us))
+    ).where(
+        F.col("run_start_us").between(lo_us, hi_us)
+        & F.assert_true(
+            F.col("run_end_us") == F.col("run_start_us"),
+            F.lit("read_lang_state_tier needs per-observation runs "
+                  f"(collapse=False); {prefix} holds a collapsed run"),
+        ).isNull()
+    )
     tiers = state_tier_from_runs(runs, list(key_cols), tier)
     return tiers.where(
         (F.col("bucket_start") >= F.lit(start_day).cast("timestamp"))
@@ -371,9 +428,7 @@ def purge_url(
     is NOT complete until they do. Returns per-family deleted-row counts
     and snapshot ids."""
     report: dict = {"url": url, "families": {}}
-    for fam in (
-        "tier1h/", "gorilla1h/", "qsketch1h/", "stats1h/", "staterun/", "sig/"
-    ):
+    for fam in (f"{f.prefix}/" for f in _FAMILIES if f.row_keyed):
         snap, rep = store.delete_where(
             spark,
             F.col("url") == F.lit(url),
@@ -401,34 +456,20 @@ def purge_url(
     # reported for a later purge call that has them.
     # coverage comes from the UNFILTERED source (a day whose every row was
     # the victim's still counts as covered — its rebuilt sketch is empty)
-    src_days = {
-        str(r["day"])
-        for r in pages.select(F.to_date("warc_ts").alias("day"))
-        .distinct()
-        .collect()
-    }
+    src_days = set(_crawl_days(pages))
     outstanding = [d for d in kmv_days if d not in src_days]
     if outstanding:
         report["kmv_skipped_days"] = outstanding
-    partitions = {
-        f"kmv1h/{day}": kmv_tier(
-            purged.where(F.to_date("warc_ts") == F.lit(day)),
-            [],
-            "warc_ts",
-            "url",
-            tier="1h",
-        )
-        for day in kmv_days
-        if day in src_days
-    }
-    if partitions:
+    rebuilt = [d for d in kmv_days if d in src_days]
+    if rebuilt:
+        kmv = next(f for f in _FAMILIES if f.prefix == "kmv1h")
         report["kmv_rebuild_snapshot"] = store.commit_partitions(
-            partitions,
-            watermark=(m.get("watermark")),
+            {f"kmv1h/{d}": kmv.build(_on_day(purged, d), None) for d in rebuilt},
+            watermark=m.get("watermark"),
             properties={"stage": "purge-kmv-rebuild", "url": url},
             stat_cols=["bucket_start"],
         )
-        report["kmv_rebuilt_days"] = [d for d in kmv_days if d in src_days]
+        report["kmv_rebuilt_days"] = rebuilt
     return report
 
 
@@ -526,76 +567,15 @@ def refresh_pipeline(
         )
     done = store.completed_partitions()
     late_metrics = extract_metrics(late_pages)
-    days = sorted(
-        str(r["day"])
-        for r in late_metrics.select(F.to_date("warc_ts").alias("day"))
-        .distinct()
-        .collect()
-    )
+    days = _crawl_days(late_metrics)
+    merged_days = [d for d in days if f"tier1h/{d}" in done]
 
     t0 = time.time()
-    partitions: dict[str, DataFrame] = {}
-    merged_days = []
-    for day in days:
-        day_metrics = late_metrics.where(F.to_date("warc_ts") == F.lit(day))
-        day_pages = late_pages.where(F.to_date("warc_ts") == F.lit(day))
-        tier_1h = rollup_raw(day_metrics, ["url"], "warc_ts", "text_len", "1h")
-        sketch_1h = sketch_tier(
-            day_metrics, ["url"], "warc_ts", "text_len", tier="1h"
-        )
-        kmv_1h = kmv_tier(day_metrics, [], "warc_ts", "url", tier="1h")
-        stats_1h = stats_tier(
-            day_metrics, ["url"], "warc_ts", "text_len", tier="1h"
-        )
-        staterun = encode_state_runs(
-            day_pages, ["url"], "warc_ts", "lang", collapse=False
-        )
-        sig = snapshot_signatures(
-            day_pages, "url", "warc_ts", "text",
-            num_hashes=SIG_HASHES, hash_fn="xxhash",
-        )
-        if f"tier1h/{day}" in done:
-            merged_days.append(day)
-            tier_1h = merge_tier(
-                [store.read(spark, prefix=f"tier1h/{day}"), tier_1h], ["url"]
-            )
-            sketch_1h = sketch_rollup(
-                store.read(spark, prefix=f"qsketch1h/{day}").unionByName(
-                    sketch_1h
-                ),
-                ["url"],
-                "1h",
-            )
-            kmv_1h = kmv_rollup(
-                store.read(spark, prefix=f"kmv1h/{day}").unionByName(kmv_1h),
-                [],
-                "1h",
-            )
-            sig = store.read(spark, prefix=f"sig/{day}").unionByName(sig)
-            # per-observation run rows: union IS the refresh (the stitch
-            # interleaves them by timestamp at read — exact under
-            # arbitrary lateness, the reason collapse=False here)
-            staterun = store.read(spark, prefix=f"staterun/{day}").unionByName(
-                staterun
-            )
-            # regression moments are additive: re-bucketing at the same
-            # tier is a pure per-(url, bucket) SUM (origin shift c = 0)
-            stats_1h = stats_rollup(
-                store.read(spark, prefix=f"stats1h/{day}").unionByName(
-                    stats_1h
-                ),
-                ["url"],
-                "1h",
-            )
-        partitions[f"tier1h/{day}"] = tier_1h
-        partitions[f"gorilla1h/{day}"] = compress_series(
-            tier_1h, ["url"], "bucket_start", "sum_v", chunk_points=chunk_points
-        )
-        partitions[f"qsketch1h/{day}"] = sketch_1h
-        partitions[f"kmv1h/{day}"] = kmv_1h
-        partitions[f"stats1h/{day}"] = stats_1h
-        partitions[f"staterun/{day}"] = staterun
-        partitions[f"sig/{day}"] = sig
+    partitions = _day_partitions(
+        late_metrics, late_pages, days, chunk_points,
+        committed=lambda key: store.read(spark, prefix=key)
+        if key.split("/", 1)[1] in merged_days else None,
+    )
 
     prior_watermark = store.manifest().get("watermark")
     watermark = max([*days, prior_watermark] if prior_watermark else days)
@@ -609,7 +589,7 @@ def refresh_pipeline(
             "merged_days": merged_days,
             "late_rows": n_late,
         },
-        stat_cols=["url", "bucket_start", "warc_ts", "run_start_us"],
+        stat_cols=_STAT_COLS,
     )
     refresh_sec = time.time() - t0
 

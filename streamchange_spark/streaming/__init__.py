@@ -1,6 +1,23 @@
 """Structured Streaming variants: stateful detectors, watermarked
 continuous aggregates, and incremental corpus ingestion (see
-streaming.detectors, streaming.rollup, streaming.corpus)."""
+streaming.detectors, streaming.rollup, streaming.corpus).
+
+Every file ingest (the corpus, kmv, qsketch, heavy_hitters, statsagg,
+changescore and stateagg twins, and the upsert) shares one contract,
+implemented once in ``streaming._ingest``:
+
+- checkpointed availableNow: one run reads every file the checkpoint has
+  not yet seen, in micro-batches of at most ``max_files_per_trigger``
+  files, then stops; re-running is the resume path, and a run still going
+  after ``timeout_sec`` is stopped and raises ``TimeoutError``;
+- ``_batch_id`` effectively-once: each micro-batch writes its output as its
+  own ``_batch_id`` partition with dynamic-partition overwrite, so a batch
+  replayed after a crash replaces only what it wrote (the upsert gets the
+  same guarantee from MERGE idempotence instead).
+
+Each twin module supplies only its per-batch transform and its read-time
+merge, and its docstring states that family's exactness contract.
+"""
 
 from .corpus import (
     corpus_verdicts_from_ingest,

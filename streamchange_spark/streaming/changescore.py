@@ -16,12 +16,12 @@ final scores)."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.changescore import (
     change_scores_from_signatures,
     snapshot_signatures,
 )
+from ._ingest import ingest_partials, read_ingested
 
 __all__ = ["run_streaming_signature_ingest", "change_scores_from_ingest"]
 
@@ -41,36 +41,19 @@ def run_streaming_signature_ingest(
     hash_fn: str = "xxhash",
 ) -> None:
     """Signature every unprocessed crawl file under ``input_path``
-    (availableNow) into per-micro-batch rows at ``sig_path``. Resume-safe:
+    (available-now) into per-micro-batch rows at ``sig_path``. Resume-safe:
     the stream checkpoint skips finished files, and a replayed batch
     dynamically overwrites only its own ``_batch_id`` partition."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # hash_fn defaults to xxhash — the batch pipeline's production
-        # default (pipeline.py sig stage); md5 remains available for
-        # cross-engine oracle replay.
-        part = snapshot_signatures(
-            batch_df, url_col, ts_col, text_col, num_hashes, hash_fn=hash_fn
-        )
-        (
-            part.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(sig_path)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    # hash_fn defaults to xxhash — the batch pipeline's production
+    # default (pipeline.py sig stage); md5 remains available for
+    # cross-engine oracle replay.
+    ingest_partials(
+        spark, input_path, sig_path, checkpoint_path, schema,
+        lambda df: snapshot_signatures(
+            df, url_col, ts_col, text_col, num_hashes, hash_fn=hash_fn
+        ),
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def change_scores_from_ingest(
@@ -83,5 +66,5 @@ def change_scores_from_ingest(
     """Score the FULL ingested series (one url-partitioned window over the
     accumulated signature table — lags cross micro-batch boundaries), bit-
     equal to batch ``snapshot_change_scores`` over everything ingested."""
-    sigs = spark.read.parquet(sig_path).drop("_batch_id")
+    sigs = read_ingested(spark, sig_path)
     return change_scores_from_signatures(sigs, url_col, ts_col, num_hashes)

@@ -39,6 +39,12 @@ from ..operators.corpus import (
     corpus_increment_deltas,
     verdicts_from_features,
 )
+from ._ingest import (
+    ingest_partials,
+    read_ingested,
+    run_ingest,
+    write_batch_partition,
+)
 
 __all__ = [
     "corpus_verdicts_from_ingest",
@@ -82,7 +88,7 @@ def run_streaming_corpus_ingest(
     timeout_sec: int = 600,
     **feature_kw,
 ) -> None:
-    """Ingest every unprocessed file under ``input_path`` (availableNow),
+    """Ingest every unprocessed file under ``input_path`` (available-now),
     appending id-level ``corpus_features`` rows to ``features_path``.
 
     Re-running is the resume path: the stream checkpoint skips files already
@@ -90,30 +96,11 @@ def run_streaming_corpus_ingest(
     own ``_batch_id`` partition instead of appending duplicates. ``schema``
     is the file schema DDL (streaming file sources require it explicitly).
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        feats = corpus_features(
-            batch_df, id_col=id_col, text_col=text_col, **feature_kw
-        )
-        (
-            feats.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(features_path)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    ingest_partials(
+        spark, input_path, features_path, checkpoint_path, schema,
+        lambda df: corpus_features(df, id_col=id_col, text_col=text_col, **feature_kw),
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def _read_state(
@@ -183,11 +170,6 @@ def run_streaming_corpus_ingest_incremental(
     hash-exact with a batch ``clean_corpus`` over everything ingested
     through that batch, restricted to the batch's ids (see
     ``operators.corpus`` incremental notes)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         feats = corpus_features(
             batch_df,
@@ -212,21 +194,12 @@ def run_streaming_corpus_ingest_incremental(
             (md5_delta, f"{state_path}/md5"),
             (sig_delta, f"{state_path}/sig"),
         ):
-            (
-                frame.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
+            write_batch_partition(frame, path, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    run_ingest(
+        spark, input_path, checkpoint_path, schema, write_batch,
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def incremental_verdicts_from_ingest(
@@ -235,7 +208,7 @@ def incremental_verdicts_from_ingest(
     """Everything the incremental ingest has decided so far — a plain read
     (verdicts are final at ingest time), vs the full verdict recomputation
     ``corpus_verdicts_from_ingest`` performs."""
-    return spark.read.parquet(verdicts_path).drop("_batch_id")
+    return read_ingested(spark, verdicts_path)
 
 
 def corpus_verdicts_from_ingest(
@@ -248,7 +221,7 @@ def corpus_verdicts_from_ingest(
     ingested so far — global dedup across every micro-batch, identical to a
     fresh ``clean_corpus`` over the union (band keys and text hashes are
     per-document values; see ``operators.corpus`` module docs)."""
-    feats = spark.read.parquet(features_path).drop("_batch_id")
+    feats = read_ingested(spark, features_path)
     return verdicts_from_features(feats, id_col=id_col, **verdict_kw)
 
 
@@ -310,11 +283,6 @@ def run_streaming_line_dedup(
         merge_line_count_indexes,
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
     kw = dict(min_chars=min_chars, delimiter=delimiter, hash_fn=hash_fn)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -328,18 +296,9 @@ def run_streaming_line_dedup(
             max_occurrences=max_occurrences, **kw,
         )
         for frame, path in ((deduped, output_path), (delta, state_path)):
-            (
-                frame.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
+            write_batch_partition(frame, path, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    run_ingest(
+        spark, input_path, checkpoint_path, schema, write_batch,
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)

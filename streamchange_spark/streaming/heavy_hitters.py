@@ -22,9 +22,9 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.heavy_hitters import hh_rollup, hh_tier
+from ._ingest import ingest_partials, read_ingested
 
 __all__ = ["run_streaming_hh_ingest", "hh_tier_from_ingest"]
 
@@ -43,33 +43,16 @@ def run_streaming_hh_ingest(
     max_files_per_trigger: int | None = None,
     timeout_sec: int = 600,
 ) -> None:
-    """Summarize every unprocessed file under ``input_path`` (availableNow)
+    """Summarize every unprocessed file under ``input_path`` (available-now)
     into per-micro-batch partial summaries at ``summary_path``. Resume-safe:
     the stream checkpoint skips finished files, and a replayed batch
     dynamically overwrites only its own ``_batch_id`` partition."""
     key_cols = list(key_cols)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = hh_tier(batch_df, key_cols, ts_col, item_col, tier, m)
-        (
-            part.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(summary_path)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    ingest_partials(
+        spark, input_path, summary_path, checkpoint_path, schema,
+        lambda df: hh_tier(df, key_cols, ts_col, item_col, tier, m),
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def hh_tier_from_ingest(
@@ -84,5 +67,4 @@ def hh_tier_from_ingest(
     carried err reflects the stream's actual merge tree. Pass a coarser
     ``tier`` to roll up in the same merge (1h partials -> queryable 1d),
     shuffling only m (item, cnt) pairs per child either way."""
-    parts = spark.read.parquet(summary_path).drop("_batch_id")
-    return hh_rollup(parts, list(key_cols), tier, m)
+    return hh_rollup(read_ingested(spark, summary_path), list(key_cols), tier, m)

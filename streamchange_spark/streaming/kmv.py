@@ -21,9 +21,9 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.kmv import kmv_rollup, kmv_tier
+from ._ingest import ingest_partials, read_ingested
 
 __all__ = ["run_streaming_kmv_ingest", "kmv_tier_from_ingest"]
 
@@ -42,33 +42,16 @@ def run_streaming_kmv_ingest(
     max_files_per_trigger: int | None = None,
     timeout_sec: int = 600,
 ) -> None:
-    """Sketch every unprocessed file under ``input_path`` (availableNow)
+    """Sketch every unprocessed file under ``input_path`` (available-now)
     into per-micro-batch partial KMV rows at ``sketch_path``. Resume-safe:
     the stream checkpoint skips finished files, and a replayed batch
     dynamically overwrites only its own ``_batch_id`` partition."""
     key_cols = list(key_cols)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = kmv_tier(batch_df, key_cols, ts_col, distinct_col, tier, k)
-        (
-            part.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(sketch_path)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    ingest_partials(
+        spark, input_path, sketch_path, checkpoint_path, schema,
+        lambda df: kmv_tier(df, key_cols, ts_col, distinct_col, tier, k),
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def kmv_tier_from_ingest(
@@ -83,5 +66,4 @@ def kmv_tier_from_ingest(
     to ``kmv_tier`` run in batch over the full ingested data. Pass a
     coarser ``tier`` to roll up in the same merge (1h partials ->
     queryable 1d), shuffling only k-long arrays either way."""
-    parts = spark.read.parquet(sketch_path).drop("_batch_id")
-    return kmv_rollup(parts, list(key_cols), tier, k)
+    return kmv_rollup(read_ingested(spark, sketch_path), list(key_cols), tier, k)

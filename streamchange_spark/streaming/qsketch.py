@@ -24,9 +24,9 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.qsketch import sketch_rollup, sketch_tier
+from ._ingest import ingest_partials, read_ingested
 
 __all__ = ["run_streaming_sketch_ingest", "sketch_tier_from_ingest"]
 
@@ -45,34 +45,17 @@ def run_streaming_sketch_ingest(
     max_files_per_trigger: int | None = None,
     timeout_sec: int = 600,
 ) -> None:
-    """Sketch every unprocessed file under ``input_path`` (availableNow)
+    """Sketch every unprocessed file under ``input_path`` (available-now)
     into per-micro-batch partial sketches at ``sketch_path``. Resume-safe
     the same way as ``run_streaming_corpus_ingest``: the stream checkpoint
     skips finished files, and a replayed batch dynamically overwrites only
     its own ``_batch_id`` partition."""
     key_cols = list(key_cols)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = sketch_tier(batch_df, key_cols, ts_col, value_col, tier, eps)
-        (
-            part.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(sketch_path)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    ingest_partials(
+        spark, input_path, sketch_path, checkpoint_path, schema,
+        lambda df: sketch_tier(df, key_cols, ts_col, value_col, tier, eps),
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def sketch_tier_from_ingest(
@@ -86,5 +69,4 @@ def sketch_tier_from_ingest(
     one (keys..., bucket_start, n_points, qsketch) row per bucket. Pass a
     coarser ``tier`` to roll up in the same merge (e.g. 1h partials ->
     queryable 1d), shuffling only blob rows either way."""
-    parts = spark.read.parquet(sketch_path).drop("_batch_id")
-    return sketch_rollup(parts, list(key_cols), tier, eps)
+    return sketch_rollup(read_ingested(spark, sketch_path), list(key_cols), tier, eps)

@@ -43,13 +43,13 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.stateagg import (
     encode_state_runs,
     heartbeat_tier_from_runs,
     state_tier_from_runs,
 )
+from ._ingest import ingest_partials, read_ingested
 
 __all__ = [
     "run_streaming_state_ingest",
@@ -71,37 +71,20 @@ def run_streaming_state_ingest(
     max_files_per_trigger: int | None = None,
     timeout_sec: int = 600,
 ) -> None:
-    """Reduce every unprocessed file under ``input_path`` (availableNow)
+    """Reduce every unprocessed file under ``input_path`` (available-now)
     into per-micro-batch state-run rows at ``runs_path``. Resume-safe: the
     stream checkpoint skips finished files, and a replayed batch
     dynamically overwrites only its own ``_batch_id`` partition.
     ``encode_runs=False`` stores one run per OBSERVATION (no compaction)
     for feeds that need exact late-row re-attribution."""
     key_cols = list(key_cols)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        runs = encode_state_runs(
-            batch_df, key_cols, ts_col, state_col, collapse=encode_runs
-        )
-        (
-            runs.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(runs_path)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    ingest_partials(
+        spark, input_path, runs_path, checkpoint_path, schema,
+        lambda df: encode_state_runs(
+            df, key_cols, ts_col, state_col, collapse=encode_runs
+        ),
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def state_tier_from_ingest(
@@ -121,7 +104,7 @@ def state_tier_from_ingest(
 
     ``n_spans`` counts LOCF spans over the STORED observation set (see
     :func:`..operators.stateagg.state_tier_from_runs`)."""
-    runs = spark.read.parquet(runs_path).drop("_batch_id")
+    runs = read_ingested(spark, runs_path)
     return state_tier_from_runs(
         runs, list(key_cols), tier, max_span_buckets=max_span_buckets
     )
@@ -143,7 +126,7 @@ def uptime_tier_from_ingest(
     the dropped run interiors undercount coverage across
     longer-than-tolerance endpoint gaps (same caveat as
     ``heartbeat_tier_from_runs``, which this wraps)."""
-    runs = spark.read.parquet(runs_path).drop("_batch_id")
+    runs = read_ingested(spark, runs_path)
     return heartbeat_tier_from_runs(
         runs, list(key_cols), tier,
         tolerance_s=tolerance_s, max_span_buckets=max_span_buckets,

@@ -20,9 +20,9 @@ from __future__ import annotations
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.statsagg import stats_rollup, stats_tier
+from ._ingest import ingest_partials, read_ingested
 
 __all__ = ["run_streaming_stats_ingest", "stats_tier_from_ingest"]
 
@@ -40,34 +40,17 @@ def run_streaming_stats_ingest(
     max_files_per_trigger: int | None = None,
     timeout_sec: int = 600,
 ) -> None:
-    """Reduce every unprocessed file under ``input_path`` (availableNow)
+    """Reduce every unprocessed file under ``input_path`` (available-now)
     into per-micro-batch partial moment rows at ``stats_path``.
     Resume-safe: the stream checkpoint skips finished files, and a
     replayed batch dynamically overwrites only its own ``_batch_id``
     partition."""
     key_cols = list(key_cols)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = stats_tier(batch_df, key_cols, ts_col, value_col, tier)
-        (
-            part.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(stats_path)
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    ingest_partials(
+        spark, input_path, stats_path, checkpoint_path, schema,
+        lambda df: stats_tier(df, key_cols, ts_col, value_col, tier),
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
 
 
 def stats_tier_from_ingest(
@@ -82,5 +65,4 @@ def stats_tier_from_ingest(
     to summation order). Pass a coarser ``tier`` to roll up in the same
     merge (1h partials -> queryable 1d trend); evaluate with
     ``stats_eval``. The merge shuffles six doubles per (key, bucket)."""
-    parts = spark.read.parquet(stats_path).drop("_batch_id")
-    return stats_rollup(parts, list(key_cols), tier)
+    return stats_rollup(read_ingested(spark, stats_path), list(key_cols), tier)

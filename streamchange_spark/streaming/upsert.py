@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.snapshots import SnapshotStore
+from ._ingest import run_ingest
 
 __all__ = ["run_streaming_upsert"]
 
@@ -47,7 +48,7 @@ def run_streaming_upsert(
     timeout_sec: int = 600,
 ) -> None:
     """MERGE every unprocessed crawl file under ``input_path``
-    (availableNow) into the snapshot store at ``store_dir``. Resume-safe:
+    (available-now) into the snapshot store at ``store_dir``. Resume-safe:
     the stream checkpoint skips finished files, and a replayed batch
     re-merges idempotently (see module docstring). Each micro-batch commits
     ONE store snapshot, so the store's lineage/metrics tables double as the
@@ -69,10 +70,6 @@ def run_streaming_upsert(
     ``maintain()`` compaction folds them into plain files."""
     key_cols = list(key_cols)
     store = SnapshotStore(store_dir)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_path)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         src = batch_df
@@ -118,10 +115,7 @@ def run_streaming_upsert(
             properties={"stream_batch_id": batch_id},
         )
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    run_ingest(
+        spark, input_path, checkpoint_path, schema, write_batch,
+        max_files_per_trigger, timeout_sec,
     )
-    q.awaitTermination(timeout_sec)

@@ -1443,3 +1443,100 @@ def test_range_scoped_state_read_prunes_and_matches_slice(
     )
     everything = store.files_for(prefix="staterun/")
     assert 0 < len(kept) < len(everything)
+
+
+TIER_FAMILIES = (
+    "tier1h", "gorilla1h", "qsketch1h", "kmv1h", "stats1h", "staterun", "sig"
+)
+ROW_KEYED = ("tier1h/", "gorilla1h/", "qsketch1h/", "stats1h/", "staterun/", "sig/")
+
+
+def test_pipeline_refresh_purge_keep_their_families_jobs_and_files(
+    spark, tmp_path
+):
+    """A cold ``run_pipeline`` commits the seven tier families per day in a
+    fixed order, ``run_pipeline`` and a following ``refresh_pipeline`` each
+    run a pinned number of Spark jobs and write a pinned number of files,
+    and ``purge_url`` deletes from exactly the row-keyed families: a
+    family dropped from, added to or reordered in the family table, or an
+    extra job in the day builder, fails here before it shows up as a slower
+    benchmark."""
+    import uuid
+
+    from test_snapshot_concurrency import (
+        _clear_job_group,
+        _jobs_in_group,
+        _live_files,
+    )
+
+    from streamchange_spark.pipeline import purge_url, refresh_pipeline
+
+    pages = generate_pages(spark, n_urls=8, mean_snapshots=12).cache()
+    late_slice = F.pmod(F.xxhash64("url", "warc_ts"), F.lit(4)) == 0
+    base, late = pages.where(~late_slice), pages.where(late_slice)
+    store_dir = str(tmp_path / "shape")
+    store = SnapshotStore(store_dir)
+    sc = spark.sparkContext
+
+    def jobs_and_new_files(name, run):
+        before = _live_files(store) if store.head() else set()
+        group = f"{name}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, name)
+        try:
+            out = run()
+        finally:
+            _clear_job_group(spark)
+        return out, len(_jobs_in_group(spark, group)), len(_live_files(store) - before)
+
+    r1, jobs, files = jobs_and_new_files(
+        "run", lambda: run_pipeline(spark, base, store_dir)
+    )
+    days = sorted(
+        str(r["d"])
+        for r in base.select(F.to_date("warc_ts").alias("d")).distinct().collect()
+    )
+    assert list(store.manifest()["files"]) == [
+        f"{fam}/{day}" for day in days for fam in TIER_FAMILIES
+    ]
+    assert (r1["days_built"], jobs, files) == (len(days), 144, 81)
+
+    r2, jobs, files = jobs_and_new_files(
+        "refresh", lambda: refresh_pipeline(spark, late, store_dir)
+    )
+    assert r2["merged_days"] == days
+    assert (jobs, files) == (156, 105)
+
+    victim = sorted(r["url"] for r in pages.select("url").distinct().collect())[0]
+    report = purge_url(spark, store, victim, pages=pages)
+    assert list(report["families"]) == list(ROW_KEYED)
+    assert report["kmv_rebuilt_days"] == days
+    pages.unpersist()
+
+
+def test_range_scoped_state_read_rejects_collapsed_runs(spark, tmp_path):
+    """read_lang_state_tier prunes on run_start_us, exact only for
+    per-observation runs: a staterun family of collapsed runs fails the
+    read instead of silently losing LOCF carry."""
+    from streamchange_spark.operators import encode_state_runs
+    from streamchange_spark.pipeline import read_lang_state_tier
+
+    obs = spark.createDataFrame(
+        [("u1", 0, "en"), ("u1", 600, "en"), ("u1", 1200, "de")],
+        "url string, sec long, lang string",
+    ).select("url", F.timestamp_seconds("sec").alias("warc_ts"), "lang")
+    for collapse in (False, True):
+        store = SnapshotStore(str(tmp_path / f"collapse_{collapse}"))
+        store.commit_partitions(
+            {"staterun/1970-01-01": encode_state_runs(
+                obs, ["url"], "warc_ts", "lang", collapse=collapse
+            )},
+            stat_cols=["run_start_us"],
+        )
+        read = read_lang_state_tier(spark, store, "1970-01-01", "1970-01-01")
+        if collapse:
+            with pytest.raises(Exception, match="per-observation runs"):
+                read.collect()
+        else:
+            assert sorted((r["state"], r["held_us"]) for r in read.collect()) == [
+                ("en", 1_200_000_000)
+            ]

@@ -74,6 +74,68 @@ def test_state_merge_equals_direct(spark):
     assert [tuple(r) for r in s] == [tuple(r) for r in d]
 
 
+def _tie_layouts(df):
+    """The same rows in one partition, ts ties met in ascending and in
+    descending state order."""
+    one = df.repartition(1)
+    return one.sortWithinPartitions("state"), one.sortWithinPartitions(
+        F.desc("state")
+    )
+
+
+def test_duplicate_ts_attribution_is_deterministic(spark):
+    """Observations sharing (key, ts) are ordered by (ts, state): the
+    greatest state holds the following span under every partition layout,
+    in state_tier and in the collapsed run encoding alike."""
+    from streamchange_spark.operators import (
+        encode_state_runs,
+        state_tier_from_runs,
+    )
+
+    df = _obs(
+        spark,
+        [("a", 600, "up"), ("a", 3000, "down"), ("a", 3000, "up"),
+         ("a", 4200, "down"), ("a", 4200, "down"), ("a", 7200, "up")],
+    )
+    tiers = [
+        sorted(
+            (r["bucket_start"].hour, r["state"], r["held_us"], r["n_spans"])
+            for r in state_tier(d, ["k"], "ts", "state", "1h").collect()
+        )
+        for d in _tie_layouts(df)
+    ]
+    s = 1_000_000
+    # up holds 600 -> 4200 (the 3000 tie goes to "up" > "down"), then down
+    # holds 4200 -> 7200; the zero-length tie spans start nothing
+    assert tiers[0] == tiers[1] == [
+        (0, "up", 3000 * s, 2), (1, "down", 3000 * s, 1), (1, "up", 600 * s, 0)
+    ]
+
+    runs = [
+        sorted(
+            tuple(r)
+            for r in encode_state_runs(d, ["k"], "ts", "state").collect()
+        )
+        for d in _tie_layouts(df.where(F.unix_seconds("ts") != 4200))
+    ]
+    # (ts, state) order: up@600, down@3000, up@3000, up@7200 — the 3000
+    # "up" opens the run that the 7200 "up" extends
+    assert runs[0] == runs[1] == [
+        ("a", "down", 3000 * s, 3000 * s, 1),
+        ("a", "up", 600 * s, 600 * s, 1),
+        ("a", "up", 3000 * s, 7200 * s, 2),
+    ]
+    via_runs = sorted(
+        tuple(r) for r in state_tier_from_runs(
+            encode_state_runs(df, ["k"], "ts", "state"), ["k"], "1h"
+        ).collect()
+    )
+    direct = sorted(
+        tuple(r) for r in state_tier(df, ["k"], "ts", "state", "1h").collect()
+    )
+    assert via_runs == direct
+
+
 def test_state_eval_and_null_states(spark):
     df = _obs(spark, [("a", 0, "up"), ("a", 100, None), ("a", 200, "up"),
                       ("a", 300, "down")])

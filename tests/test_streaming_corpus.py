@@ -274,6 +274,56 @@ def test_streaming_kmv_tier_bit_equals_batch(spark, tmp_path):
         assert abs(approx - x) / x < 4 * rse if x >= k else approx == float(x)
 
 
+def test_timed_out_ingest_stops_and_resumes(spark, tmp_path):
+    """An ingest still running at ``timeout_sec`` is stopped and raises
+    TimeoutError instead of returning while its query keeps writing; the
+    re-run resumes from the checkpoint and the merged tier still equals
+    the batch build."""
+    from streamchange_spark.operators import kmv_tier
+    from streamchange_spark.streaming import (
+        kmv_tier_from_ingest,
+        run_streaming_kmv_ingest,
+    )
+
+    rng = np.random.RandomState(5)
+    src = tmp_path / "events"
+    src.mkdir()
+    base = pd.Timestamp("2024-03-01").value // 10**9
+    frames = []
+    for dump in range(2):
+        pdf = pd.DataFrame(
+            {
+                "key": np.where(rng.rand(500) < 0.5, "a", "b"),
+                "ts": pd.to_datetime(base + rng.randint(0, 86400, 500), unit="s"),
+                "uid": rng.randint(0, 300, 500),
+            }
+        )
+        pdf.to_parquet(src / f"dump{dump}.parquet", coerce_timestamps="us")
+        frames.append(pdf)
+    sketch_path = str(tmp_path / "sketches")
+    args = (
+        spark, str(src), sketch_path, str(tmp_path / "ckpt"),
+        "key string, ts timestamp, uid bigint", ["key"], "ts", "uid",
+    )
+    with pytest.raises(TimeoutError):
+        run_streaming_kmv_ingest(
+            *args, k=32, max_files_per_trigger=1, timeout_sec=0.001
+        )
+    assert spark.streams.active == []
+
+    run_streaming_kmv_ingest(*args, k=32, max_files_per_trigger=1)
+    union = spark.createDataFrame(pd.concat(frames, ignore_index=True))
+    cols = ["key", "bucket_start", "n_points", "kmv"]
+    assert sorted(
+        tuple(r) for r in kmv_tier_from_ingest(
+            spark, sketch_path, ["key"], k=32
+        ).select(cols).collect()
+    ) == sorted(
+        tuple(r) for r in kmv_tier(union, ["key"], "ts", "uid", k=32)
+        .select(cols).collect()
+    )
+
+
 def test_streaming_hh_tier_invariant_over_ingest(spark, tmp_path):
     """Two dumps streamed into partial heavy-hitter summaries, merged into
     a queryable 1d tier: the carried err reflects the stream's merge tree
