@@ -10,6 +10,13 @@ Layers:
 - ``sources``: deterministic Common-Crawl-style pages generator and the
   snapshot (Iceberg-layout) store with resume support.
 - ``functions``: column-level helpers (salting, bucketing, hashing).
+
+Importing the package installs the zip-directory cache guard of
+``_pyworker`` (a Python-worker per-task cost; see that module).
 """
+
+from . import _pyworker
+
+_pyworker.install()
 
 __version__ = "0.1.0"

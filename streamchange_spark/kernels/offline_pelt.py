@@ -3,7 +3,8 @@
 Semantics parity with /root/reference/streamchange/offline/pelt.py and
 costs.py: costs for any (start, end) interval come from zero-padded prefix
 sums; the forward DP prunes candidates whose cost already exceeds the current
-optimum (expected O(n) overall).
+optimum (expected O(n) overall). The DP itself departs from the ported loop
+to solve the exact minimum-segment-length problem (see ``OfflinePelt``).
 """
 
 from __future__ import annotations
@@ -50,7 +51,17 @@ class OfflineL2Cost:
 class OfflinePelt:
     """Exact optimal partitioning with pruning; ``segments_`` is a list of
     {start, end, size} dicts in ascending start order and ``changepoints_``
-    their ends (parity: offline/pelt.py:13-68)."""
+    their ends (interface parity: offline/pelt.py:13-68).
+
+    ``fit`` minimises Σ (segment L2 cost + penalty) over partitions whose
+    segments all hold at least ``minsl`` points (a series shorter than
+    ``minsl`` is one segment), with ``opt_cost[j]`` the optimum over the
+    first ``j`` points. It matches an exhaustive O(n²) DP, which the ported
+    reference loop did not: that loop charged each segment's first point
+    twice and pruned before the dominating candidate was admissible. A
+    candidate whose cost at step ``j`` exceeds ``opt_cost[j]`` never wins
+    once candidate ``j`` is in (L2 cost is superadditive), so it is removed
+    at step ``j + minsl``, when ``j`` enters."""
 
     def __init__(
         self,
@@ -68,26 +79,32 @@ class OfflinePelt:
         if x.ndim == 1:
             x = x.reshape(-1, 1)
         n = x.shape[0]
-        if n == 0:
-            self.segments_ = []
-            self.changepoints_ = []
-            return self
-        self.cost.fit(x)
-        pen = self.penalty()
-
-        admissible = np.array([0])
-        opt_cost = np.zeros(n + 1)
-        opt_cost[: self.minsl - 1] = -pen
-        prev_cpts = [-1] * (self.minsl - 1)
-
-        for t in range(self.minsl - 1, n):
-            admissible = np.concatenate((admissible, [t - self.minsl + 1]))
-            admissible_opt_costs = opt_cost[admissible] + self.cost(admissible, t) + pen
-            best = int(np.argmin(admissible_opt_costs))
-            opt_cost[t] = admissible_opt_costs[best]
-            prev_cpts.append(int(admissible[best]) - 1)
-            # Prune: drop candidates that can never beat the current optimum.
-            admissible = admissible[admissible_opt_costs - pen <= opt_cost[t]]
+        minsl = self.minsl
+        # prev_cpts[t]: end of the segment before the one ending at t
+        prev_cpts = [-1] * n
+        if n >= minsl:
+            self.cost.fit(x)
+            pen = self.penalty()
+            opt_cost = np.full(n + 1, np.inf)
+            opt_cost[0] = -pen
+            admissible = np.empty(0, dtype=np.int64)
+            pending_kills = {}
+            for j in range(minsl, n + 1):
+                # prefix j - minsl is a candidate once it is itself feasible
+                if j == minsl or j >= 2 * minsl:
+                    admissible = np.append(admissible, j - minsl)
+                dead = pending_kills.pop(j, None)
+                if dead is not None:
+                    admissible = admissible[np.isin(admissible, dead, invert=True)]
+                costs = opt_cost[admissible] + self.cost(admissible, j - 1) + pen
+                best = int(np.argmin(costs))
+                opt_cost[j] = costs[best]
+                prev_cpts[j - 1] = int(admissible[best]) - 1
+                # Prune: drop candidates that can never beat the current
+                # optimum, once candidate j (which dominates them) is in.
+                fails = admissible[costs - pen > opt_cost[j]]
+                if len(fails):
+                    pending_kills.setdefault(j + minsl, []).extend(fails.tolist())
 
         self.segments_ = self.get_segments(prev_cpts)
         self.changepoints_ = [s["end"] for s in self.segments_]

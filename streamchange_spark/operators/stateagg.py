@@ -200,16 +200,21 @@ def twa_tier(
     averages. The final observation of a key holds nothing (no invented
     horizon; total weight per key is exactly ``last_ts - first_ts``).
     Output: key_cols, bucket_start, held_us (long, exact), wsum (double,
-    Σ value·held_us — evaluate with :func:`twa_eval`)."""
+    Σ value·held_us — evaluate with :func:`twa_eval`).
+
+    Duplicate ``(key, ts)`` observations follow :func:`state_tier`'s rule:
+    every row of a ``ts`` tie carries the tie's greatest value, so that
+    value holds the following span whatever the input's partition order."""
     seconds = TIER_SECONDS[tier]
     bucket_us = seconds * 1_000_000
     w = Window.partitionBy(*key_cols).orderBy(ts_col)
+    ts_peers = w.rangeBetween(Window.currentRow, Window.currentRow)
     s_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     spans = (
         df.where(F.col(value_col).isNotNull())
         .select(
             *key_cols,
-            F.col(value_col).cast("double").alias("_v"),
+            F.max(F.col(value_col).cast("double")).over(ts_peers).alias("_v"),
             s_us.alias("_s"),
             F.lead(s_us).over(w).alias("_e"),
         )

@@ -2,6 +2,7 @@
 offline PELT variant."""
 
 import numpy as np
+import pytest
 
 from streamchange_spark.kernels import (
     Capa,
@@ -187,3 +188,105 @@ def test_pelt_pruned_identical_to_unpruned():
     a = Pelt(L2Cost(ConstantPenalty(30.0)), minsl=2, maxsl=1000).fit(x)
     assert a.segments_ == b.segments_
     assert len(b._adm) < n // 4
+
+
+def _piecewise_series(segments, noise_seed, sigma):
+    """Piecewise-constant levels plus Gaussian noise, one float column."""
+    x = np.concatenate([np.full(n, float(level)) for n, level in segments])
+    return x + np.random.default_rng(noise_seed).normal(0.0, sigma, len(x))
+
+
+def _sse(seg):
+    return float(((seg - seg.mean()) ** 2).sum())
+
+
+def _segment_strategy(max_segments, max_len):
+    from hypothesis import strategies as st
+
+    return st.lists(
+        st.tuples(st.integers(1, max_len), st.integers(-10, 10)),
+        min_size=1,
+        max_size=max_segments,
+    )
+
+
+def test_pelt_pruned_equals_unpruned_property():
+    """Hypothesis: Pelt(prune=True) finds the same segments and changepoints
+    as Pelt(prune=False) on random piecewise-constant series, across
+    minsl, maxsl and penalty."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from streamchange_spark.kernels import ConstantPenalty
+
+    @settings(max_examples=120, deadline=None, derandomize=True)
+    @given(
+        _segment_strategy(6, 40),
+        st.integers(0, 2**32 - 1),
+        st.sampled_from([0.05, 0.5, 1.0, 3.0]),
+        st.integers(1, 5),
+        st.integers(2, 80),
+        st.sampled_from([1.0, 8.0, 25.0]),
+    )
+    def check(segments, noise_seed, sigma, minsl, maxsl, pen):
+        maxsl = max(maxsl, minsl + 1)
+        x = _piecewise_series(segments, noise_seed, sigma)
+        a = Pelt(L2Cost(ConstantPenalty(pen)), minsl=minsl, maxsl=maxsl).fit(x)
+        b = Pelt(
+            L2Cost(ConstantPenalty(pen)), minsl=minsl, maxsl=maxsl, prune=True
+        ).fit(x)
+        assert a.segments_ == b.segments_
+        assert a.changepoints_ == b.changepoints_
+
+    check()
+
+
+def _exhaustive_partition(x, minsl, pen):
+    """O(n^2) optimal partitioning without pruning: minimise the sum over
+    segments of (sum of squared deviations from the segment mean + pen),
+    every segment holding >= minsl points. Returns (cost, segments)."""
+    n = len(x)
+    best = [np.inf] * (n + 1)
+    best[0] = -pen
+    start = [0] * (n + 1)
+    for j in range(minsl, n + 1):
+        for s in range(0, j - minsl + 1):
+            c = best[s] + _sse(x[s:j]) + pen
+            if c < best[j]:
+                best[j], start[j] = c, s
+    segments, j = [], n
+    while j > 0:
+        segments.append({"start": start[j], "end": j - 1, "size": j - start[j]})
+        j = start[j]
+    return best[n], segments[::-1]
+
+
+def test_offline_pelt_equals_exhaustive_dp_property():
+    """Hypothesis: OfflinePelt's pruned DP returns the optimal partition an
+    exhaustive O(n^2) DP finds, for n <= 40 (segments and total cost)."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from streamchange_spark.kernels import ConstantPenalty
+
+    @settings(max_examples=150, deadline=None, derandomize=True)
+    @given(
+        _segment_strategy(5, 12).filter(lambda s: sum(n for n, _ in s) <= 40),
+        st.integers(0, 2**32 - 1),
+        st.sampled_from([0.05, 0.5, 1.0, 3.0]),
+        st.integers(1, 5),
+        st.sampled_from([0.5, 4.0, 18.4]),
+    )
+    def check(segments, noise_seed, sigma, minsl, pen):
+        x = _piecewise_series(segments, noise_seed, sigma)
+        det = OfflinePelt(penalty=ConstantPenalty(pen), minsl=minsl).fit(x)
+        if len(x) < minsl:
+            assert det.segments_ == [{"start": 0, "end": len(x) - 1, "size": len(x)}]
+            return
+        cost, segments_ = _exhaustive_partition(x, minsl, pen)
+        got = sum(_sse(x[s["start"] : s["end"] + 1]) + pen for s in det.segments_)
+        assert got - pen == pytest.approx(cost, rel=1e-9, abs=1e-9)
+        assert det.segments_ == segments_
+        assert det.changepoints_ == [s["end"] for s in segments_]
+
+    check()

@@ -325,3 +325,30 @@ def test_twa_tier_merge_equals_direct_and_weighting(spark):
     for kk in d:
         assert d[kk]["held_us"] == m[kk]["held_us"]  # exact integer carrier
         assert m[kk]["twa"] == pytest.approx(d[kk]["twa"], rel=1e-12)
+
+
+def test_twa_duplicate_ts_takes_the_greatest_value(spark):
+    """Observations sharing (key, ts) follow state_tier's rule: the tie's
+    greatest value holds the following span under every partition layout."""
+    from streamchange_spark.operators import twa_tier
+
+    df = spark.createDataFrame(
+        [("a", 0.0, 10.0), ("a", 3000.0, 20.0), ("a", 3000.0, 40.0),
+         ("a", 3000.0, 30.0), ("a", 5400.0, 99.0)],
+        ["k", "sec", "v"],
+    ).select("k", F.timestamp_seconds("sec").alias("ts"), "v")
+    one = df.repartition(1)
+    layouts = [one.sortWithinPartitions("v"), one.sortWithinPartitions(F.desc("v"))]
+    s = 1_000_000
+    out = [
+        sorted(
+            (r["bucket_start"].hour, r["held_us"], r["wsum"])
+            for r in twa_tier(d, ["k"], "ts", "v", "1h").collect()
+        )
+        for d in layouts
+    ]
+    # 10.0 holds 0 -> 3000, then 40.0 (the tie's max) holds 3000 -> 5400
+    assert out[0] == out[1] == [
+        (0, 3600 * s, (10.0 * 3000 + 40.0 * 600) * s),
+        (1, 1800 * s, 40.0 * 1800 * s),
+    ]
