@@ -1,11 +1,12 @@
 """Per-key stateful change-point detection as Spark operators.
 
-Every detector from the kernel layer becomes a batched grouped-map pandas
-UDF (see _grouped.grouped_apply): one explicit hash repartition by key — the
-only shuffle in the plan — then one Arrow crossing per partition, an
-in-worker pandas groupby, and the *exact same* NumPy kernel the test oracle
-runs per key. No per-row Python, no per-group Arrow toll, no driver-side
-loops; parallelism scales with distinct keys across executors.
+Every detector from the kernel layer runs on the grouped scan
+(_grouped.grouped_apply): one explicit hash repartition by key — the only
+shuffle in the plan — then one Arrow crossing per partition, one sort of
+the partition by (key, ts, values), and the *exact same* NumPy kernel the
+test oracle runs, fed each key's array slices. No per-row Python, no
+per-group Arrow toll, no driver-side loops; parallelism scales with
+distinct keys across executors.
 
 Skew note: a detector's state is inherently sequential per key, so a single
 hot key cannot be split without changing semantics; the mitigation is key
@@ -23,7 +24,6 @@ from __future__ import annotations
 from typing import Callable, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -49,10 +49,10 @@ def _ts_field(df: DataFrame, ts_col: str, out_name: str) -> StructField:
     return StructField(out_name, by_name[ts_col].dataType, True)
 
 
-def _values(pdf: pd.DataFrame, value_cols: Sequence[str]) -> np.ndarray:
+def _values(arrays: dict, value_cols: Sequence[str]) -> np.ndarray:
     if len(value_cols) == 1:
-        return pdf[value_cols[0]].to_numpy(dtype=np.float64)
-    return pdf[list(value_cols)].to_numpy(dtype=np.float64)
+        return np.asarray(arrays[value_cols[0]], dtype=np.float64)
+    return np.column_stack([arrays[c] for c in value_cols]).astype(np.float64)
 
 
 def zscore_per_key(x: np.ndarray, ddof: int = 1) -> np.ndarray:
@@ -143,29 +143,23 @@ def window_segmentor_changepoints(
     detector runs — see :func:`zscore_per_key`; default False preserves
     reference-exact raw semantics.
     """
-    key_cols = list(key_cols)
     schema = StructType(
         _key_fields(df, key_cols)
         + [_ts_field(df, ts_col, "detection_ts"), _ts_field(df, ts_col, "changepoint_ts")]
     )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
+    def run(key, arrays):
         detector = detector_factory()
-        vals = _values(pdf, value_cols)
+        vals = _values(arrays, value_cols)
         if standardize:
             vals = zscore_per_key(vals)
-        detector.fit(vals, times=pdf[ts_col].to_numpy())
-        keys = {c: pdf[c].iloc[0] for c in key_cols}
-        rows = [
-            {**keys, "detection_ts": d, "changepoint_ts": c}
-            for d, c in detector.detections_
+        detector.fit(vals, times=arrays[ts_col])
+        return [
+            {"detection_ts": d, "changepoint_ts": c} for d, c in detector.detections_
         ]
-        return rows
 
-    return grouped_apply(df, key_cols, run, schema, num_partitions, returns="rows",
-                         needed_cols=[ts_col, *value_cols],
-                         assume_partitioned=assume_partitioned)
+    return grouped_apply(df, key_cols, [ts_col, *value_cols], run, schema,
+                         num_partitions, assume_partitioned)
 
 
 def sequential_scores(
@@ -183,7 +177,6 @@ def sequential_scores(
     ``standardize=True`` z-scores each key's series per column first (see
     :func:`zscore_per_key` — the reference assumes ~unit-variance input);
     default False is reference-exact raw semantics."""
-    key_cols = list(key_cols)
     schema = StructType(
         _key_fields(df, key_cols)
         + [
@@ -193,29 +186,25 @@ def sequential_scores(
         ]
     )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
+    def run(key, arrays):
         detector = detector_factory()
-        vals = _values(pdf, value_cols)
+        vals = _values(arrays, value_cols)
         if standardize:
             vals = zscore_per_key(vals)
-        detector.fit(vals, times=pdf[ts_col].to_numpy())
-        out = pd.DataFrame(
-            {
-                "ts": detector.times_,
-                "penalised_score": detector.penalised_scores_,
-            }
-        )
-        alarm_set = set(detector.alarms_)
-        out["is_alarm"] = out["ts"].isin(alarm_set)
+        detector.fit(vals, times=arrays[ts_col])
+        times = detector.times_
+        is_alarm = np.isin(times, np.asarray(detector.alarms_, dtype=times.dtype))
+        out = {
+            "ts": times,
+            "penalised_score": detector.penalised_scores_,
+            "is_alarm": is_alarm,
+        }
         if alarms_only:
-            out = out[out["is_alarm"]]
-        for c in key_cols:
-            out[c] = pdf[c].iloc[0]
-        return out[[f.name for f in schema.fields]]
+            out = {c: a[is_alarm] for c, a in out.items()}
+        return out
 
-    return grouped_apply(df, key_cols, run, schema, num_partitions,
-                         needed_cols=[ts_col, *value_cols])
+    return grouped_apply(df, key_cols, [ts_col, *value_cols], run, schema,
+                         num_partitions)
 
 
 def pelt_segments(
@@ -233,7 +222,6 @@ def pelt_segments(
     preserved in the kernel, normalized here for relational consumption).
     ``standardize=True`` z-scores each key's series first — the reference's
     Pelt docs assume standardized input (reference pelt/pelt.py:12)."""
-    key_cols = list(key_cols)
     schema = StructType(
         _key_fields(df, key_cols)
         + [
@@ -243,22 +231,19 @@ def pelt_segments(
         ]
     )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
+    def run(key, arrays):
         detector = detector_factory()
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
+        vals = _values(arrays, [value_col])
         if standardize:
             vals = zscore_per_key(vals)
-        detector.fit(vals, times=pdf[ts_col].to_numpy())
-        keys = {c: pdf[c].iloc[0] for c in key_cols}
-        rows = [
-            {**keys, "start_ts": s["start"], "end_ts": s["end"], "size": s["size"]}
+        detector.fit(vals, times=arrays[ts_col])
+        return [
+            {"start_ts": s["start"], "end_ts": s["end"], "size": s["size"]}
             for s in sorted(detector.segments_, key=lambda s: s["start"])
         ]
-        return rows
 
-    return grouped_apply(df, key_cols, run, schema, num_partitions, returns="rows",
-                         needed_cols=[ts_col, value_col])
+    return grouped_apply(df, key_cols, [ts_col, value_col], run, schema,
+                         num_partitions)
 
 
 def capa_anomalies(
@@ -274,7 +259,6 @@ def capa_anomalies(
     {'collective', 'point'}. ``standardize=True`` z-scores each key's
     series first — the reference's Capa docs assume standardized input
     (reference capa/capa.py:12)."""
-    key_cols = list(key_cols)
     schema = StructType(
         _key_fields(df, key_cols)
         + [
@@ -285,26 +269,25 @@ def capa_anomalies(
         ]
     )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
+    def run(key, arrays):
         detector = detector_factory()
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
+        vals = _values(arrays, [value_col])
         if standardize:
             vals = zscore_per_key(vals)
-        detector.fit(vals, times=pdf[ts_col].to_numpy())
-        keys = {c: pdf[c].iloc[0] for c in key_cols}
+        detector.fit(vals, times=arrays[ts_col])
         rows = [
-            {**keys, "start_ts": a["start"], "end_ts": a["end"], "size": a["size"], "kind": "collective"}
-            for a in detector.collective_anomalies_
-        ] + [
-            {**keys, "start_ts": a["start"], "end_ts": a["end"], "size": a["size"], "kind": "point"}
-            for a in detector.point_anomalies_
+            {"start_ts": a["start"], "end_ts": a["end"], "size": a["size"], "kind": kind}
+            for kind, found in (
+                ("collective", detector.collective_anomalies_),
+                ("point", detector.point_anomalies_),
+            )
+            for a in found
         ]
         rows.sort(key=lambda r: r["start_ts"])
         return rows
 
-    return grouped_apply(df, key_cols, run, schema, num_partitions, returns="rows",
-                         needed_cols=[ts_col, value_col])
+    return grouped_apply(df, key_cols, [ts_col, value_col], run, schema,
+                         num_partitions)
 
 
 def offline_pelt_segments(
@@ -320,7 +303,6 @@ def offline_pelt_segments(
     whole per-key series is segmented at once (positions map back to the
     sorted time index). ``standardize=True`` z-scores each key's series
     per column first (see :func:`zscore_per_key`)."""
-    key_cols = list(key_cols)
     schema = StructType(
         _key_fields(df, key_cols)
         + [
@@ -330,28 +312,20 @@ def offline_pelt_segments(
         ]
     )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        times = pdf[ts_col].to_numpy()
+    def run(key, arrays):
+        times = arrays[ts_col]
         detector = detector_factory()
-        vals = _values(pdf, value_cols)
+        vals = _values(arrays, value_cols)
         if standardize:
             vals = zscore_per_key(vals)
         detector.fit(vals)
-        keys = {c: pdf[c].iloc[0] for c in key_cols}
-        rows = [
-            {
-                **keys,
-                "start_ts": times[s["start"]],
-                "end_ts": times[s["end"]],
-                "size": s["size"],
-            }
+        return [
+            {"start_ts": times[s["start"]], "end_ts": times[s["end"]], "size": s["size"]}
             for s in detector.segments_
         ]
-        return rows
 
-    return grouped_apply(df, key_cols, run, schema, num_partitions, returns="rows",
-                         needed_cols=[ts_col, *value_cols])
+    return grouped_apply(df, key_cols, [ts_col, *value_cols], run, schema,
+                         num_partitions)
 
 
 def segmentation_with_stats(
@@ -367,30 +341,25 @@ def segmentation_with_stats(
     """fit_segmentation as an operator: (keys..., start_ts, end_ts,
     <stat columns...>) — change points plus per-segment running statistics in
     one scan (parity: conveniences/fit_segmentation.py:8-38)."""
-    key_cols = list(key_cols)
     schema = StructType(
         _key_fields(df, key_cols)
         + [_ts_field(df, ts_col, "start_ts"), _ts_field(df, ts_col, "end_ts")]
         + [StructField(name, DoubleType(), True) for name in stat_names]
     )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        times = pdf[ts_col].to_numpy()
+    def run(key, arrays):
+        times = arrays[ts_col]
         segments = _fit_segmentation(
-            detector_factory(), stat_factory(), pdf[value_col].to_numpy(dtype=np.float64)
+            detector_factory(), stat_factory(), _values(arrays, [value_col])
         )
-        keys = {c: pdf[c].iloc[0] for c in key_cols}
-        rows = [
+        return [
             {
-                **keys,
                 "start_ts": times[s["start"]],
                 "end_ts": times[s["end"]],
                 **{name: float(s[name]) for name in stat_names},
             }
             for s in segments
         ]
-        return rows
 
-    return grouped_apply(df, key_cols, run, schema, num_partitions, returns="rows",
-                         needed_cols=[ts_col, value_col])
+    return grouped_apply(df, key_cols, [ts_col, value_col], run, schema,
+                         num_partitions)

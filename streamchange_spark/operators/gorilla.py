@@ -12,9 +12,10 @@ Encoding follows the Gorilla paper (Pelkonen et al., VLDB 2015):
   meaningful bits reusing the previous leading/length window when it still
   covers them, '11' + 5-bit leading-zero count + 6-bit length + bits.
 
-The encoder is plain NumPy/int Python and runs inside Arrow-batched grouped
-pandas UDFs (compress) / mapInPandas (decompress); round-trip equality is
-bit-for-bit on doubles and exact on int64 timestamps (tests).
+The encoder is plain NumPy/int Python and runs on the grouped scan
+(``_grouped.grouped_apply``, compress) / mapInPandas (decompress);
+round-trip equality is bit-for-bit on doubles and exact on int64
+timestamps (tests).
 
 The read path uses ``decompress_*_batch``: all blobs of an Arrow batch are
 decoded in lockstep, one token per vectorized round across rows (see the
@@ -39,6 +40,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from ._grouped import grouped_apply
 
 
 class _BitReader:
@@ -567,9 +570,10 @@ def compress_series(
     chunk_points: int | None = None,
 ) -> DataFrame:
     """One row per key: (keys..., n_points, ts_gorilla, val_gorilla).
-    Timestamps are packed as epoch seconds (int64). Pass
-    ``assume_partitioned=True`` when rows are already hash-clustered by key
-    to skip the exchange.
+    Timestamps are packed as epoch seconds (int64). Runs on the grouped
+    scan (``_grouped.grouped_apply``): each key's points are compressed in
+    (ts, value) order. Pass ``assume_partitioned=True`` when rows are
+    already key-clustered to skip the exchange.
 
     ``chunk_points`` (opt-in) splits each key's series into consecutive
     chunks of at most that many points, one output row per (key, chunk)
@@ -578,7 +582,6 @@ def compress_series(
     single blob whose decode is one sequential token stream (the batch
     decoder's scalar fallback), whereas chunks decode at full lockstep
     width and re-compress independently under retention rewrites."""
-    key_cols = list(key_cols)
     by_name = {f.name: f for f in df.schema.fields}
     chunk_fields = (
         [StructField("chunk_id", LongType(), True)] if chunk_points else []
@@ -593,47 +596,23 @@ def compress_series(
         ]
     )
 
-    colnames = [f.name for f in schema.fields]
-
-    def run(batches):
-        # One sort + two array conversions per PARTITION, then pure NumPy
-        # slices per key — per-group pandas ops (sort_values/astype/iloc)
-        # cost ~1 ms each and dominate on short per-URL series.
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        if pdf.empty:
-            return
-        pdf = pdf.sort_values([*key_cols, ts_col], ignore_index=True)
-        ts_all = (pdf[ts_col].astype("int64").to_numpy() // 1_000_000_000).astype(
-            np.int64
-        )
-        vals_all = pdf[value_col].to_numpy(dtype=np.float64)
+    def run(key, arrays):
+        ts = arrays[ts_col].astype(np.int64) // 1_000_000_000
+        vals = np.asarray(arrays[value_col], dtype=np.float64)
+        step = max(chunk_points or len(ts), 1)
         rows = []
-        for key, idx in pdf.groupby(key_cols, sort=False, dropna=False).indices.items():
-            if not isinstance(key, tuple):
-                key = (key,)
-            lo, hi = idx[0], idx[-1] + 1  # contiguous after the sort
-            step = chunk_points or (hi - lo)
-            for chunk_id, c_lo in enumerate(range(lo, hi, max(step, 1))):
-                c_hi = min(c_lo + step, hi)
-                row = dict(zip(key_cols, key))
-                if chunk_points:
-                    row["chunk_id"] = chunk_id
-                row["n_points"] = c_hi - c_lo
-                row["ts_gorilla"] = compress_timestamps(ts_all[c_lo:c_hi])
-                row["val_gorilla"] = compress_values(vals_all[c_lo:c_hi])
-                rows.append(row)
-        yield pd.DataFrame(rows, columns=colnames)
+        for chunk_id, lo in enumerate(range(0, len(ts), step)):
+            t, v = ts[lo : lo + step], vals[lo : lo + step]
+            row = {"chunk_id": chunk_id} if chunk_points else {}
+            row.update(n_points=len(t), ts_gorilla=compress_timestamps(t),
+                       val_gorilla=compress_values(v))
+            rows.append(row)
+        return rows
 
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # Project BEFORE the shuffle: extra input columns would be shuffled,
-    # Arrow-converted, and concat'd in the workers for nothing.
-    slim = df.select(*key_cols, ts_col, value_col)
-    if assume_partitioned:
-        return slim.mapInPandas(run, schema)
-    return slim.repartition(n, *key_cols).mapInPandas(run, schema)
+    return grouped_apply(
+        df, key_cols, [ts_col, value_col], run, schema, num_partitions,
+        assume_partitioned,
+    )
 
 
 def decompress_series(

@@ -28,7 +28,6 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -253,7 +252,6 @@ def asap_smooth(
     vectorized NumPy per series. Like ASAP itself, assumes each key's
     series is (roughly) regularly sampled — compose with :func:`gapfill`
     first for gappy tiers."""
-    key_cols = list(key_cols)
     key_fields = [df.schema[k] for k in key_cols]
     schema = StructType(
         key_fields
@@ -269,19 +267,18 @@ def asap_smooth(
         F.col(value_col).cast("double").alias("value"),
     ).where(F.col("value").isNotNull())
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ts", kind="mergesort").reset_index(drop=True)
-        vs = pdf["value"].to_numpy(dtype=np.float64)
+    def run(key, arrays):
+        ts, vs = arrays["ts"], arrays["value"]
         w = asap_window(vs, max_window)
         sm = moving_avg(vs, w)
-        out = pdf.iloc[w - 1 :][key_cols + ["ts", "value"]].reset_index(
-            drop=True
-        )
-        out["smoothed"] = sm
-        out["window"] = np.int64(w)
-        return out
+        return {
+            "ts": ts[w - 1 :],
+            "value": vs[w - 1 :],
+            "smoothed": sm,
+            "window": np.full(len(sm), w, dtype=np.int64),
+        }
 
-    return grouped_apply(src, key_cols, run, schema, needed_cols=["ts", "value"])
+    return grouped_apply(src, key_cols, ["ts", "value"], run, schema)
 
 
 def lttb(
@@ -305,7 +302,6 @@ def lttb(
     """
     if n_out < 3:
         raise ValueError(f"n_out must be >= 3: {n_out}")
-    key_cols = list(key_cols)
     key_fields = [df.schema[k] for k in key_cols]
     schema = StructType(
         key_fields
@@ -320,13 +316,10 @@ def lttb(
         F.col(value_col).cast("double").alias("value"),
     ).where(F.col("value").isNotNull())
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ts", kind="mergesort").reset_index(drop=True)
-        ts_ns = pdf["ts"].to_numpy(dtype="datetime64[ns]").astype(np.int64)
-        vs = pdf["value"].to_numpy(dtype=np.float64)
+    def run(key, arrays):
+        ts, vs = arrays["ts"], arrays["value"]
+        ts_ns = ts.astype("datetime64[ns]").astype(np.int64)
         idx = lttb_select(ts_ns.astype(np.float64), vs, n_out)
-        out = pdf.iloc[idx][key_cols + ["ts", "value"]].reset_index(drop=True)
-        out["rank"] = np.arange(len(out), dtype=np.int64)
-        return out
+        return {"ts": ts[idx], "value": vs[idx], "rank": np.arange(len(idx), dtype=np.int64)}
 
-    return grouped_apply(src, key_cols, run, schema, needed_cols=["ts", "value"])
+    return grouped_apply(src, key_cols, ["ts", "value"], run, schema)

@@ -16,7 +16,6 @@ from statistics import NormalDist
 from typing import Callable, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -65,7 +64,6 @@ def figure_table(
     mean of the containing segment's values, the band is
     mean +- z * sample_std (z from ``confidence``; std 0 for 1-point
     segments), ``is_cpt`` marks segment-end rows."""
-    key_cols = list(key_cols)
     by_name = {f.name: f for f in df.schema.fields}
     schema = StructType(
         [StructField(c, by_name[c].dataType, True) for c in key_cols]
@@ -80,32 +78,23 @@ def figure_table(
     )
     z = NormalDist().inv_cdf(0.5 + confidence / 2.0)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        v = pdf[value_col].to_numpy(dtype=np.float64)
-        times = pdf[ts_col].to_numpy()
+    def run(key, arrays):
+        v = np.asarray(arrays[value_col], dtype=np.float64)
+        times = arrays[ts_col]
         detector = detector_factory()
         detector.fit(v, times=times)
         cpt_ts = sorted({c for _, c in detector.detections_})
         seg_mean, seg_std, is_cpt = _segment_arrays(v, times, cpt_ts)
-        out = pd.DataFrame(
-            {
-                "ts": times,
-                "value": v,
-                "segment_mean": seg_mean,
-                "is_cpt": is_cpt,
-                "band_lo": seg_mean - z * seg_std,
-                "band_hi": seg_mean + z * seg_std,
-            }
-        )
-        for c in key_cols:
-            out[c] = pdf[c].iloc[0]
-        return out[[f.name for f in schema.fields]]
+        return {
+            "ts": times,
+            "value": v,
+            "segment_mean": seg_mean,
+            "is_cpt": is_cpt,
+            "band_lo": seg_mean - z * seg_std,
+            "band_hi": seg_mean + z * seg_std,
+        }
 
-    return grouped_apply(
-        df, key_cols, run, schema, num_partitions,
-        needed_cols=[ts_col, value_col],
-    )
+    return grouped_apply(df, key_cols, [ts_col, value_col], run, schema, num_partitions)
 
 
 def figure_table_multivariate(
@@ -161,7 +150,6 @@ def figure_frames(
     steps are evenly subsampled, the final frame always kept), each at most
     the key's full series — never unbounded in the number of detections.
     """
-    key_cols = list(key_cols)
     by_name = {f.name: f for f in df.schema.fields}
     schema = StructType(
         [StructField(c, by_name[c].dataType, True) for c in key_cols]
@@ -178,10 +166,9 @@ def figure_frames(
     )
     z = NormalDist().inv_cdf(0.5 + confidence / 2.0)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        v = pdf[value_col].to_numpy(dtype=np.float64)
-        times = pdf[ts_col].to_numpy()
+    def run(key, arrays):
+        v = np.asarray(arrays[value_col], dtype=np.float64)
+        times = arrays[ts_col]
         detector = detector_factory()
         detector.fit(v, times=times)
         # steps = detection times (when each change became KNOWN), in replay
@@ -202,8 +189,9 @@ def figure_frames(
             seg_mean, seg_std, is_cpt = _segment_arrays(
                 v[:end], times[:end], known
             )
-            frame = pd.DataFrame(
+            outs.append(
                 {
+                    "frame_id": np.full(end, frame_id, dtype=np.int64),
                     "frame_ts": np.repeat(f_ts, end),
                     "ts": times[:end],
                     "value": v[:end],
@@ -213,14 +201,6 @@ def figure_frames(
                     "band_hi": seg_mean + z * seg_std,
                 }
             )
-            frame.insert(0, "frame_id", frame_id)
-            outs.append(frame)
-        out = pd.concat(outs, ignore_index=True)
-        for c in key_cols:
-            out[c] = pdf[c].iloc[0]
-        return out[[f.name for f in schema.fields]]
+        return {c: np.concatenate([o[c] for o in outs]) for c in outs[0]}
 
-    return grouped_apply(
-        df, key_cols, run, schema, num_partitions,
-        needed_cols=[ts_col, value_col],
-    )
+    return grouped_apply(df, key_cols, [ts_col, value_col], run, schema, num_partitions)

@@ -39,11 +39,13 @@ error: the chosen atom's cum-weight interval brackets the target). Default
 eps=0.005 -> a 30d p99 is within 1.5 percentile points of exact, at <= 201
 stored points (~3 KB) per sketch.
 
-Scale shape: ``sketch_tier`` is the ONE raw-scan pass (same shuffle as any
-rollup: repartition on (key, bucket), Arrow once per partition);
-``sketch_rollup`` shuffles only (key, bucket, blob) rows — m points * 16
-bytes ~ 3 KB per (key, bucket) regardless of raw cardinality, the whole
-reason the sketch path exists. ``sketch_percentiles`` is a projection.
+Scale shape: ``sketch_tier`` is the ONE raw-scan pass (one hash exchange on
+(key, bucket), then the grouped scan, ``_grouped.grouped_apply``: Arrow once
+per partition, one sort, NumPy slices per bucket); ``sketch_rollup`` and
+``sketch_hopping`` run on the same scan and shuffle only (key, bucket, blob)
+rows — m points * 16 bytes ~ 3 KB per (key, bucket) regardless of raw
+cardinality, the whole reason the sketch path exists.
+``sketch_percentiles`` is a projection.
 """
 
 from __future__ import annotations
@@ -52,10 +54,10 @@ import struct
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
+from ._grouped import grouped_apply
 from .rollup import TIER_SECONDS, bucket_col
 
 __all__ = [
@@ -115,8 +117,11 @@ def sketch_build(x: np.ndarray, eps: float) -> bytes:
 
 
 def sketch_merge(blobs: Sequence[bytes], eps: float) -> bytes:
-    """Merge child sketches into one (errors add, then one prune)."""
-    decoded = [_decode(b) for b in blobs]
+    """Merge child sketches into one (errors add, then one prune). The
+    children are merged in byte order, so the result does not depend on the
+    order they arrive in: equal values from different children keep one
+    order through the prune, and ``err`` sums in one order."""
+    decoded = [_decode(b) for b in sorted(blobs)]
     values = np.concatenate([d[2] for d in decoded])
     weights = np.concatenate([d[3] for d in decoded])
     order = np.argsort(values, kind="stable")
@@ -138,12 +143,11 @@ def sketch_query(buf: bytes, quantiles: Sequence[float]) -> list[float]:
     return out
 
 
-def _out_schema(df: DataFrame, key_cols: Sequence[str]) -> StructType:
+def _out_schema(df: DataFrame, group: Sequence[str]) -> StructType:
     by_name = {f.name: f for f in df.schema.fields}
     return StructType(
-        [StructField(c, by_name[c].dataType, True) for c in key_cols]
+        [StructField(c, by_name[c].dataType, True) for c in group]
         + [
-            StructField("bucket_start", by_name["_bucket"].dataType, True),
             StructField("n_points", LongType(), True),
             StructField("qsketch", BinaryType(), True),
         ]
@@ -160,84 +164,46 @@ def sketch_tier(
 ) -> DataFrame:
     """The raw-scan tier: (keys..., bucket_start, n_points, qsketch).
 
-    Gorilla-pattern execution (gorilla.py compress_series): project to the
-    needed columns BEFORE the shuffle, repartition on (keys, bucket), one
-    Arrow crossing + numpy per partition. NULL values are excluded (the
-    ``percentile`` convention); sketches are deterministic, so re-runs and
-    repartitionings produce byte-identical blobs.
+    Runs on the grouped scan (``_grouped.grouped_apply``) keyed by (keys,
+    bucket): only the keys, the bucket and the value cross into Python,
+    once per partition. NULL values are excluded (the ``percentile``
+    convention); sketches are deterministic, so re-runs and repartitionings
+    produce byte-identical blobs.
     """
     if tier not in TIER_SECONDS:
         raise ValueError(f"unknown tier {tier!r}: {sorted(TIER_SECONDS)}")
     if not 0.0 < eps < 1.0:
         raise ValueError(f"eps must be in (0, 1): {eps}")
-    key_cols = list(key_cols)
     from pyspark.sql import functions as F
 
     slim = df.where(F.col(value_col).isNotNull()).select(
         *key_cols,
-        bucket_col(ts_col, TIER_SECONDS[tier]).alias("_bucket"),
+        bucket_col(ts_col, TIER_SECONDS[tier]).alias("bucket_start"),
         F.col(value_col).alias("_v"),
     )
-    schema = _out_schema(slim, key_cols)
-    colnames = [f.name for f in schema.fields]
-    group = [*key_cols, "_bucket"]
+    group = [*key_cols, "bucket_start"]
 
-    def run(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        if pdf.empty:
-            return
-        vals = pdf["_v"].to_numpy(dtype=np.float64)
-        rows = []
-        for key, idx in pdf.groupby(group, sort=False, dropna=False).indices.items():
-            if not isinstance(key, tuple):
-                key = (key,)
-            row = dict(zip(group, key))
-            row["n_points"] = len(idx)
-            row["qsketch"] = sketch_build(vals[idx], eps)
-            rows.append(row)
-        out = pd.DataFrame(rows, columns=group + ["n_points", "qsketch"])
-        yield out.rename(columns={"_bucket": "bucket_start"})[colnames]
+    def run(key, arrays):
+        return [{"n_points": len(arrays["_v"]), "qsketch": sketch_build(arrays["_v"], eps)}]
 
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return slim.repartition(n, *group).mapInPandas(run, schema)
+    return grouped_apply(slim, group, ["_v"], run, _out_schema(slim, group))
 
 
-def _merge_blob_groups(
-    slim: DataFrame, key_cols: list, eps: float, out_bucket: str
-) -> DataFrame:
-    """Shared merge body for tier-from-tier and hopping merges: one Arrow
-    crossing per partition, blobs merged per (keys, _bucket) group; the
-    ``_bucket`` column is emitted under ``out_bucket``."""
-    schema = _out_schema(slim, key_cols)
-    schema.fields[len(key_cols)].name = out_bucket
-    colnames = [f.name for f in schema.fields]
-    group = [*key_cols, "_bucket"]
+def _merge_blob_groups(slim: DataFrame, group: list, eps: float) -> DataFrame:
+    """Shared merge body for tier-from-tier and hopping merges: the blobs of
+    each ``group`` key merge into one."""
 
-    def run(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        if pdf.empty:
-            return
-        blobs = pdf["qsketch"].to_numpy(dtype=object)
-        npts = pdf["n_points"].to_numpy(dtype=np.int64)
-        rows = []
-        for key, idx in pdf.groupby(group, sort=False, dropna=False).indices.items():
-            if not isinstance(key, tuple):
-                key = (key,)
-            row = dict(zip(group, key))
-            row["n_points"] = int(npts[idx].sum())
-            row["qsketch"] = sketch_merge([blobs[i] for i in idx], eps)
-            rows.append(row)
-        out = pd.DataFrame(rows, columns=group + ["n_points", "qsketch"])
-        yield out.rename(columns={"_bucket": out_bucket})[colnames]
+    def run(key, arrays):
+        return [
+            {
+                "n_points": int(arrays["n_points"].sum()),
+                "qsketch": sketch_merge(list(arrays["qsketch"]), eps),
+            }
+        ]
 
-    n = slim.sparkSession.sparkContext.defaultParallelism
-    return slim.repartition(n, *group).mapInPandas(run, schema)
+    return grouped_apply(
+        slim, group, ["n_points", "qsketch"], run, _out_schema(slim, group)
+    )
 
 
 def sketch_rollup(
@@ -252,15 +218,13 @@ def sketch_rollup(
     :func:`sketch_rollup`)."""
     if to_tier not in TIER_SECONDS:
         raise ValueError(f"unknown tier {to_tier!r}: {sorted(TIER_SECONDS)}")
-    key_cols = list(key_cols)
-
     slim = tier_df.select(
         *key_cols,
-        bucket_col("bucket_start", TIER_SECONDS[to_tier]).alias("_bucket"),
+        bucket_col("bucket_start", TIER_SECONDS[to_tier]).alias("bucket_start"),
         "n_points",
         "qsketch",
     )
-    return _merge_blob_groups(slim, key_cols, eps, "bucket_start")
+    return _merge_blob_groups(slim, [*key_cols, "bucket_start"], eps)
 
 
 def sketch_hopping(
@@ -303,14 +267,13 @@ def sketch_hopping(
                 f"tier {tier!r} ({step}s): buckets would straddle window "
                 "edges; rebuild the tier at a finer granularity instead"
             )
-    key_cols = list(key_cols)
     slim = tier_df.select(
         *key_cols,
-        F.window("bucket_start", width, slide).start.alias("_bucket"),
+        F.window("bucket_start", width, slide).start.alias("window_start"),
         "n_points",
         "qsketch",
     )
-    return _merge_blob_groups(slim, key_cols, eps, "window_start")
+    return _merge_blob_groups(slim, [*key_cols, "window_start"], eps)
 
 
 def sketch_percentiles(

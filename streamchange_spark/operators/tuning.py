@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..kernels.tuners import GridPenaltyTuner
+from ._grouped import grouped_apply
+from .detect import _values
 
 
 def grid_detection_counts(
@@ -38,7 +40,6 @@ def grid_detection_counts(
 ) -> DataFrame:
     """(keys..., penalty_scale, detection_count): one detector run per
     (key, scale) pair, all pairs in one Spark job."""
-    key_cols = list(key_cols)
     by_name = {f.name: f for f in df.schema.fields}
     schema = StructType(
         [StructField(c, by_name[c].dataType, True) for c in key_cols]
@@ -52,26 +53,13 @@ def grid_detection_counts(
     )
     fanned = df.crossJoin(F.broadcast(scales_df))
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        scale = float(pdf["penalty_scale"].iloc[0])
+    def run(key, arrays):
         detector = detector_factory()
-        detector.get_penalty().scale = scale
-        values = (
-            pdf[value_cols[0]].to_numpy(dtype=np.float64)
-            if len(value_cols) == 1
-            else pdf[list(value_cols)].to_numpy(dtype=np.float64)
-        )
-        count = len(detector.fit_predict(values))
-        row = {c: pdf[c].iloc[0] for c in key_cols}
-        row.update({"penalty_scale": scale, "detection_count": count})
-        return [row]
-
-    from ._grouped import grouped_apply
+        detector.get_penalty().scale = float(key[-1])
+        return [{"detection_count": len(detector.fit_predict(_values(arrays, value_cols)))}]
 
     return grouped_apply(
-        fanned, [*key_cols, "penalty_scale"], run, schema, None, returns="rows",
-        needed_cols=[ts_col, *value_cols],
+        fanned, [*key_cols, "penalty_scale"], [ts_col, *value_cols], run, schema
     )
 
 

@@ -1498,13 +1498,13 @@ def test_pipeline_refresh_purge_keep_their_families_jobs_and_files(
     assert list(store.manifest()["files"]) == [
         f"{fam}/{day}" for day in days for fam in TIER_FAMILIES
     ]
-    assert (r1["days_built"], jobs, files) == (len(days), 144, 81)
+    assert (r1["days_built"], jobs, files) == (len(days), 144, 82)
 
     r2, jobs, files = jobs_and_new_files(
         "refresh", lambda: refresh_pipeline(spark, late, store_dir)
     )
     assert r2["merged_days"] == days
-    assert (jobs, files) == (156, 105)
+    assert (jobs, files) == (156, 104)
 
     victim = sorted(r["url"] for r in pages.select("url").distinct().collect())[0]
     report = purge_url(spark, store, victim, pages=pages)

@@ -317,6 +317,25 @@ def test_qsketch_exact_when_small():
     assert sketch_query(blob, [0.5, 0.99, 1.0]) == [49.0, 98.0, 99.0]
 
 
+def test_qsketch_merge_ignores_child_order():
+    """Every order of the same children merges to the same bytes: equal
+    values from different children must not keep their arrival order
+    through the prune (refresh and hopping merges arrive in shuffle
+    order)."""
+    from itertools import permutations
+
+    from streamchange_spark.operators.qsketch import sketch_build, sketch_merge
+
+    rng = np.random.RandomState(17)
+    # Few distinct values -> many ties across children, each child pruned.
+    blobs = [
+        sketch_build(rng.randint(0, 40, 1050).astype(float) + shift, 0.005)
+        for shift in (0.0, 0.5, 3.0)
+    ]
+    merged = {sketch_merge(list(order), 0.005) for order in permutations(blobs)}
+    assert len(merged) == 1
+
+
 def test_qsketch_tiers_spark(spark, points_df):
     """sketch_tier -> sketch_rollup(1d) -> sketch_rollup(30d) on Spark:
     n_points matches the exact rollup per tier, blobs are deterministic
