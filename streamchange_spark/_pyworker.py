@@ -19,9 +19,10 @@ archive cannot be stat'ed, the original method runs.
 
 The package ``__init__`` calls :func:`install`, so the guard lands in any
 worker that unpickles a function referencing an engine module global, and a
-reused worker keeps it for its lifetime. A worker that has only run tasks
-pickling no engine global (``dedup.shingle_rows_local``'s ``run``) has not
-imported the package and keeps the stock behaviour.
+reused worker keeps it for its lifetime. Every engine UDF does: a stage
+function whose body needs no engine global (``dedup.shingle_rows_local``)
+calls a module-level function of its module, so unpickling it imports the
+package too.
 
 It is a no-op:
 

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._sql import idents
+
 
 def _key_starts(keys: list[np.ndarray]) -> np.ndarray:
     """Start index of each run of equal keys in key-sorted arrays (nulls
@@ -75,7 +77,9 @@ def grouped_apply(
     key_cols, cols = list(key_cols), list(cols)
     # Project before the shuffle: unused columns would be shuffled,
     # Arrow-converted, and concat'd in every worker for nothing.
-    df = df.select(*dict.fromkeys([*key_cols, *cols]))
+    needed = list(dict.fromkeys([*key_cols, *cols]))
+    if df.columns != needed:
+        df = df.selectExpr(*idents(needed))
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     colnames = [f.name for f in schema.fields]
     key_names, out_names = colnames[: len(key_cols)], colnames[len(key_cols):]
@@ -135,5 +139,6 @@ def grouped_apply(
         return df.mapInPandas(run, schema)
     # Partition ids, not a hash repartition on this bucket expression: that
     # would re-hash n bucket values onto n partitions, and they collide.
-    bucket = F.pmod(F.xxhash64(*key_cols), F.lit(n)).cast("int")
+    keys = ", ".join(idents(key_cols))
+    bucket = F.expr(f"CAST(pmod(xxhash64({keys}), {n}) AS INT)")
     return df.repartitionById(n, bucket).mapInPandas(run, schema)

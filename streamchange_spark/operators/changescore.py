@@ -43,9 +43,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._sql import ident, over
 from .dedup import minhash_signatures
 
 __all__ = [
@@ -106,29 +107,28 @@ def change_scores_from_signatures(
     the same single exchange the per-url detector scan needs anyway."""
     if num_hashes < 1:
         raise ValueError(f"num_hashes must be >= 1: {num_hashes}")
-    w = Window.partitionBy(url_col).orderBy(ts_col)
-    prev_md5 = F.lag("text_md5").over(w)
-    changed = F.when(prev_md5.isNotNull(), F.col("text_md5") != prev_md5)
-    matches = None
-    for i in range(num_hashes):
-        hit = F.when(F.col(f"mh_{i}") == F.lag(f"mh_{i}").over(w), 1).otherwise(0)
-        matches = hit if matches is None else matches + hit
-    both_sigs = F.col("mh_0").isNotNull() & F.lag("mh_0").over(w).isNotNull()
-    jaccard_est = F.when(
-        both_sigs, matches.cast("double") / F.lit(float(num_hashes))
+    w = over([url_col], ident(ts_col))
+    prev_md5 = f"lag(text_md5) {w}"
+    changed = f"(CASE WHEN {prev_md5} IS NOT NULL THEN text_md5 != {prev_md5} END)"
+    matches = " + ".join(
+        f"CASE WHEN mh_{i} = lag(mh_{i}) {w} THEN 1 ELSE 0 END"
+        for i in range(num_hashes)
+    )
+    jaccard_est = (
+        f"(CASE WHEN mh_0 IS NOT NULL AND lag(mh_0) {w} IS NOT NULL "
+        f"THEN CAST({matches} AS DOUBLE) / {float(num_hashes)!r}D END)"
     )
     change_score = (
-        F.when(changed.isNull(), F.lit(None).cast("double"))
-        .when(~changed, F.lit(0.0))
-        .otherwise(F.lit(1.0) - jaccard_est)
+        f"CASE WHEN {changed} IS NULL THEN CAST(NULL AS DOUBLE) "
+        f"WHEN NOT {changed} THEN 0.0D ELSE 1.0D - {jaccard_est} END"
     )
-    return sig_df.select(
-        url_col,
-        ts_col,
+    return sig_df.selectExpr(
+        ident(url_col),
+        ident(ts_col),
         "text_len",
-        changed.alias("changed"),
-        jaccard_est.alias("jaccard_est"),
-        change_score.alias("change_score"),
+        f"{changed} AS changed",
+        f"{jaccard_est} AS jaccard_est",
+        f"{change_score} AS change_score",
     )
 
 

@@ -122,50 +122,56 @@ def shingle_rows_local(
     100 TB the token shuffle is the dominant cost, so this is the scale
     default; the window plan is kept for comparison (see
     tools/bench_shingle.py numbers in BASELINE.md)."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
 
     id_field = next(f for f in df.schema.fields if f.name == id_col)
     schema = StructType([id_field, StructField("shingle", StringType(), True)])
 
+    # The stage calls a module-level function, so unpickling it imports the
+    # engine package in the worker (and with it the _pyworker guard).
     def run(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            toks = [
-                [t for t in _WS.split(s.lower()) if t]
-                for s in pdf[text_col].fillna("").astype(str)
-            ]
-            lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=len(toks))
-            total = int(lens.sum())
-            if total == 0:
-                continue
-            flat = np.empty(total, dtype=object)
-            off = 0
-            for t in toks:
-                flat[off : off + len(t)] = t
-                off += len(t)
-            ids_rep = np.repeat(pdf[id_col].to_numpy(), lens)
-            starts = np.cumsum(lens) - lens
-            pos = np.arange(total) - np.repeat(starts, lens)
-            # n-gram starting at flat[i] is valid iff it stays inside its doc
-            valid = (pos + n) <= np.repeat(lens, lens)
-            head = total - (n - 1)
-            if head <= 0:
-                continue
-            sh = flat[:head]
-            for i in range(1, n):
-                sh = sh + " "
-                sh = sh + flat[i : head + i]
-            keep = valid[:head]
-            if not keep.any():
-                continue
-            yield pd.DataFrame(
-                {id_col: ids_rep[:head][keep], "shingle": sh[keep]}
-            )
+        return _shingle_batches(batches, id_col, text_col, n)
 
     return df.select(id_col, text_col).mapInPandas(run, schema)
+
+
+def _shingle_batches(batches, id_col: str, text_col: str, n: int):
+    """:func:`shingle_rows_local`'s per-partition body."""
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        toks = [
+            [t for t in _WS.split(s.lower()) if t]
+            for s in pdf[text_col].fillna("").astype(str)
+        ]
+        lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=len(toks))
+        total = int(lens.sum())
+        if total == 0:
+            continue
+        flat = np.empty(total, dtype=object)
+        off = 0
+        for t in toks:
+            flat[off : off + len(t)] = t
+            off += len(t)
+        ids_rep = np.repeat(pdf[id_col].to_numpy(), lens)
+        starts = np.cumsum(lens) - lens
+        pos = np.arange(total) - np.repeat(starts, lens)
+        # n-gram starting at flat[i] is valid iff it stays inside its doc
+        valid = (pos + n) <= np.repeat(lens, lens)
+        head = total - (n - 1)
+        if head <= 0:
+            continue
+        sh = flat[:head]
+        for i in range(1, n):
+            sh = sh + " "
+            sh = sh + flat[i : head + i]
+        keep = valid[:head]
+        if not keep.any():
+            continue
+        yield pd.DataFrame({id_col: ids_rep[:head][keep], "shingle": sh[keep]})
 
 
 def _shingler(name: str):

@@ -24,6 +24,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._sql import ident
+
 HOUR = 3600
 DAY = 86400
 DAYS_30 = 30 * 86400
@@ -43,11 +45,35 @@ TIER_STATE_COLS = [
 ]
 
 
+#: Aggregates merging finer tier rows into one coarser row, as SQL.
+_TIER_MERGE = (
+    "sum(n_points) AS n_points",
+    "sum(sum_v) AS sum_v",
+    "min(min_v) AS min_v",
+    "max(max_v) AS max_v",
+    "min(first_ts) AS first_ts",
+    "min_by(first_v, first_ts) AS first_v",
+    "max(last_ts) AS last_ts",
+    "max_by(last_v, last_ts) AS last_v",
+)
+
+
+def bucket_sql(ts_col: str, seconds: int) -> str:
+    """Epoch-floor bucket of ``ts_col`` as a SQL timestamp expression."""
+    return (
+        f"timestamp_seconds(CAST(unix_timestamp({ident(ts_col)}) / {int(seconds)} "
+        f"AS BIGINT) * {int(seconds)})"
+    )
+
+
 def bucket_col(ts_col: str, seconds: int):
     """Epoch-floor bucket as a timestamp column (codegen-friendly, no UDF)."""
-    return F.timestamp_seconds(
-        (F.unix_timestamp(F.col(ts_col)) / seconds).cast("long") * seconds
-    )
+    return F.expr(bucket_sql(ts_col, seconds))
+
+
+def _merge_tier_rows(df: DataFrame, key_cols: Sequence[str], bucket) -> DataFrame:
+    """One row per (keys, ``bucket``) holding the merged tier state."""
+    return df.groupBy(*key_cols, bucket).agg(*[F.expr(a) for a in _TIER_MERGE])
 
 
 _INTERVAL_UNIT_SECONDS = {
@@ -122,22 +148,8 @@ def rollup_tier(
     """Re-aggregate a finer tier into a coarser one using only the finer
     tier's associative state (the continuous-aggregate property: no raw
     scan)."""
-    seconds = TIER_SECONDS[tier]
-    return (
-        tier_df.groupBy(
-            *key_cols, bucket_col("bucket_start", seconds).alias("bucket_start")
-        )
-        .agg(
-            F.sum("n_points").alias("n_points"),
-            F.sum("sum_v").alias("sum_v"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-            F.min("first_ts").alias("first_ts"),
-            F.min_by("first_v", F.col("first_ts")).alias("first_v"),
-            F.max("last_ts").alias("last_ts"),
-            F.max_by("last_v", F.col("last_ts")).alias("last_v"),
-        )
-    )
+    bucket = bucket_sql("bucket_start", TIER_SECONDS[tier])
+    return _merge_tier_rows(tier_df, key_cols, F.expr(f"{bucket} AS bucket_start"))
 
 
 def merge_tier(
@@ -162,19 +174,7 @@ def merge_tier(
     merged = tier_dfs[0]
     for t in tier_dfs[1:]:
         merged = merged.unionByName(t)
-    return (
-        merged.groupBy(*key_cols, "bucket_start")
-        .agg(
-            F.sum("n_points").alias("n_points"),
-            F.sum("sum_v").alias("sum_v"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-            F.min("first_ts").alias("first_ts"),
-            F.min_by("first_v", F.col("first_ts")).alias("first_v"),
-            F.max("last_ts").alias("last_ts"),
-            F.max_by("last_v", F.col("last_ts")).alias("last_v"),
-        )
-    )
+    return _merge_tier_rows(merged, key_cols, "bucket_start")
 
 
 def rollup_all_tiers(

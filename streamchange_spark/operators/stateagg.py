@@ -55,7 +55,15 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._sql import ident, idents, over
 from .rollup import TIER_SECONDS, bucket_col
+
+#: A run row's endpoint observations (one when it starts and ends at once).
+_RUN_ENDPOINTS = (
+    "explode(IF(run_end_us > run_start_us, "
+    "array(timestamp_micros(run_start_us), timestamp_micros(run_end_us)), "
+    "array(timestamp_micros(run_start_us))))"
+)
 
 
 def _split_spans(
@@ -68,44 +76,49 @@ def _split_spans(
     """Explode ``[_s, _e)`` microsecond spans into one row per overlapped
     bucket with the exact integer-microsecond overlap, plus ``_first``/
     ``_last`` markers for start/end-attributed counters."""
-    b0 = F.expr(f"_s div {bucket_us}")
-    b1 = F.expr(f"(_e - 1) div {bucket_us}")
-    n_buckets = b1 - b0 + F.lit(1)
-    guarded = F.when(
-        n_buckets > F.lit(max_span_buckets),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"state/heartbeat span overlaps more than {max_span_buckets} "
-                    "buckets (span "
-                ),
-                F.col("_s").cast("string"),
-                F.lit(".."),
-                F.col("_e").cast("string"),
-                F.lit(" us); check the timestamp unit or raise max_span_buckets"),
-            )
-        ).cast("long"),
-    ).otherwise(b1)
-    exploded = spans.select(
-        *key_cols,
-        *extra_cols,
-        "_s",
-        "_e",
-        F.explode(F.sequence(b0, guarded)).alias("_b"),
+    keep = idents([*key_cols, *extra_cols])
+    b0, b1 = f"_s div {bucket_us}", f"(_e - 1) div {bucket_us}"
+    msg = (
+        f"concat('state/heartbeat span overlaps more than {max_span_buckets} "
+        "buckets (span ', CAST(_s AS STRING), '..', CAST(_e AS STRING), ' us); "
+        "check the timestamp unit or raise max_span_buckets')"
     )
-    overlap = F.least(
-        F.col("_e"), (F.col("_b") + 1) * F.lit(bucket_us)
-    ) - F.greatest(F.col("_s"), F.col("_b") * F.lit(bucket_us))
-    return exploded.select(
-        *key_cols,
-        *extra_cols,
-        F.timestamp_seconds(F.col("_b") * F.lit(bucket_us // 1_000_000)).alias(
-            "bucket_start"
-        ),
-        overlap.alias("_held_us"),
-        (F.col("_b") * F.lit(bucket_us) <= F.col("_s")).alias("_first"),
-        ((F.col("_b") + 1) * F.lit(bucket_us) >= F.col("_e")).alias("_last"),
+    guarded = (
+        f"CASE WHEN {b1} - {b0} + 1 > {max_span_buckets} "
+        f"THEN CAST(raise_error({msg}) AS BIGINT) ELSE {b1} END"
     )
+    lo, hi = f"_b * {bucket_us}", f"(_b + 1) * {bucket_us}"
+    return spans.selectExpr(
+        *keep, "_s", "_e", f"explode(sequence({b0}, {guarded})) AS _b"
+    ).selectExpr(
+        *keep,
+        f"timestamp_seconds(_b * {bucket_us // 1_000_000}) AS bucket_start",
+        f"least(_e, {hi}) - greatest(_s, {lo}) AS _held_us",
+        f"{lo} <= _s AS _first",
+        f"{hi} >= _e AS _last",
+    )
+
+
+def _locf_spans(
+    df: DataFrame, key_cols: Sequence[str], ts_col: str, value: str, alias: str
+) -> DataFrame:
+    """One LOCF span ``[_s, _e)`` per observation with a later one, in
+    microseconds, carrying ``value`` (SQL over the input) as ``alias``.
+    Rows of a ``(key, ts)`` tie all carry the tie's greatest value, and
+    only the tie's last row opens a non-empty span, so the spans do not
+    depend on the input's row order. The window sorts on ``ts_col`` alone:
+    a layout sorted by (key, ts) needs no Sort."""
+    w = over(key_cols, ident(ts_col))
+    peers = over(
+        key_cols, ident(ts_col), "RANGE BETWEEN CURRENT ROW AND CURRENT ROW"
+    )
+    s_us = f"unix_micros(CAST({ident(ts_col)} AS TIMESTAMP))"
+    return df.selectExpr(
+        *idents(key_cols),
+        f"max({value}) {peers} AS {alias}",
+        f"{s_us} AS _s",
+        f"lead({s_us}) {w} AS _e",
+    ).where("_e > _s")
 
 
 def state_tier(
@@ -129,25 +142,15 @@ def state_tier(
     layout sorted by (key, ts) needs no Sort): every row of a ``ts`` tie
     carries the tie's greatest state, and only the tie's last row opens a
     non-empty span."""
-    seconds = TIER_SECONDS[tier]
-    bucket_us = seconds * 1_000_000
-    w = Window.partitionBy(*key_cols).orderBy(ts_col)
-    ts_peers = w.rangeBetween(Window.currentRow, Window.currentRow)
-    s_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    spans = (
-        df.where(F.col(state_col).isNotNull())
-        .select(
-            *key_cols,
-            F.max(state_col).over(ts_peers).alias("state"),
-            s_us.alias("_s"),
-            F.lead(s_us).over(w).alias("_e"),
-        )
-        .where(F.col("_e") > F.col("_s"))
+    bucket_us = TIER_SECONDS[tier] * 1_000_000
+    state = ident(state_col)
+    spans = _locf_spans(
+        df.where(f"{state} IS NOT NULL"), key_cols, ts_col, state, "state"
     )
     split = _split_spans(spans, key_cols, bucket_us, max_span_buckets, ["state"])
     return split.groupBy(*key_cols, "bucket_start", "state").agg(
-        F.sum("_held_us").alias("held_us"),
-        F.sum(F.when(F.col("_first"), 1).otherwise(0)).alias("n_spans"),
+        F.expr("sum(_held_us) AS held_us"),
+        F.expr("sum(CASE WHEN _first THEN 1 ELSE 0 END) AS n_spans"),
     )
 
 
@@ -205,25 +208,16 @@ def twa_tier(
     Duplicate ``(key, ts)`` observations follow :func:`state_tier`'s rule:
     every row of a ``ts`` tie carries the tie's greatest value, so that
     value holds the following span whatever the input's partition order."""
-    seconds = TIER_SECONDS[tier]
-    bucket_us = seconds * 1_000_000
-    w = Window.partitionBy(*key_cols).orderBy(ts_col)
-    ts_peers = w.rangeBetween(Window.currentRow, Window.currentRow)
-    s_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    spans = (
-        df.where(F.col(value_col).isNotNull())
-        .select(
-            *key_cols,
-            F.max(F.col(value_col).cast("double")).over(ts_peers).alias("_v"),
-            s_us.alias("_s"),
-            F.lead(s_us).over(w).alias("_e"),
-        )
-        .where(F.col("_e") > F.col("_s"))
+    bucket_us = TIER_SECONDS[tier] * 1_000_000
+    value = ident(value_col)
+    spans = _locf_spans(
+        df.where(f"{value} IS NOT NULL"), key_cols, ts_col,
+        f"CAST({value} AS DOUBLE)", "_v",
     )
     split = _split_spans(spans, key_cols, bucket_us, max_span_buckets, ["_v"])
     return split.groupBy(*key_cols, "bucket_start").agg(
-        F.sum("_held_us").alias("held_us"),
-        F.sum(F.col("_v") * F.col("_held_us").cast("double")).alias("wsum"),
+        F.expr("sum(_held_us) AS held_us"),
+        F.expr("sum(_v * CAST(_held_us AS DOUBLE)) AS wsum"),
     )
 
 
@@ -329,21 +323,7 @@ def state_tier_from_runs(
     bit-for-bit whenever no late row landed inside a collapsed run (always,
     for ``collapse=False`` runs); ``n_spans`` counts the stored observation
     set's spans."""
-    key_cols = list(key_cols)
-    obs = runs.select(
-        *key_cols,
-        "state",
-        F.explode(
-            F.when(
-                F.col("run_end_us") > F.col("run_start_us"),
-                F.array("run_start_us", "run_end_us"),
-            ).otherwise(F.array("run_start_us"))
-        ).alias("_ts_us"),
-    ).select(
-        *key_cols,
-        F.timestamp_micros(F.col("_ts_us")).alias("_ts"),
-        "state",
-    )
+    obs = runs.selectExpr(*idents(key_cols), "state", f"{_RUN_ENDPOINTS} AS _ts")
     return state_tier(
         obs, key_cols, "_ts", "state", tier, max_span_buckets=max_span_buckets
     )
@@ -360,30 +340,31 @@ def heartbeat_tier(
     """Per-(key, bucket) liveness from heartbeats: up_us (long — union of
     per-heartbeat tolerance windows overlapping the bucket), n_heartbeats
     (heartbeats whose up-span starts in the bucket), n_gaps (downtime
-    onsets attributed to the bucket where the up-span ends)."""
-    seconds = TIER_SECONDS[tier]
-    bucket_us = seconds * 1_000_000
+    onsets attributed to the bucket where the up-span ends).
+
+    Duplicate ``(key, ts)`` heartbeats count once: the tie's earlier rows
+    reach the next row at the same instant, so their up-spans are empty
+    and dropped, and only the tie's last row opens a span (to the next
+    distinct ``ts``). All rows of a tie carry the same values, so the
+    result does not depend on the input's row order."""
+    bucket_us = TIER_SECONDS[tier] * 1_000_000
     tol_us = int(round(tolerance_s * 1_000_000))
     if tol_us <= 0:
         raise ValueError("tolerance_s must be positive")
-    w = Window.partitionBy(*key_cols).orderBy(ts_col)
-    s_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    next_us = F.lead(s_us).over(w)
-    e_us = F.least(F.coalesce(next_us, s_us + F.lit(tol_us)), s_us + F.lit(tol_us))
-    gap = F.coalesce(next_us > s_us + F.lit(tol_us), F.lit(False))
-    spans = df.select(
-        *key_cols,
-        s_us.alias("_s"),
-        e_us.alias("_e"),
-        gap.alias("_gap"),
-    ).where(F.col("_e") > F.col("_s"))
+    s_us = f"unix_micros(CAST({ident(ts_col)} AS TIMESTAMP))"
+    next_us = f"lead({s_us}) {over(key_cols, ident(ts_col))}"
+    until = f"{s_us} + {tol_us}"
+    spans = df.selectExpr(
+        *idents(key_cols),
+        f"{s_us} AS _s",
+        f"least(coalesce({next_us}, {until}), {until}) AS _e",
+        f"coalesce({next_us} > {until}, false) AS _gap",
+    ).where("_e > _s")
     split = _split_spans(spans, key_cols, bucket_us, max_span_buckets, ["_gap"])
     return split.groupBy(*key_cols, "bucket_start").agg(
-        F.sum("_held_us").alias("up_us"),
-        F.sum(F.when(F.col("_first"), 1).otherwise(0)).alias("n_heartbeats"),
-        F.sum(F.when(F.col("_last") & F.col("_gap"), 1).otherwise(0)).alias(
-            "n_gaps"
-        ),
+        F.expr("sum(_held_us) AS up_us"),
+        F.expr("sum(CASE WHEN _first THEN 1 ELSE 0 END) AS n_heartbeats"),
+        F.expr("sum(CASE WHEN _last AND _gap THEN 1 ELSE 0 END) AS n_gaps"),
     )
 
 
@@ -405,16 +386,7 @@ def heartbeat_tier_from_runs(
     is undercounted (the stored evidence cannot distinguish a dense run
     from a sparse one), so collapse only feeds this when heartbeat cadence
     is not the question."""
-    key_cols = list(key_cols)
-    obs = runs.select(
-        *key_cols,
-        F.explode(
-            F.when(
-                F.col("run_end_us") > F.col("run_start_us"),
-                F.array("run_start_us", "run_end_us"),
-            ).otherwise(F.array("run_start_us"))
-        ).alias("_ts_us"),
-    ).select(*key_cols, F.timestamp_micros(F.col("_ts_us")).alias("_ts"))
+    obs = runs.selectExpr(*idents(key_cols), f"{_RUN_ENDPOINTS} AS _ts")
     return heartbeat_tier(
         obs, key_cols, "_ts", tier,
         tolerance_s=tolerance_s, max_span_buckets=max_span_buckets,

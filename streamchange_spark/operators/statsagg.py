@@ -45,7 +45,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .rollup import TIER_SECONDS, bucket_col
+from ._sql import idents
+from .rollup import TIER_SECONDS, bucket_col, bucket_sql
 
 SUM_COLS = ("n", "sum_x", "sum_y", "sum_xx", "sum_xy", "sum_yy")
 
@@ -98,30 +99,22 @@ def stats_rollup(
     partial's x-origin from its own bucket start to the coarser bucket's
     (``c`` = offset seconds; see module docstring), then a pure GROUP-BY
     SUM. Never a raw re-scan."""
-    seconds = TIER_SECONDS[tier]
-    coarse = bucket_col("bucket_start", seconds)
-    c = (
-        F.unix_timestamp(F.col("bucket_start")) - F.unix_timestamp(coarse)
-    ).cast("double")
-    n = F.col("n").cast("double")
+    coarse = bucket_sql("bucket_start", TIER_SECONDS[tier])
+    c = f"CAST(unix_timestamp(bucket_start) - unix_timestamp({coarse}) AS DOUBLE)"
+    n = "CAST(n AS DOUBLE)"
     return (
-        tier_df.select(
-            *key_cols,
-            coarse.alias("bucket_start"),
-            F.col("n").alias("n"),
-            (F.col("sum_x") + n * c).alias("sum_x"),
-            F.col("sum_y").alias("sum_y"),
-            (
-                F.col("sum_xx") + 2.0 * c * F.col("sum_x") + n * c * c
-            ).alias("sum_xx"),
-            (F.col("sum_xy") + c * F.col("sum_y")).alias("sum_xy"),
-            F.col("sum_yy").alias("sum_yy"),
+        tier_df.selectExpr(
+            *idents(key_cols),
+            f"{coarse} AS bucket_start",
+            "n",
+            f"sum_x + {n} * {c} AS sum_x",
+            "sum_y",
+            f"sum_xx + 2.0D * {c} * sum_x + {n} * {c} * {c} AS sum_xx",
+            f"sum_xy + {c} * sum_y AS sum_xy",
+            "sum_yy",
         )
         .groupBy(*key_cols, "bucket_start")
-        .agg(
-            F.sum("n").alias("n"),
-            *[F.sum(col).alias(col) for col in SUM_COLS[1:]],
-        )
+        .agg(*[F.expr(f"sum({col}) AS {col}") for col in SUM_COLS])
     )
 
 
@@ -132,33 +125,30 @@ def stats_eval(df: DataFrame, slope_per: float = 3600.0) -> DataFrame:
     ``r2``, and ``stddev_y``
     (sample). NULL where undefined (n < 2, zero x- or y-variance for R²),
     matching SQL ``regr_slope`` / ``regr_r2`` semantics."""
-    n = F.col("n").cast("double")
-    sxx = n * F.col("sum_xx") - F.col("sum_x") * F.col("sum_x")
-    syy = n * F.col("sum_yy") - F.col("sum_y") * F.col("sum_y")
-    sxy = n * F.col("sum_xy") - F.col("sum_x") * F.col("sum_y")
+    n = "CAST(n AS DOUBLE)"
+    sxx = f"({n} * sum_xx - sum_x * sum_x)"
+    syy = f"({n} * sum_yy - sum_y * sum_y)"
+    sxy = f"({n} * sum_xy - sum_x * sum_y)"
     # Degenerate buckets (n < 2, or no real x-variance) must be NULL, not
     # a ratio of rounding residue: after the tier-merge origin shift the
     # mathematically-zero sxx of a single-point bucket evaluates to ~ulp
     # instead of exact 0, so the zero test is RELATIVE to the moment's own
     # magnitude, not an equality.
-    no_x_var = (F.col("n") < 2) | (
-        sxx <= F.lit(1e-9) * F.greatest(n * F.col("sum_xx"), F.lit(1.0))
-    )
-    no_y_var = syy <= F.lit(1e-9) * F.greatest(n * F.col("sum_yy"), F.lit(1.0))
-    null_d = F.lit(None).cast("double")
-    slope_sec = F.when(no_x_var, null_d).otherwise(sxy / sxx)
+    no_x_var = f"(n < 2 OR {sxx} <= 1.0E-9D * greatest({n} * sum_xx, 1.0D))"
+    no_y_var = f"{syy} <= 1.0E-9D * greatest({n} * sum_yy, 1.0D)"
+    null = "CAST(NULL AS DOUBLE)"
+    slope_sec = f"(CASE WHEN {no_x_var} THEN {null} ELSE {sxy} / {sxx} END)"
     # the PostgreSQL/DuckDB regr_r2 convention: NULL when x has no
-    # variance, 1.0 when y is constant but x is not
-    r2 = F.when(no_x_var, null_d).otherwise(
-        F.when(no_y_var, F.lit(1.0)).otherwise(
-            F.least((sxy * sxy) / (sxx * syy), F.lit(1.0))  # ≤1 by math
-        )
+    # variance, 1.0 when y is constant but x is not; the ratio is ≤ 1 by math
+    r2 = (
+        f"CASE WHEN {no_x_var} THEN {null} "
+        f"ELSE CASE WHEN {no_y_var} THEN 1.0D "
+        f"ELSE least(({sxy} * {sxy}) / ({sxx} * {syy}), 1.0D) END END"
     )
-    var_y = syy / F.nullif(n * (n - 1), F.lit(0.0))
-    return df.select(
-        *df.columns,
-        (slope_sec * F.lit(slope_per)).alias("slope"),
-        ((F.col("sum_y") - slope_sec * F.col("sum_x")) / n).alias("intercept"),
-        r2.alias("r2"),
-        F.sqrt(var_y).alias("stddev_y"),
+    return df.selectExpr(
+        "*",
+        f"{slope_sec} * {float(slope_per)!r}D AS slope",
+        f"(sum_y - {slope_sec} * sum_x) / {n} AS intercept",
+        f"{r2} AS r2",
+        f"sqrt({syy} / nullif({n} * ({n} - 1), 0.0D)) AS stddev_y",
     )

@@ -46,6 +46,7 @@ from .operators import (
     stats_tier,
     window_segmentor_changepoints,
 )
+from .operators._sql import string
 from .sources.snapshots import SnapshotStore
 
 
@@ -377,22 +378,20 @@ def read_lang_state_tier(
     hi_us = int((end - epoch).total_seconds()) * 1_000_000 + h_us
     # assert_true yields NULL when the check holds, so the per-observation
     # check rides the same scan and adds no job.
+    collapsed = string(
+        "read_lang_state_tier needs per-observation runs (collapse=False); "
+        f"{prefix} holds a collapsed run"
+    )
     runs = store.read(
         spark, prefix=prefix, ranges={"run_start_us": (lo_us, hi_us)}
     ).where(
-        F.col("run_start_us").between(lo_us, hi_us)
-        & F.assert_true(
-            F.col("run_end_us") == F.col("run_start_us"),
-            F.lit("read_lang_state_tier needs per-observation runs "
-                  f"(collapse=False); {prefix} holds a collapsed run"),
-        ).isNull()
+        f"run_start_us BETWEEN {lo_us} AND {hi_us} AND "
+        f"assert_true(run_end_us = run_start_us, {collapsed}) IS NULL"
     )
     tiers = state_tier_from_runs(runs, list(key_cols), tier)
     return tiers.where(
-        (F.col("bucket_start") >= F.lit(start_day).cast("timestamp"))
-        & (F.col("bucket_start") < F.timestamp_seconds(
-            F.lit(int((end - epoch).total_seconds()))
-        ))
+        f"bucket_start >= CAST({string(start_day)} AS TIMESTAMP) AND "
+        f"bucket_start < timestamp_seconds({int((end - epoch).total_seconds())})"
     )
 
 

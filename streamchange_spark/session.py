@@ -5,6 +5,18 @@ coalescing + skew-join splitting), Arrow for all pandas UDF traffic, UTC
 session timezone (required for byte-identical comparison against UTC-naive
 DuckDB oracles), shuffle parallelism sized to cores instead of the 200
 default.
+
+DataFrame call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+PySpark wraps every DataFrame, Column and ``functions`` call in
+``_with_origin``, which costs about five extra Py4J round trips per call
+(the active session, a conf read, the ``PySparkCurrentOrigin`` lookup, its
+``set`` and ``clear``) plus a failed ``import IPython`` that rescans
+``sys.path``. Building one tier query makes hundreds of such calls, so the
+capture cost the driver about as much as planning the query. What error
+messages lose: an analysis or runtime error no longer names the Python
+file and line of the DataFrame call in its query context; the message,
+the error class and the Python traceback are unchanged.
 """
 
 from __future__ import annotations
@@ -52,6 +64,7 @@ def get_spark(
             f"-Xms{driver_mem} -XX:+AlwaysPreTouch -XX:+UseParallelGC",
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for key, value in (extra_conf or {}).items():

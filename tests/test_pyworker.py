@@ -151,3 +151,31 @@ def test_spark_worker_does_not_reread_pyspark_zip(spark):
     # without the guard every zipimporter re-reads its archive per call
     assert row["stock"] == row["importers"]
     assert row["guarded"] == 0
+
+
+def test_shingle_stage_imports_the_engine_in_the_worker(spark, monkeypatch):
+    """Unpickling ``shingle_rows_local``'s stage function in a fresh
+    interpreter (what a new Python worker does) imports the engine package,
+    so the guard is installed there before the stage's first task."""
+    import subprocess
+
+    from pyspark import cloudpickle
+
+    from streamchange_spark.operators.dedup import shingle_rows_local
+
+    docs = spark.createDataFrame([(1, "a b c d")], "id long, text string")
+    stages = []
+    monkeypatch.setattr(
+        type(docs), "mapInPandas", lambda self, fn, schema: stages.append(fn) or self
+    )
+    shingle_rows_local(docs, "id", "text")
+    probe = (
+        "import pickle, sys\n"
+        "pickle.loads(sys.stdin.buffer.read())\n"
+        "print('streamchange_spark._pyworker' in sys.modules)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], input=cloudpickle.dumps(stages[0]),
+        capture_output=True, check=True, env=os.environ,
+    )
+    assert out.stdout.decode().strip() == "True"

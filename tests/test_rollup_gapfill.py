@@ -133,6 +133,27 @@ def test_gapfill_linear(spark):
     assert list(filled["gap_filled"]) == [False, False, True, False]
 
 
+def test_gapfill_linear_rounds_like_the_oracle(spark):
+    """The lerp is ``prev + (next - prev) * frac`` with ``frac`` rounded
+    first (DuckDB's operation order, which the gapfill_linear oracle row
+    hashes bit-exactly); ``((next - prev) * dt) / span`` differs in the last
+    bit at frac = 1/3."""
+    pdf = pd.DataFrame(
+        {
+            "key": ["k"] * 2,
+            "bucket_start": pd.to_datetime([0, 10800], unit="s"),
+            "v": [0.0, 5.0],
+        }
+    )
+    filled = (
+        gapfill(spark.createDataFrame(pdf), ["key"], "bucket_start", "v", 3600, "linear")
+        .orderBy("bucket_start")
+        .toPandas()
+    )
+    assert list(filled["v"]) == [0.0, 5.0 * (1 / 3), 5.0 * (2 / 3), 5.0]
+    assert 5.0 * (1 / 3) != (5.0 * 1) / 3
+
+
 def test_dense_grid_guard_max_buckets_per_key(spark):
     """dense_grid must fail loudly (naming the key) when one key's span/step
     would explode past max_buckets_per_key, and generate normally below it."""

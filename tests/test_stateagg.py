@@ -2,6 +2,8 @@
 hand-computed fixtures, merge==direct across tiers (the continuous-aggregate
 contract), repartition invariance, and the explode guard."""
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
@@ -351,4 +353,28 @@ def test_twa_duplicate_ts_takes_the_greatest_value(spark):
     assert out[0] == out[1] == [
         (0, 3600 * s, (10.0 * 3000 + 40.0 * 600) * s),
         (1, 1800 * s, 40.0 * 1800 * s),
+    ]
+
+
+def test_heartbeat_duplicate_ts_counts_once(spark):
+    """Heartbeats sharing (key, ts) count once: the tie's earlier rows
+    reach the next row at the same instant, so only its last row opens an
+    up-span, under every partition layout."""
+    from streamchange_spark.operators import heartbeat_tier
+
+    df = spark.createDataFrame(
+        [("a", 0, 1), ("a", 300, 2), ("a", 300, 3), ("a", 300, 4), ("a", 1200, 5)],
+        "k string, sec long, tag long",
+    ).select("k", F.timestamp_seconds("sec").alias("ts"), "tag")
+    one = df.repartition(1)
+    layouts = [one.sortWithinPartitions("tag"), one.sortWithinPartitions(F.desc("tag"))]
+    out = [
+        [tuple(r) for r in heartbeat_tier(d, ["k"], "ts", "1h", tolerance_s=600.0)
+         .select("bucket_start", "up_us", "n_heartbeats", "n_gaps").collect()]
+        for d in layouts
+    ]
+    # 0 -> 300, the tie 300 -> 900 (tolerance; 1200 is a gap), 1200 -> 1800
+    s = 1_000_000
+    assert out[0] == out[1] == [
+        (datetime.datetime(1970, 1, 1), (300 + 600 + 600) * s, 3, 1)
     ]
