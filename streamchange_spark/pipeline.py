@@ -409,12 +409,15 @@ def purge_url(
 
     Row-keyed families (``tier1h/``, ``gorilla1h/``, ``qsketch1h/``,
     ``stats1h/``, ``staterun/``, ``sig/`` — every row carries the url,
-    blobs and sketches are per-url)
-    purge with ONE :meth:`SnapshotStore.delete_where` each, url-range hint
-    pruning the probe to the files whose stats cover the url;
-    ``mode="merge-on-read"`` (default) makes each a metadata-only commit
-    (the compliance sweep writes KBs, the nightly ``maintain()`` pays the
-    rewrite).
+    blobs and sketches are per-url) purge in ONE delete (the six-family
+    case of :meth:`SnapshotStore.delete_where`): each
+    family's candidate files are pruned by the url-range hint, one probe
+    unions a live scan per family, and the delete lands as ONE atomic
+    snapshot, so a crash leaves the url in every family or in none.
+    ``mode="merge-on-read"`` (default) makes it a metadata-only commit of
+    one positional-delete file (the compliance sweep writes KBs, the
+    nightly ``maintain()`` pays the rewrite); ``mode="copy-on-write"``
+    rewrites each family's touched files in a write of its own.
 
     The keyless ``kmv1h/`` family aggregates ALL urls into one bottom-k
     sketch per hour — a member cannot be removed from a mergeable sketch
@@ -422,25 +425,30 @@ def purge_url(
     url's 60-bit hash). With ``pages`` (the source table; rows of the
     purged url may be present or already dropped — they are filtered
     here), the affected day partitions are REBUILT from the purged source
-    in one commit; without it they are reported in
+    in a second commit after the delete; without it they are reported in
     ``report["kmv_skipped_days"]`` for the caller to rebuild — the purge
-    is NOT complete until they do. Returns per-family deleted-row counts
-    and snapshot ids."""
-    report: dict = {"url": url, "families": {}}
-    for fam in (f"{f.prefix}/" for f in _FAMILIES if f.row_keyed):
-        snap, rep = store.delete_where(
-            spark,
-            F.col("url") == F.lit(url),
-            prefix=fam,
-            ranges={"url": (url, url)},
-            mode=mode,
-            properties={"stage": "purge", "url": url},
-        )
-        report["families"][fam] = {
-            "snapshot_id": snap,
-            "deleted_rows": rep["deleted_rows"],
-            "pruned_files": rep["pruned_files"],
-        }
+    is NOT complete until they do. Returns per-family deleted-row and
+    pruned-file counts, and the delete's snapshot id for every family that
+    lost rows (None for one that lost none)."""
+    snap, reps = store._delete_rows(
+        spark,
+        F.col("url") == F.lit(url),
+        [f"{f.prefix}/" for f in _FAMILIES if f.row_keyed],
+        {"url": (url, url)},
+        {"stage": "purge", "url": url},
+        mode,
+    )
+    report: dict = {
+        "url": url,
+        "families": {
+            fam: {
+                "snapshot_id": snap if rep["deleted_rows"] else None,
+                "deleted_rows": rep["deleted_rows"],
+                "pruned_files": rep["pruned_files"],
+            }
+            for fam, rep in reps.items()
+        },
+    }
     m = store.manifest() or {"files": {}}
     kmv_days = sorted(
         k.split("/", 1)[1] for k in m["files"] if k.startswith("kmv1h/")

@@ -53,6 +53,7 @@ import os
 import shutil
 import time
 import uuid
+from collections import Counter
 from contextlib import contextmanager
 from typing import Callable, Iterable
 
@@ -291,6 +292,29 @@ def _parquet_files(directory: str) -> list[str]:
         for f in os.listdir(directory)
         if f.endswith(".parquet")
     )
+
+
+def _resolve_file_counts(m: dict, counts) -> dict[str, dict[str, int]]:
+    """``{partition: {manifest path: rows}}`` (both levels sorted) for the
+    ``(source-file URI, rows)`` pairs of a probe over ``m``'s data files.
+    The URIs are absolute ``file:`` paths (``_metadata.file_path``);
+    manifests may hold relative ones, so the lookup normalizes through
+    ``abspath`` but hands back the manifest spelling. Raises on a URI that
+    names no manifest file."""
+    from urllib.parse import unquote, urlparse
+
+    by_abs = {
+        os.path.abspath(f): (f, p) for p, pf in m["files"].items() for f in pf
+    }
+    touched: dict[str, dict[str, int]] = {}
+    for uri, n in counts:
+        path = unquote(urlparse(uri).path) or uri
+        hit = by_abs.get(os.path.abspath(path))
+        if hit is None:
+            raise RuntimeError(f"probe saw unmanifested file {path}")
+        per_file = touched.setdefault(hit[1], {})
+        per_file[hit[0]] = per_file.get(hit[0], 0) + n
+    return {p: dict(sorted(touched[p].items())) for p in sorted(touched)}
 
 
 def _new_snapshot_id() -> str:
@@ -1115,34 +1139,21 @@ class SnapshotStore:
     @staticmethod
     def _probe_touched(
         probe: DataFrame, m: dict
-    ) -> tuple[dict[str, list[str]], int]:
+    ) -> tuple[dict[str, dict[str, int]], int]:
         """Resolve a probe scan carrying each row's source-file URI in
-        ``__file`` to ``({partition: sorted manifest paths}, matched rows)``,
-        partitions in sorted order. The URIs are absolute ``file:`` paths;
-        manifests may hold relative ones, so the lookup normalizes through
-        ``abspath`` but hands back the manifest spelling. One Spark job."""
-        from urllib.parse import unquote, urlparse
-
-        by_abs = {
-            os.path.abspath(f): (f, p) for p, pf in m["files"].items() for f in pf
-        }
-        touched: dict[str, set] = {}
-        n_rows = 0
-        for r in probe.groupBy("__file").count().collect():
-            path = unquote(urlparse(r["__file"]).path) or r["__file"]
-            hit = by_abs.get(os.path.abspath(path))
-            if hit is None:
-                raise RuntimeError(f"probe saw unmanifested file {path}")
-            touched.setdefault(hit[1], set()).add(hit[0])
-            n_rows += r["count"]
-        return {p: sorted(fs) for p, fs in sorted(touched.items())}, n_rows
+        ``__file`` to ``({partition: {manifest path: matched rows}}, matched
+        rows)`` (see :func:`_resolve_file_counts`). One Spark job."""
+        touched = _resolve_file_counts(
+            m, ((r["__file"], r["count"]) for r in probe.groupBy("__file").count().collect())
+        )
+        return touched, sum(n for fc in touched.values() for n in fc.values())
 
     def _rewrite_touched(
         self,
         spark: SparkSession,
         m: dict,
         snapshot_id: str,
-        touched: dict[str, list[str]],
+        writes: list[dict[str, dict[str, int]]],
         row_fn: Callable[[DataFrame], DataFrame],
         metric_key: str,
     ) -> tuple[dict, dict, dict, list[str]]:
@@ -1150,13 +1161,18 @@ class SnapshotStore:
         ``(files, metrics, file_stats)`` with each touched file replaced by
         ``row_fn`` applied to a live scan of the partition's touched files,
         plus the partitions dropped because no row survived anywhere in them.
+        ``writes`` holds one ``{partition: {touched file: matched rows}}``
+        map (as :meth:`_probe_touched` gives it) per parquet write: a write
+        has one schema, so a verb that spans several partition families
+        passes one map per family.
 
         Live (not raw) scans keep earlier merge-on-read deletes deleted: a
         raw rewrite would resurrect those rows because the new file sheds
-        the parent's positional-delete entries. Every partition's
-        replacement rows are written in ONE Spark job via dynamic partition
-        directories, so on a cluster the rewrites parallelize across
-        executors instead of paying one sequential job per partition.
+        the parent's positional-delete entries. Every partition of a map is
+        written in ONE Spark job via dynamic partition directories, so on a
+        cluster the rewrites parallelize across executors instead of paying
+        one sequential job per partition; the maps' writes run side by side
+        (:func:`_write_concurrently`).
         Untouched files are carried by reference. A partition whose touched
         files lost every row keeps its untouched files, or is dropped when
         it has none (the expire_partitions shape, not a husk). Rewritten
@@ -1170,28 +1186,36 @@ class SnapshotStore:
         files = dict(m["files"])
         metrics = dict(m.get("metrics", {}))
         file_stats = dict(m.get("file_stats", {}))
-        if not touched:
+        writes = [w for w in writes if w]
+        if not writes:
             return files, metrics, file_stats, []
-        rewritten = [
-            row_fn(self._scan_live(spark, paths, m)).withColumn(
-                "__cowpart", F.lit(part_key)
-            )
-            for part_key, paths in touched.items()
-        ]
-        cow_dir = os.path.join(self.table_dir, "data", snapshot_id, "__cow__")
-        t0 = time.time()
-        n_out = max(1, sum(len(paths) for paths in touched.values()))
-        with _stats_friendly_writes(spark):
+        snap_dir = os.path.join(self.table_dir, "data", snapshot_id)
+
+        def write_one(item):
+            i, touched = item
+            cow_dir = os.path.join(snap_dir, f"__cow{i}__")
+            rewritten = [
+                row_fn(self._scan_live(spark, paths, m)).withColumn(
+                    "__cowpart", F.lit(part_key)
+                )
+                for part_key, paths in touched.items()
+            ]
+            n_out = max(1, sum(len(paths) for paths in touched.values()))
             functools.reduce(DataFrame.unionByName, rewritten).coalesce(
                 n_out
             ).write.partitionBy("__cowpart").mode("overwrite").parquet(cow_dir)
-        sub_by_part = {
-            unquote(d.split("=", 1)[1]): os.path.join(cow_dir, d)
-            for d in os.listdir(cow_dir)
-            if d.startswith("__cowpart=")
-        }
+            return {
+                unquote(d.split("=", 1)[1]): os.path.join(cow_dir, d)
+                for d in os.listdir(cow_dir)
+                if d.startswith("__cowpart=")
+            }
+
+        t0 = time.time()
+        sub_by_part = {}
+        for subs in _write_concurrently(spark, write_one, list(enumerate(writes))):
+            sub_by_part.update(subs)
         dropped = []
-        for part_key, paths in touched.items():
+        for part_key, paths in (kv for touched in writes for kv in touched.items()):
             replaced = frozenset(paths)
             carried = [f for f in files[part_key] if f not in replaced]
             sub = sub_by_part.get(part_key)
@@ -1298,7 +1322,7 @@ class SnapshotStore:
 
         cand, report = self._candidates(m, prefix, ranges or None, "matched_rows")
         report["inserted_rows"] = 0
-        touched: dict[str, list[str]] = {}
+        touched: dict[str, dict[str, int]] = {}
         hits = None
         try:
             if cand:
@@ -1363,7 +1387,7 @@ class SnapshotStore:
 
             snapshot_id = _new_snapshot_id()
             files, metrics, file_stats, _ = self._rewrite_touched(
-                spark, m, snapshot_id, touched, merged_rows, "merged_files"
+                spark, m, snapshot_id, [touched], merged_rows, "merged_files"
             )
             if when_not_matched == "insert":
                 existing = files.get(insert_partition, [])
@@ -1454,10 +1478,10 @@ class SnapshotStore:
         ``mode="copy-on-write"`` (default) rewrites every touched file's
         survivors — reads stay plain scans, the delete pays the write.
         ``mode="merge-on-read"`` (the Iceberg v2 positional-delete shape)
-        writes only a tiny delete file of (file, row_index) pairs and
-        commits in O(deleted rows): the right verb when a delete touches a
-        few rows in many files (rewriting TBs to drop KBs). Reads apply
-        outstanding deletes via a broadcast anti-join on
+        writes only a tiny delete file of (file, row_index) pairs in ONE
+        probe job and commits in O(deleted rows): the right verb when a
+        delete touches a few rows in many files (rewriting TBs to drop
+        KBs). Reads apply outstanding deletes via a broadcast anti-join on
         (``_metadata.file_path``, ``_metadata.row_index``);
         :meth:`compact_partitions` (and the nightly :meth:`maintain`)
         purges them back into plain files.
@@ -1476,49 +1500,98 @@ class SnapshotStore:
         when the predicate is the partition key). Commits ONE snapshot under the optimistic-concurrency check;
         time travel to the pre-delete snapshot still sees the deleted rows
         until :meth:`expire_snapshots` reclaims them (document retention
-        obligations accordingly). Returns ``(snapshot_id | None, report)``
+        obligations accordingly). This is the one-family case of
+        :meth:`_delete_rows`. Returns ``(snapshot_id | None, report)``
         — ``None`` when no row matched."""
+        snapshot_id, reports = self._delete_rows(
+            spark, condition, [prefix], ranges, properties, mode
+        )
+        return snapshot_id, reports[prefix]
+
+    def _delete_rows(
+        self,
+        spark: SparkSession,
+        condition,
+        prefixes: list,
+        ranges: dict[str, tuple] | None,
+        properties: dict | None,
+        mode: str,
+    ) -> tuple[str | None, dict]:
+        """:meth:`delete_where` over several partition families at once, as
+        ONE snapshot: returns ``(snapshot_id | None, {prefix: report})``,
+        each family with its own stats-pruned candidate list and report
+        (``deleted_rows``, ``touched_files``, ``pruned_files``, ...).
+
+        A family is one schema (the unit a ``read(prefix=...)`` scans), so
+        each family gets one live probe scan of its candidates; the scans
+        are unioned into the one probe. Copy-on-write then rewrites each
+        family's touched files in a write of its own (one schema per
+        parquet write); merge-on-read writes one positional-delete file for
+        all of them. Either way the delete lands in one commit, so a crash
+        leaves every family as it was (a purge cannot stop half done)."""
         from pyspark.sql import functions as F
 
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        m = self._head_manifest()
-        cand, report = self._candidates(m, prefix, ranges, "deleted_rows")
-        if not cand:
-            return None, report
-        if mode == "merge-on-read":
-            return self._delete_merge_on_read(
-                spark, cond, condition, m, cand, report, properties
-            )
-        if mode != "copy-on-write":
+        if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(
                 f"mode must be 'copy-on-write' or 'merge-on-read', got {mode!r}"
             )
-        touched, report["deleted_rows"] = self._probe_touched(
-            self._scan_live(spark, cand, m, file_col="__file").where(cond), m
-        )
-        report["touched_files"] = sum(len(p) for p in touched.values())
-        if not touched:
-            return None, report
-        snapshot_id = _new_snapshot_id()
-        # NULL predicate rows are NOT deleted (SQL DELETE semantics), so
-        # they must survive: plain ~cond would drop them too.
-        keep = ~F.coalesce(cond, F.lit(False))
-        files, metrics, file_stats, dropped = self._rewrite_touched(
-            spark, m, snapshot_id, touched, lambda live: live.where(keep),
-            "deleted_from_files",
-        )
-        self._commit_manifest(
-            self._new_manifest(
-                snapshot_id, m, files, metrics, file_stats,
-                {
-                    **(properties or {}),
-                    "delete_condition": str(condition),
-                    "deleted_partitions": sorted(touched),
-                    "dropped_partitions": dropped,
-                },
+        cond = F.expr(condition) if isinstance(condition, str) else condition
+        m = self._head_manifest()
+        mor = mode == "merge-on-read"
+        reports, family_of, probes = {}, {}, []
+        for prefix in prefixes:
+            cand, reports[prefix] = self._candidates(m, prefix, ranges, "deleted_rows")
+            if cand:
+                family_of.update(dict.fromkeys(cand, prefix))
+                probes.append(
+                    self._scan_live(
+                        spark, cand, m, file_col="__file",
+                        pos_col="__pos" if mor else None,
+                    )
+                    .where(cond)
+                    .selectExpr(*(["__file AS file", "__pos AS pos"] if mor else ["__file"]))
+                )
+        if not probes:
+            return None, reports
+        probe = functools.reduce(DataFrame.union, probes)
+        properties = {**(properties or {}), "delete_condition": str(condition)}
+        if mor:
+            snapshot_id, touched, written = self._delete_merge_on_read(
+                probe, m, properties
             )
-        )
-        return snapshot_id, report
+        else:
+            snapshot_id, written = None, {}
+            touched, _ = self._probe_touched(probe, m)
+            if touched:
+                snapshot_id = _new_snapshot_id()
+                # NULL predicate rows are NOT deleted (SQL DELETE semantics),
+                # so they must survive: plain ~cond would drop them too.
+                keep = ~F.coalesce(cond, F.lit(False))
+                by_family: dict = {}
+                for part, per_file in touched.items():
+                    family = family_of[next(iter(per_file))]
+                    by_family.setdefault(family, {})[part] = per_file
+                files, metrics, file_stats, dropped = self._rewrite_touched(
+                    spark, m, snapshot_id, list(by_family.values()),
+                    lambda live: live.where(keep), "deleted_from_files",
+                )
+                self._commit_manifest(
+                    self._new_manifest(
+                        snapshot_id, m, files, metrics, file_stats,
+                        {
+                            **properties,
+                            "deleted_partitions": sorted(touched),
+                            "dropped_partitions": dropped,
+                        },
+                    )
+                )
+        for per_file in touched.values():
+            for f, n in per_file.items():
+                report = reports[family_of[f]]
+                report["deleted_rows"] += n
+                report["touched_files"] += 1
+                report.update(written)
+        return snapshot_id, reports
 
     def update_where(
         self,
@@ -1590,7 +1663,7 @@ class SnapshotStore:
 
         snapshot_id = _new_snapshot_id()
         files, metrics, file_stats, _ = self._rewrite_touched(
-            spark, m, snapshot_id, touched, updated_rows, "updated_from_files"
+            spark, m, snapshot_id, [touched], updated_rows, "updated_from_files"
         )
         self._commit_manifest(
             self._new_manifest(
@@ -1736,22 +1809,18 @@ class SnapshotStore:
 
     # -- merge-on-read delete plumbing ------------------------------------------
     def _delete_merge_on_read(
-        self,
-        spark: SparkSession,
-        cond,
-        condition,
-        m: dict,
-        cand: list,
-        report: dict,
-        properties: dict | None,
-    ) -> tuple[str | None, dict]:
-        """The ``mode="merge-on-read"`` body of :meth:`delete_where`: ONE
-        probe job writes a positional-delete parquet of
-        ``(file: _metadata.file_path URI, pos: _metadata.row_index)`` for
-        every matching live row, and the commit is pure metadata — data
-        files, metrics, and file stats are carried verbatim, only the
-        ``delete_files`` map (manifest data path → covering delete files)
-        grows. O(deleted rows) I/O instead of O(touched-file bytes): the
+        self, hits: DataFrame, m: dict, properties: dict
+    ) -> tuple[str | None, dict, dict]:
+        """The ``mode="merge-on-read"`` body of :meth:`_delete_rows`: ONE
+        probe job writes ``hits``, the unioned per-family probe, as a
+        positional-delete parquet of ``(file: _metadata.file_path URI, pos:
+        _metadata.row_index)`` for every matching live row, and the commit
+        is pure metadata — data files, metrics, and file stats are carried
+        verbatim, only the ``delete_files`` map (manifest data path →
+        covering delete files) grows. The touched files and their
+        deleted-row counts come from the written file's ``file`` column,
+        read on the driver (it is O(deleted rows)), not from a second Spark
+        job. O(deleted rows) I/O instead of O(touched-file bytes): the
         right verb when a delete touches a few rows in many files.
 
         The probe scans LIVE (earlier deletes applied), so stacked MoR
@@ -1761,15 +1830,12 @@ class SnapshotStore:
         Manifest ``metrics.n_rows`` / file stats intentionally keep their
         pre-delete values (the Iceberg v2 convention): stats-based file
         skipping only ever skips files that cannot match, and
-        :meth:`compact_partitions` restores exact counts when it purges."""
-        from pyspark.sql import functions as F
+        :meth:`compact_partitions` restores exact counts when it purges.
+        Returns ``(snapshot_id | None, touched, write figures)``, touched
+        as :meth:`_probe_touched` gives it."""
+        import pyarrow.parquet as pq
 
         snapshot_id = _new_snapshot_id()
-        hits = (
-            self._scan_live(spark, cand, m, file_col="__file", pos_col="__pos")
-            .where(cond)
-            .select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
-        )
         # NOT "__deletes__": Spark's file index silently filters
         # underscore-prefixed path segments, so a reserved-looking name
         # would make the read-back warn "All paths were ignored".
@@ -1777,39 +1843,37 @@ class SnapshotStore:
         t0 = time.time()
         hits.coalesce(1).write.mode("overwrite").parquet(del_dir)
         delete_paths = _parquet_files(del_dir)
-        touched = {}
-        if delete_paths:
-            touched, report["deleted_rows"] = self._probe_touched(
-                self._parquet(spark, delete_paths).select(
-                    F.col("file").alias("__file")
-                ),
-                m,
-            )
+        # one row per deleted row: counted per data file on the driver
+        files = Counter(
+            f for p in delete_paths
+            for f in pq.read_table(p, columns=["file"]).column("file").to_pylist()
+        )
+        touched = _resolve_file_counts(m, files.items())
         if not touched:
             shutil.rmtree(os.path.dirname(del_dir), ignore_errors=True)
-            return None, report
-        report["touched_files"] = sum(len(p) for p in touched.values())
+            return None, touched, {}
         dmap = self._live_delete_files(m, m["files"])
         for f in (f for paths in touched.values() for f in paths):
             dmap[f] = sorted(set(dmap.get(f, [])) | set(delete_paths))
-        report["delete_files_written"] = len(delete_paths)
-        report["delete_bytes"] = sum(os.path.getsize(p) for p in delete_paths)
-        report["write_seconds"] = round(time.time() - t0, 3)
+        written = {
+            "delete_files_written": len(delete_paths),
+            "delete_bytes": sum(os.path.getsize(p) for p in delete_paths),
+            "write_seconds": round(time.time() - t0, 3),
+        }
         self._commit_manifest(
             self._new_manifest(
                 snapshot_id, m, m["files"],
                 self._bump_partitions(m, touched, snapshot_id),
                 m.get("file_stats", {}),
                 {
-                    **(properties or {}),
-                    "delete_condition": str(condition),
+                    **properties,
                     "delete_mode": "merge-on-read",
                     "deleted_partitions": sorted(touched),
                 },
                 delete_files=dmap,
             )
         )
-        return snapshot_id, report
+        return snapshot_id, touched, written
 
     def delete_keys(
         self,

@@ -1253,7 +1253,34 @@ def test_files_table_renders_bloom_size_not_payload(spark, tmp_path):
     assert set(stats["bloom:k"]) == {"m"} and stats["bloom:k"]["m"] >= 256
 
 
-def test_purge_url_across_all_tiers_equals_rebuild(spark, tmp_path, pages):
+@pytest.fixture(scope="module")
+def clean_rebuild(spark, pages, tmp_path_factory):
+    """(victim, store): the pipeline run on ``pages`` without its first url,
+    what a purge of that url must leave behind."""
+    victim = pages.select("url").distinct().orderBy("url").limit(1).collect()[0][
+        "url"
+    ]
+    clean_dir = str(tmp_path_factory.mktemp("clean"))
+    run_pipeline(spark, pages.where(F.col("url") != victim), clean_dir)
+    return victim, SnapshotStore(clean_dir)
+
+
+def _assert_url_gone_and_rows_equal(spark, store, clean, victim):
+    """No row-keyed family answers for ``victim``, and the tier and
+    signature rows equal the clean rebuild's exactly."""
+    for fam in ROW_KEYED:
+        assert store.read(spark, prefix=fam).where(
+            F.col("url") == victim
+        ).count() == 0
+    for fam, cols in (("tier1h/", ["url", "bucket_start"]), ("sig/", ["url", "warc_ts"])):
+        a = store.read(spark, prefix=fam).orderBy(*cols).collect()
+        b = clean.read(spark, prefix=fam).orderBy(*cols).collect()
+        assert a == b, fam
+
+
+def test_purge_url_across_all_tiers_equals_rebuild(
+    spark, tmp_path, pages, clean_rebuild
+):
     """purge_url == running the pipeline on a source that never had the
     url: row-keyed families purge by delete, the keyless KMV family
     rebuilds, and every family's queryable content matches the
@@ -1270,33 +1297,15 @@ def test_purge_url_across_all_tiers_equals_rebuild(spark, tmp_path, pages):
     store_dir = str(tmp_path / "purged")
     run_pipeline(spark, pages, store_dir)
     store = SnapshotStore(store_dir)
-    victim = pages.select("url").distinct().orderBy("url").limit(1).collect()[0][
-        "url"
-    ]
+    victim, clean = clean_rebuild
 
     report = purge_url(spark, store, victim, pages=pages)
     assert report["families"]["tier1h/"]["deleted_rows"] > 0
     assert report["families"]["sig/"]["deleted_rows"] > 0
     assert report.get("kmv_rebuilt_days")
-
     clean_pages = pages.where(F.col("url") != victim)
-    clean_dir = str(tmp_path / "clean")
-    run_pipeline(spark, clean_pages, clean_dir)
-    clean = SnapshotStore(clean_dir)
 
-    # no family still answers for the url
-    for fam in (
-        "tier1h/", "gorilla1h/", "qsketch1h/", "stats1h/", "staterun/", "sig/"
-    ):
-        assert store.read(spark, prefix=fam).where(
-            F.col("url") == victim
-        ).count() == 0
-
-    # tier rows and signature rows: exact equality with the clean store
-    for fam, cols in (("tier1h/", ["url", "bucket_start"]), ("sig/", ["url", "warc_ts"])):
-        a = store.read(spark, prefix=fam).orderBy(*cols).collect()
-        b = clean.read(spark, prefix=fam).orderBy(*cols).collect()
-        assert a == b, fam
+    _assert_url_gone_and_rows_equal(spark, store, clean, victim)
 
     # gorilla: decoded series equal
     dec = lambda s: sorted(
@@ -1377,6 +1386,67 @@ def test_purge_url_across_all_tiers_equals_rebuild(spark, tmp_path, pages):
     m_after = store.manifest()
     for d in days[1:]:
         assert m_after["files"][f"kmv1h/{d}"] == m_before["files"][f"kmv1h/{d}"]
+
+
+def test_copy_on_write_purge_commits_once_and_equals_rebuild(
+    spark, tmp_path, pages, clean_rebuild
+):
+    """A copy-on-write purge rewrites each family's touched files in a
+    write of its own but commits the six families as ONE snapshot, with
+    the clean rebuild's tier and signature rows."""
+    from streamchange_spark.pipeline import purge_url
+
+    store_dir = str(tmp_path / "cow")
+    run_pipeline(spark, pages, store_dir)
+    store = SnapshotStore(store_dir)
+    victim, clean = clean_rebuild
+    n_snapshots = len(store.history())
+
+    report = purge_url(spark, store, victim, mode="copy-on-write")
+    assert len(store.history()) == n_snapshots + 1
+    assert {f["snapshot_id"] for f in report["families"].values()} == {store.head()}
+    assert store.manifest()["properties"]["deleted_partitions"]
+    assert "delete_files" not in store.manifest()
+    _assert_url_gone_and_rows_equal(spark, store, clean, victim)
+
+
+def test_failed_purge_probe_write_commits_no_family(spark, tmp_path, monkeypatch):
+    """The purge's delete is one commit: when the probe write that covers
+    the last family fails, HEAD, the history and every family's rows stay
+    as they were (with one delete per family, the earlier families were
+    already committed by then)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from streamchange_spark.pipeline import purge_url
+
+    pages = generate_pages(spark, n_urls=4, mean_snapshots=6)
+    store_dir = str(tmp_path / "atomic")
+    run_pipeline(spark, pages, store_dir)
+    store = SnapshotStore(store_dir)
+    victim = sorted(r["url"] for r in pages.select("url").distinct().collect())[0]
+    rows = lambda: {  # noqa: E731
+        fam: sorted(map(str, store.read(spark, prefix=fam).collect()))
+        for fam in TIER_FAMILIES
+    }
+    head, n_snapshots, before = store.head(), len(store.history()), rows()
+
+    parquet = DataFrameWriter.parquet
+
+    def failing_parquet(writer, path, *a, **kw):
+        if path.endswith("deletes") and any(
+            "/sig/" in f for f in writer._df.inputFiles()
+        ):
+            raise RuntimeError("probe write failed")
+        return parquet(writer, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(RuntimeError, match="probe write failed"):
+        purge_url(spark, store, victim, pages=pages)
+    monkeypatch.undo()
+
+    assert store.head() == head
+    assert len(store.history()) == n_snapshots
+    assert rows() == before
 
 
 def test_range_scoped_state_read_prunes_and_matches_slice(
@@ -1506,10 +1576,27 @@ def test_pipeline_refresh_purge_keep_their_families_jobs_and_files(
     assert r2["merged_days"] == days
     assert (jobs, files) == (156, 104)
 
-    victim = sorted(r["url"] for r in pages.select("url").distinct().collect())[0]
-    report = purge_url(spark, store, victim, pages=pages)
-    assert list(report["families"]) == list(ROW_KEYED)
-    assert report["kmv_rebuilt_days"] == days
+    # purge: ONE delete over the six row-keyed families (one probe write,
+    # one snapshot) plus the kmv rebuild commit; at the six-deletes shape
+    # it was 37 jobs and 7 snapshots, then 53 and 7 for a second purge
+    urls = sorted(r["url"] for r in pages.select("url").distinct().collect())
+    for victim, want_jobs, want_deleted, want_pruned in (
+        (urls[0], 20, [93, 7, 93, 93, 240, 240], [0, 4, 1, 0, 8, 8]),
+        (urls[1], 26, [27, 3, 27, 27, 64, 64], [4, 7, 20, 4, 16, 16]),
+    ):
+        n_snapshots = len(store.history())
+        report, jobs, _ = jobs_and_new_files(
+            "purge", lambda: purge_url(spark, store, victim, pages=pages)
+        )
+        fams = report["families"]
+        assert list(fams) == list(ROW_KEYED)
+        assert [fams[f]["deleted_rows"] for f in ROW_KEYED] == want_deleted
+        assert [fams[f]["pruned_files"] for f in ROW_KEYED] == want_pruned
+        assert {fams[f]["snapshot_id"] for f in ROW_KEYED} == {
+            store.history()[1]["snapshot_id"]
+        }
+        assert report["kmv_rebuilt_days"] == days
+        assert (jobs, len(store.history()) - n_snapshots) == (want_jobs, 2)
     pages.unpersist()
 
 

@@ -182,3 +182,69 @@ def test_mor_delete_is_visible_to_incremental_consumers(spark, tmp_path):
     assert changed == ["t/d1"]
     assert df.where("id = 42").count() == 0
     assert df.count() == 99
+
+
+def test_mor_delete_over_stacked_deletes_and_tombstone_counts_once(spark, tmp_path):
+    """A merge-on-read delete over data files that already carry two
+    stacked positional deletes and an equality tombstone reports and
+    writes exactly the live matching rows, in a pinned number of Spark
+    jobs: the probe write is the only execution over the table (the
+    touched files and counts are read back from the delete file on the
+    driver)."""
+    import glob
+    import uuid
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+    from test_snapshot_concurrency import _clear_job_group, _jobs_in_group
+
+    def delete_rows(paths):
+        return {
+            (unquote(urlparse(r["file"]).path), r["pos"])
+            for d in paths
+            for r in pq.read_table(d).to_pylist()
+        }
+
+    store, _ = _fixture(spark, tmp_path)
+    store.delete_where(spark, "id in (10, 20, 130)", mode="merge-on-read")
+    store.delete_where(spark, "id in (11, 21, 140)", mode="merge-on-read")
+    store.delete_keys(
+        spark, spark.createDataFrame([(12,), (150,)], "id long"), prefix="t/"
+    )
+    m = store.manifest()
+    # oracle: (manifest path, row index) of every matching row no earlier
+    # delete removed, from the data and delete files themselves
+    dead = delete_rows({d for v in m["delete_files"].values() for d in v})
+    want = set()
+    for f in (f for pf in m["files"].values() for f in pf):
+        ids = pq.read_table(f, columns=["id"]).column("id").to_pylist()
+        if min(ids) > 159:
+            continue  # pruned by ranges= below
+        want |= {
+            (f, pos) for pos, i in enumerate(ids)
+            if i % 10 < 4 and i < 160 and i not in (12, 150)
+            and (f, pos) not in dead
+        }
+
+    group = f"mor-{uuid.uuid4().hex}"
+    spark.sparkContext.setJobGroup(group, "mor")
+    try:
+        snap, rep = store.delete_where(
+            spark, "id % 10 < 4 and id < 160", prefix="t/",
+            ranges={"id": (0, 159)}, mode="merge-on-read",
+        )
+    finally:
+        _clear_job_group(spark)
+    # the probe write and the broadcasts of the stacked deletes and of the
+    # tombstone; re-reading the delete file in Spark to count its rows per
+    # data file cost two more (7)
+    assert len(_jobs_in_group(spark, group)) == 5
+    assert (rep["deleted_rows"], rep["touched_files"], rep["pruned_files"]) == (
+        56, 7, 1
+    )
+    assert len(want) == 56 and len({f for f, _ in want}) == 7
+    written = glob.glob(os.path.join(store.table_dir, "data", snap, "deletes", "*.parquet"))
+    assert delete_rows(written) == want
+    assert store.read(spark, prefix="t/").where(
+        "id % 10 < 4 and id < 160"
+    ).count() == 0
