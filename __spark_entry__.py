@@ -126,6 +126,19 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Relational / rollup / gap-fill / compression queries (full DuckDB oracles)
 # ---------------------------------------------------------------------------
+def _fixture_store(tag: str, partitions: dict, **commit_kw):
+    """``(store, snapshot_id)``: a fresh snapshot store in a temp directory
+    whose first snapshot holds ``partitions`` (``commit_partitions``
+    keywords pass through) — the fixture every store query builds before
+    it runs the verb it checks."""
+    import tempfile
+
+    from streamchange_spark.sources import SnapshotStore
+
+    store = SnapshotStore(tempfile.mkdtemp(prefix=f"spark_graft_{tag}_"))
+    return store, store.commit_partitions(partitions, **commit_kw)
+
+
 def q_pruned_tier_read(spark, sf_dir):
     """Manifest-stats file skipping end to end (`sources/snapshots.py`
     `files_for`/`read(ranges=)`): commit the 1h tier into a snapshot store
@@ -135,13 +148,9 @@ def q_pruned_tier_read(spark, sf_dir):
     equality proves pruning dropped no matching row. The query raises if
     the prune did not engage (opened == total files), so a stats or
     clustering regression fails the driver gate loudly."""
-    import tempfile
-
-    from streamchange_spark.sources import SnapshotStore
-
     _configure(spark)
-    store = SnapshotStore(tempfile.mkdtemp(prefix="spark_graft_prune_"))
-    store.commit_partitions(
+    store, _ = _fixture_store(
+        "prune",
         {"tier1h/all": _hourly_tier(spark, sf_dir)},
         stat_cols=["bucket_start"],
         cluster_by=["bucket_start"],
@@ -177,14 +186,10 @@ def q_merge_upsert(spark, sf_dir):
     most files AND the probe rewrote exactly the two files holding the
     update range — so a stats, clustering, or probe regression fails the
     driver gate loudly, not just slowly."""
-    import tempfile
-
-    from streamchange_spark.sources import SnapshotStore
-
     _configure(spark)
     ev = _t(spark, sf_dir, "events")
-    store = SnapshotStore(tempfile.mkdtemp(prefix="spark_graft_merge_"))
-    store.commit_partitions(
+    store, _ = _fixture_store(
+        "merge",
         {
             "ev/a": ev.where(F.col("event_id") % 2 == 0),
             "ev/b": ev.where(F.col("event_id") % 2 == 1),
@@ -242,14 +247,10 @@ def q_delete_rows(spark, sf_dir):
     the rewrite dropped exactly the matching rows, including the
     NULL-predicate survival rule. Raises unless the ranges hint pruned
     files AND only a minority of files were rewritten."""
-    import tempfile
-
-    from streamchange_spark.sources import SnapshotStore
-
     _configure(spark)
     ev = _t(spark, sf_dir, "events")
-    store = SnapshotStore(tempfile.mkdtemp(prefix="spark_graft_del_"))
-    store.commit_partitions(
+    store, _ = _fixture_store(
+        "del",
         {"ev/all": ev},
         stat_cols=["user_id"],
         cluster_by=["user_id"],
@@ -282,14 +283,10 @@ def q_update_rows(spark, sf_dir):
     matching rows changed, by exactly the SET expressions, with
     cardinality preserved. Raises unless the ranges hint pruned files and
     only a minority were rewritten."""
-    import tempfile
-
-    from streamchange_spark.sources import SnapshotStore
-
     _configure(spark)
     ev = _t(spark, sf_dir, "events")
-    store = SnapshotStore(tempfile.mkdtemp(prefix="spark_graft_upd_"))
-    store.commit_partitions(
+    store, _ = _fixture_store(
+        "upd",
         {"ev/all": ev},
         stat_cols=["user_id"],
         cluster_by=["user_id"],
@@ -326,14 +323,10 @@ def q_eq_delete(spark, sf_dir):
     relationally: complement WHERE for the tombstones UNION ALL the
     re-inserted slice. Raises unless every tombstone commit carried the
     data files verbatim."""
-    import tempfile
-
-    from streamchange_spark.sources import SnapshotStore
-
     _configure(spark)
     ev = _t(spark, sf_dir, "events")
-    store = SnapshotStore(tempfile.mkdtemp(prefix="spark_graft_eq_"))
-    s1 = store.commit_partitions(
+    store, s1 = _fixture_store(
+        "eq",
         {"ev/all": ev},
         stat_cols=["user_id"],
         cluster_by=["user_id"],
@@ -388,14 +381,11 @@ def q_mor_delete(spark, sf_dir):
     Raises unless both commits were metadata-only (no data file rewritten)
     and the delete payload stayed tiny relative to the table."""
     import os
-    import tempfile
-
-    from streamchange_spark.sources import SnapshotStore
 
     _configure(spark)
     ev = _t(spark, sf_dir, "events")
-    store = SnapshotStore(tempfile.mkdtemp(prefix="spark_graft_mor_"))
-    s1 = store.commit_partitions(
+    store, s1 = _fixture_store(
+        "mor",
         {"ev/all": ev},
         stat_cols=["user_id"],
         cluster_by=["user_id"],
@@ -441,16 +431,12 @@ def q_zorder_read(spark, sf_dir):
     stats-pruned read. The oracle computes the same aggregate over the
     full table with a plain WHERE; equality proves z-order pruning dropped
     no matching row. Raises unless the trailing-dimension prune engaged."""
-    import tempfile
-
-    from streamchange_spark.sources import SnapshotStore
-
     _configure(spark)
     ev = _t(spark, sf_dir, "events")
     max_id = ev.agg(F.max("event_id")).collect()[0][0]
     lo, hi = (max_id // 10) * 4, (max_id // 10) * 5
-    store = SnapshotStore(tempfile.mkdtemp(prefix="spark_graft_z_"))
-    store.commit_partitions(
+    store, _ = _fixture_store(
+        "z",
         {"ev/all": ev},
         stat_cols=["user_id", "event_id"],
         cluster_by=["user_id", "event_id"],
@@ -484,15 +470,11 @@ def q_bloom_read(spark, sf_dir):
     The oracle runs the same aggregate over the full table with a plain
     WHERE; equality proves the bloom never dropped a matching file.
     Raises unless the bloom prune actually engaged (kept < total)."""
-    import tempfile
-
-    from streamchange_spark.sources import SnapshotStore
-
     _configure(spark)
     ev = _t(spark, sf_dir, "events")
     uid = ev.agg(F.min("user_id")).collect()[0][0]
-    store = SnapshotStore(tempfile.mkdtemp(prefix="spark_graft_bloom_"))
-    store.commit_partitions(
+    store, _ = _fixture_store(
+        "bloom",
         {"ev/all": ev.repartition(16, "user_id")},
         stat_cols=["user_id", "bloom:user_id"],
     )
@@ -733,11 +715,8 @@ def q_state_range_read(spark, sf_dir):
     `files_for` (kept < total or the query raises): result exactness needs
     a wide horizon, the file-skip proof needs a narrow one, and conflating
     them would make one of the two claims vacuous."""
-    import tempfile
-
     from streamchange_spark.operators import encode_state_runs
     from streamchange_spark.pipeline import read_lang_state_tier
-    from streamchange_spark.sources import SnapshotStore
 
     _configure(spark)
     events = _t(spark, sf_dir, "events")
@@ -751,8 +730,8 @@ def q_state_range_read(spark, sf_dir):
         ),
     )
     weeks = [r["_week"] for r in runs.select("_week").distinct().collect()]
-    store = SnapshotStore(tempfile.mkdtemp(prefix="spark_graft_staterange_"))
-    store.commit_partitions(
+    store, _ = _fixture_store(
+        "staterange",
         {
             f"staterun/{w}": runs.where(F.col("_week") == w).drop("_week")
             for w in sorted(weeks)

@@ -6,9 +6,13 @@ This is the ``spark-submit --py-files`` entry point of the engine (north
 rule): on a cluster the SnapshotStore directory is a real Iceberg table and
 nothing else changes. Partitioning strategy:
 
-- work is partitioned by *day* (``bucket_start`` date) — the natural
-  Common-Crawl crawl-batch unit; a restart skips completed days,
-- inside a day, the rollup shuffles on (url, bucket) with AQE coalescing and
+- the store is partitioned by *day* (``{family}/{day}``, the row's
+  ``bucket_start`` or crawl date) — the natural Common-Crawl crawl-batch
+  unit; a restart skips completed days,
+- each tier family is built ONCE over every day still to build and
+  committed in one partitioned write that lands each row in its day's
+  partition, so the build's Spark job count does not grow with the day
+  count; the rollup shuffles on (url, bucket) with AQE coalescing and
   skew-join splitting enabled; the detector scan repartitions by url only
   (its state is sequential per url),
 - ``html`` is never read: the metric extraction selects (url, warc_ts,
@@ -47,7 +51,7 @@ from .operators import (
     window_segmentor_changepoints,
 )
 from .operators._sql import string
-from .sources.snapshots import SnapshotStore
+from .sources.snapshots import _PART_COL, SnapshotStore
 
 
 def extract_metrics(pages: DataFrame) -> DataFrame:
@@ -73,33 +77,36 @@ _STAT_COLS = ["url", "bucket_start", "warc_ts", "run_start_us"]
 
 
 class _Family(NamedTuple):
-    """One tier family of a crawl day. ``build(day_metrics, day_pages)``
-    makes the day's 1h partial from raw rows; ``merge(committed, fresh)``
-    folds a late partial into the committed one at the same tier (the
-    continuous-aggregate refresh: aggregate only the late rows, then
-    merge). ``row_keyed`` families carry the url on every row, so a purge
-    deletes from them; the others are rebuilt. A family without ``build``
-    is derived from the day's (merged) ``tier1h`` partition."""
+    """One tier family, built over every crawl day at once.
+    ``build(metrics, pages)`` makes the 1h partial from raw rows;
+    ``merge(committed, fresh)`` folds a late partial into the committed one
+    at the same tier (the continuous-aggregate refresh: aggregate only the
+    late rows, then merge). ``day`` is the SQL expression of a built row's
+    crawl day, which names its partition ``{prefix}/{day}``. ``row_keyed``
+    families carry the url on every row, so a purge deletes from them; the
+    others are rebuilt. A family without ``build`` is compressed from the
+    (merged) ``tier1h`` frame, keyed by url and partition."""
 
     prefix: str
     build: Callable[[DataFrame, DataFrame], DataFrame] | None
     merge: Callable[[DataFrame, DataFrame], DataFrame] | None
     row_keyed: bool
+    day: str = "to_date(bucket_start)"
 
 
-# Every family rides the day's one raw scan, and the coarser 1d/30d reads
-# merge FROM the committed 1h partials, never re-scanning raw. Builds and
-# merges are lambdas so each call looks the operator up in this module at
-# call time: a wrapper installed on those names at runtime sees every call.
+# Every family rides one raw scan, and the coarser 1d/30d reads merge FROM
+# the committed 1h partials, never re-scanning raw. Builds and merges are
+# lambdas so each call looks the operator up in this module at call time:
+# a wrapper installed on those names at runtime sees every call.
 _FAMILIES = (
     # additive 1h tier: merge_tier keeps associative state, so
     # merge(tier(base), tier(late)) == tier(base ∪ late) exactly
     _Family("tier1h",
             lambda m, p: rollup_raw(m, ["url"], "warc_ts", "text_len", "1h"),
             lambda old, new: merge_tier([old, new], ["url"]), True),
-    # Gorilla blobs are day-local by layout: compressed from the day's
-    # (merged) tier1h partition in _day_partitions.
-    _Family("gorilla1h", None, None, True),
+    # Gorilla blobs are day-local by layout: compressed per (url, day) from
+    # the (merged) tier1h frame, whose partition key names the day.
+    _Family("gorilla1h", None, None, True, f"substring_index({_PART_COL}, '/', -1)"),
     # Mergeable percentile sketches: coarser percentile tiers merge FROM
     # the 1h blobs (sketch_rollup); a GK merge keeps its carried error bound.
     _Family("qsketch1h",
@@ -119,13 +126,13 @@ _FAMILIES = (
             True),
     # Time-in-state runs: each crawl's lang held LOCF until the url's next
     # crawl. Stored per-OBSERVATION (collapse=False) so the read-time span
-    # stitch — which crosses day boundaries the per-day scan cannot see —
+    # stitch — which crosses day boundaries the day partitions cannot see —
     # stays exact under arbitrary late/out-of-order refresh batches: union
     # IS the refresh.
     _Family("staterun",
             lambda m, p: encode_state_runs(p, ["url"], "warc_ts", "lang",
                                            collapse=False),
-            DataFrame.unionByName, True),
+            DataFrame.unionByName, True, "to_date(timestamp_micros(run_start_us))"),
     # The change-score TEXT PASS: signatures depend only on each
     # snapshot's own text, so per-day partials (and late ones) concatenate
     # into the table a global pass would give. xxhash is the scale default:
@@ -135,12 +142,15 @@ _FAMILIES = (
     _Family("sig",
             lambda m, p: snapshot_signatures(p, "url", "warc_ts", "text",
                                              num_hashes=SIG_HASHES, hash_fn="xxhash"),
-            DataFrame.unionByName, True),
+            DataFrame.unionByName, True, "to_date(warc_ts)"),
 )
 
 
-def _on_day(df: DataFrame, day: str) -> DataFrame:
-    return df.where(F.to_date("warc_ts") == F.lit(day))
+def _keyed(fam: _Family, df: DataFrame) -> DataFrame:
+    """``df`` with each row's partition key ``{prefix}/{day}`` in the
+    store's frame-key column."""
+    key = f"concat('{fam.prefix}/', CAST({fam.day} AS STRING))"
+    return df.withColumn(_PART_COL, F.expr(key))
 
 
 def _crawl_days(df: DataFrame) -> list[str]:
@@ -149,38 +159,36 @@ def _crawl_days(df: DataFrame) -> list[str]:
     return sorted(str(r["day"]) for r in days)
 
 
-def _day_partitions(
+def _tier_frames(
     metrics: DataFrame,
     pages: DataFrame,
-    days: list[str],
     chunk_points: int | None,
-    committed: Callable[[str], DataFrame | None] = lambda key: None,
+    committed: Callable[[_Family], DataFrame | None] = lambda fam: None,
 ) -> dict[str, DataFrame]:
-    """Every family's ``{prefix}/{day}`` partition for ``days``, in family
-    table order. ``committed(key)`` returns the stored partition a fresh
-    partial merges into, or None to commit the fresh partial as is."""
-    partitions = {}
-    for day in days:
-        day_metrics, day_pages = _on_day(metrics, day), _on_day(pages, day)
-        for fam in _FAMILIES:
-            key = f"{fam.prefix}/{day}"
-            if fam.build is None:
-                # chunk_points bounds the skew tail at scale: a hot url
-                # whose 1h series runs to millions of points would
-                # otherwise become one giant blob (single sequential
-                # decode stream, one fat task); 64k-point chunks decode at
-                # full lockstep width and re-compress independently under
-                # retention rewrites. The raw operator keeps chunking
-                # opt-in; the pipeline defaults it ON.
-                partitions[key] = compress_series(
-                    partitions[f"tier1h/{day}"], ["url"], "bucket_start",
-                    "sum_v", chunk_points=chunk_points,
-                )
-                continue
-            part = fam.build(day_metrics, day_pages)
-            old = committed(key)
-            partitions[key] = part if old is None else fam.merge(old, part)
-    return partitions
+    """``{prefix: frame}`` in family table order: each family's ONE frame
+    over every day of the input, its rows carrying their partition key
+    (see ``SnapshotStore._commit_frames``). ``committed(fam)`` returns the
+    stored rows a fresh partial merges into, or None to commit the fresh
+    partial as is."""
+    frames = {}
+    for fam in _FAMILIES:
+        if fam.build is None:
+            # chunk_points bounds the skew tail at scale: a hot url whose
+            # 1h series runs to millions of points would otherwise become
+            # one giant blob (single sequential decode stream, one fat
+            # task); 64k-point chunks decode at full lockstep width and
+            # re-compress independently under retention rewrites. The raw
+            # operator keeps chunking opt-in; the pipeline defaults it ON.
+            part = compress_series(
+                frames["tier1h"], ["url", _PART_COL], "bucket_start", "sum_v",
+                chunk_points=chunk_points,
+            )
+        else:
+            part = fam.build(metrics, pages)
+            old = committed(fam)
+            part = part if old is None else fam.merge(old, part)
+        frames[fam.prefix] = _keyed(fam, part)
+    return frames
 
 
 def run_pipeline(
@@ -198,12 +206,16 @@ def run_pipeline(
     days = _crawl_days(metrics)
     done = store.completed_partitions()
     todo = [d for d in days if f"tier1h/{d}" not in done]
+    if len(todo) < len(days):  # resume: the committed days are not rebuilt
+        on_todo = F.to_date("warc_ts").isin(todo)
+        metrics, pages = metrics.where(on_todo), pages.where(on_todo)
 
     t0 = time.time()
     committed = None
     if todo:
-        committed = store.commit_partitions(
-            _day_partitions(metrics, pages, todo, chunk_points),
+        frames = _tier_frames(metrics, pages, chunk_points)
+        committed = store._commit_frames(
+            {f"{p}/{d}": frames[p] for d in todo for p in frames},
             watermark=max(todo),
             properties={"stage": "tiers"},
             stat_cols=_STAT_COLS,
@@ -470,8 +482,9 @@ def purge_url(
     rebuilt = [d for d in kmv_days if d in src_days]
     if rebuilt:
         kmv = next(f for f in _FAMILIES if f.prefix == "kmv1h")
-        report["kmv_rebuild_snapshot"] = store.commit_partitions(
-            {f"kmv1h/{d}": kmv.build(_on_day(purged, d), None) for d in rebuilt},
+        frame = _keyed(kmv, kmv.build(purged, None))
+        report["kmv_rebuild_snapshot"] = store._commit_frames(
+            {f"kmv1h/{d}": frame for d in rebuilt},
             watermark=m.get("watermark"),
             properties={"stage": "purge-kmv-rebuild", "url": url},
             stat_cols=["bucket_start"],
@@ -540,8 +553,11 @@ def refresh_pipeline(
 
     - the late batch *invalidates* exactly the day partitions it touches;
       every tier family of an invalidated day is rewritten in ONE new
-      snapshot, all other partitions are carried by manifest file reuse
-      (zero data rewrite — ``SnapshotStore.commit_partitions``),
+      snapshot (one write per family over all those days), all other
+      partitions are carried by manifest file reuse (zero data rewrite —
+      ``SnapshotStore.commit_partitions``); a partition of an already
+      committed day that retention expired stays expired (rebuilt from
+      the late rows alone it would hold a partial day),
     - the additive 1h tier is refreshed by aggregating ONLY the late rows
       and merging into the committed partition (``merge_tier``: associative
       state, so merge(tier(base), tier(late)) == tier(base ∪ late) exactly
@@ -572,23 +588,30 @@ def refresh_pipeline(
         return run_pipeline(
             spark, late_pages, store_dir, detector_factory, chunk_points
         )
-    done = store.completed_partitions()
+    m = store.manifest()
     late_metrics = extract_metrics(late_pages)
     days = _crawl_days(late_metrics)
-    merged_days = [d for d in days if f"tier1h/{d}" in done]
+    merged_days = sorted({k.partition("/")[2] for k in m["files"]} & set(days))
+
+    def stored(fam: _Family) -> DataFrame | None:
+        keys = [f"{fam.prefix}/{d}" for d in merged_days]
+        paths = [f for key in keys for f in m["files"].get(key, [])]
+        return store._scan_live(spark, paths, m) if paths else None
+
+    def live(prefix: str, day: str) -> bool:
+        # A merged day's partition that retention expired stays expired:
+        # rebuilt from the late rows alone it would hold a partial day.
+        # gorilla1h also needs the tier1h partition it is compressed from.
+        need = {prefix, "tier1h" if prefix == "gorilla1h" else prefix}
+        return day not in merged_days or all(f"{p}/{day}" in m["files"] for p in need)
 
     t0 = time.time()
-    partitions = _day_partitions(
-        late_metrics, late_pages, days, chunk_points,
-        committed=lambda key: store.read(spark, prefix=key)
-        if key.split("/", 1)[1] in merged_days else None,
-    )
-
-    prior_watermark = store.manifest().get("watermark")
+    prior_watermark = m.get("watermark")
     watermark = max([*days, prior_watermark] if prior_watermark else days)
     n_late = late_metrics.count()
-    committed = store.commit_partitions(
-        partitions,
+    frames = _tier_frames(late_metrics, late_pages, chunk_points, stored)
+    committed = store._commit_frames(
+        {f"{p}/{d}": f for d in days for p, f in frames.items() if live(p, d)},
         watermark=watermark,
         properties={
             "stage": "late-refresh",

@@ -58,6 +58,7 @@ from contextlib import contextmanager
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -239,13 +240,24 @@ def _file_column_stats(path: str, stat_cols) -> dict[str, list]:
     return {k: v for k, v in agg.items() if v is not None}
 
 
-def _collect_file_stats(paths, stat_cols) -> dict[str, dict]:
-    """Footer-stat reads for many files, thread-pooled: the reads are tiny
-    I/O-bound metadata fetches, and a serial driver loop over thousands of
-    committed files would add a visible driver stall per commit. (On a real
-    cluster Iceberg collects these from the write tasks themselves; the
-    pool is the honest single-process analogue.)"""
+def _map_files(fn: Callable, paths) -> dict:
+    """``{path: fn(path)}`` for footer reads, thread-pooled past two paths:
+    the reads are tiny I/O-bound metadata fetches, and a serial driver loop
+    over thousands of committed files would add a visible driver stall per
+    commit. (On a real cluster Iceberg collects these from the write tasks
+    themselves; the pool is the honest single-process analogue.)"""
     paths = list(paths)
+    if len(paths) <= 2:
+        return {p: fn(p) for p in paths}
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
+        return dict(zip(paths, pool.map(fn, paths)))
+
+
+def _collect_file_stats(paths, stat_cols) -> dict[str, dict]:
+    """Per-file manifest stats (footer [min, max] and ``bloom:`` specs) for
+    the files that yield any."""
     specs = list(stat_cols)
     plain = [c for c in specs if not c.startswith(BLOOM_PREFIX)]
     blooms = [c[len(BLOOM_PREFIX):] for c in specs if c.startswith(BLOOM_PREFIX)]
@@ -256,33 +268,16 @@ def _collect_file_stats(paths, stat_cols) -> dict[str, dict]:
             s.update(_file_bloom_stats(p, blooms))
         return s
 
-    if len(paths) <= 2:
-        out = {p: one(p) for p in paths}
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
-            out = dict(zip(paths, pool.map(one, paths)))
-    return {p: s for p, s in out.items() if s}
+    return {p: s for p, s in _map_files(one, paths).items() if s}
 
 
 def _rows_per_file(paths) -> dict[str, int]:
-    """Exact row count per file from parquet footers (no data pages),
-    thread-pooled like the stats reads — recorded per partition at commit
-    time so row counts are a metadata lookup (`lineage`), never a scan."""
+    """Exact row count per file from parquet footers (no data pages) —
+    recorded per partition at commit time so row counts are a metadata
+    lookup (`lineage`), never a scan."""
     import pyarrow.parquet as pq
 
-    paths = list(paths)
-
-    def one(p: str) -> int:
-        return pq.ParquetFile(p).metadata.num_rows
-
-    if len(paths) <= 2:
-        return {p: one(p) for p in paths}
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
-        return dict(zip(paths, pool.map(one, paths)))
+    return _map_files(lambda p: pq.ParquetFile(p).metadata.num_rows, paths)
 
 
 def _parquet_files(directory: str) -> list[str]:
@@ -422,6 +417,40 @@ def _write_concurrently(
     return [f.result() for f in futures]
 
 
+#: The column a frame handed to :meth:`SnapshotStore._write_parts` carries
+#: each row's partition key in; it becomes the directory, not a data column.
+_PART_COL = "__cowpart"
+
+
+def _cluster(df: DataFrame, cols, mode: str | None, n: int | None) -> DataFrame:
+    """``df`` range-clustered on ``cols`` (``mode="zorder"``: on their
+    Morton interleave, :func:`zorder_column`) into ``n`` key-disjoint
+    partitions (None: the session's shuffle parallelism, AQE-coalesced),
+    each sorted on the clustering key — one file per partition on write."""
+    keys = list(cols)
+    if mode == "zorder":
+        z, _ = zorder_column(df, keys)
+        df, keys = df.withColumn("__z", z), ["__z"]
+    df = df.repartitionByRange(n, *keys) if n else df.repartitionByRange(*keys)
+    df = df.sortWithinPartitions(*keys)
+    return df.drop("__z") if mode == "zorder" else df
+
+
+def _write_empty_part(directory: str, df: DataFrame) -> str:
+    """``directory`` holding one row-less parquet file of ``df``'s data
+    schema, with the footer schema a Spark writer records: what a plain
+    write of no rows leaves (a partitioned write leaves nothing), so the
+    partition still reads. No Spark job."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType([f for f in df.schema.fields if f.name != _PART_COL])
+    arrow = to_arrow_schema(schema).with_metadata({_SPARK_ROW_METADATA: schema.json()})
+    os.makedirs(directory, exist_ok=True)
+    pq.write_table(arrow.empty_table(), os.path.join(directory, "part-00000.parquet"))
+    return directory
+
+
 def zorder_column(df: DataFrame, cols, bits_per_col: int | None = None):
     """A Z-order (Morton) key over up to 4 columns, built entirely from JVM
     column expressions — the multi-dimensional clustering key behind
@@ -445,8 +474,6 @@ def zorder_column(df: DataFrame, cols, bits_per_col: int | None = None):
       locality, exactly what a crawl table wants.
 
     Returns ``(zcol, n_buckets_per_col)``; NULLs map to bucket 0."""
-    from pyspark.sql import functions as F
-
     cols = list(cols)
     if not 1 <= len(cols) <= 4:
         raise ValueError("zorder_column takes 1-4 columns")
@@ -789,15 +816,19 @@ class SnapshotStore:
         unchanged (file reuse — no rewrite), so incremental jobs commit only
         the partitions they produced.
 
-        The per-partition writes are independent Spark jobs and run
-        concurrently from a bounded driver thread pool (2 x the session's
-        default parallelism, at most one thread per partition), each under
-        the caller's job group. Each write also drops its empty files and
-        reads its footer row counts and stats. The results fold into the
-        manifest in the order of ``partitions`` once every write has
-        finished; if any write fails, its error is raised then and nothing
-        is committed (the written files are orphans for
-        :meth:`remove_orphan_files`).
+        Each frame is tagged with its key and goes through the store's one
+        partitioned writer (:meth:`_write_parts`, the same write every
+        copy-on-write verb uses), so each partition is one Spark job; the
+        jobs run concurrently from a bounded driver thread pool (2 x the
+        session's default parallelism), each under the caller's job group.
+        A task writes no empty file; a partition with no row at all commits
+        one empty file, so it still reads. Footer row counts and stats are
+        read once every write has finished, and fold into the manifest in
+        the order of ``partitions``; if any write fails, its error is raised
+        then and nothing is committed (the written files are orphans for
+        :meth:`remove_orphan_files`). A caller that builds many partitions
+        from one frame (the pipeline's tier families) commits them in one
+        job through :meth:`_commit_frames`.
 
         ``stat_cols``: record per-FILE [min, max] manifest statistics for
         these columns (read from the parquet footers only — the Iceberg
@@ -837,53 +868,49 @@ class SnapshotStore:
         deletes the staged manifest and lets the orphan sweep reclaim its
         unique files. The gate a crawl pipeline wants before a bad dump
         becomes visible."""
+        cluster_by = list(cluster_by) if cluster_by else None
+        if cluster_by and cluster_mode not in ("range", "zorder"):
+            raise ValueError(f"cluster_mode={cluster_mode!r}")
+        tagged = {}
+        for part_key, df in partitions.items():
+            if cluster_by:
+                df = _cluster(df, cluster_by, cluster_mode, cluster_files)
+            tagged[part_key] = df.withColumn(_PART_COL, F.lit(part_key))
+        return self._commit_frames(
+            tagged, watermark, properties, stat_cols, stage,
+            # Recorded so maintenance rewrites preserve the layout the
+            # file-skipping reads depend on (see compact_partitions).
+            **({"cluster_by": cluster_by, "cluster_mode": cluster_mode}
+               if cluster_by else {}),
+        )
+
+    def _commit_frames(
+        self,
+        parts: dict[str, DataFrame],
+        watermark: str | None = None,
+        properties: dict | None = None,
+        stat_cols: Iterable[str] | None = None,
+        stage: bool = False,
+        **layout,
+    ) -> str:
+        """:meth:`commit_partitions` of frames whose rows carry their
+        partition key in ``__cowpart``: ``parts`` maps each partition key to
+        the frame holding its rows (see :meth:`_write_parts`; one frame may
+        hold many keys). ``layout`` lands in every partition's metric."""
         m = self.manifest()
         snapshot_id = _new_snapshot_id()
         stat_cols = set(stat_cols) if stat_cols else None
         files = dict((m or {}).get("files", {}))
         metrics = dict((m or {}).get("metrics", {}))
         file_stats = dict((m or {}).get("file_stats", {}))
-
-        cluster_by = list(cluster_by) if cluster_by else None
-        if cluster_by and cluster_mode not in ("range", "zorder"):
-            raise ValueError(f"cluster_mode={cluster_mode!r}")
-        # Recorded so maintenance rewrites preserve the layout the
-        # file-skipping reads depend on (see compact_partitions).
-        layout = (
-            {"cluster_by": cluster_by, "cluster_mode": cluster_mode}
-            if cluster_by
-            else {}
-        )
-
-        def write_one(item):
-            part_key, df = item
-            part_dir = os.path.join(self.table_dir, "data", snapshot_id, part_key)
+        if parts:
             t0 = time.time()
-            if cluster_by:
-                if cluster_mode == "zorder":
-                    z, _ = zorder_column(df, cluster_by)
-                    df = df.withColumn("__z", z)
-                    keys = ["__z"]
-                else:
-                    keys = cluster_by
-                if cluster_files:
-                    df = df.repartitionByRange(cluster_files, *keys)
-                else:
-                    df = df.repartitionByRange(*keys)
-                df = df.sortWithinPartitions(*keys)
-                if keys == ["__z"]:
-                    df = df.drop("__z")
-            df.write.mode("overwrite").parquet(part_dir)
-            return _register_part_files(
-                part_dir, [], stat_cols, snapshot_id, t0, **layout
-            )
-
-        items = list(partitions.items())
-        if items:
-            written = _write_concurrently(items[0][1].sparkSession, write_one, items)
-            for (part_key, _), (kept, metric, stats) in zip(items, written):
-                files[part_key] = kept
-                metrics[part_key] = metric
+            spark = next(iter(parts.values())).sparkSession
+            subs = self._write_parts(spark, snapshot_id, parts, True)
+            for part_key, sub in subs.items():
+                files[part_key], metrics[part_key], stats = _register_part_files(
+                    sub, [], stat_cols, snapshot_id, t0, **layout
+                )
                 file_stats.update(stats)
 
         properties = dict(properties or {})
@@ -904,6 +931,63 @@ class SnapshotStore:
         else:
             self._commit_manifest(manifest)
         return snapshot_id
+
+    def _write_parts(
+        self,
+        spark: SparkSession,
+        snapshot_id: str,
+        parts: dict[str, DataFrame],
+        keep_empty: bool = False,
+    ) -> dict[str, str]:
+        """The store's one data writer. ``parts`` maps each partition key to
+        the frame holding its rows, each row carrying its key in
+        ``__cowpart``; one frame may hold many keys (a tier family built
+        over every crawl day at once). Each distinct frame lands in ONE
+        Spark job that writes a directory per key (``partitionBy``), so the
+        job count does not grow with the number of partitions; the frames'
+        writes run side by side (:func:`_write_concurrently`), one schema
+        each. Rows under a key ``parts`` does not list are not written.
+        Every task writes one file per key it holds rows for and no empty
+        file; each key's files then move to ``data/<snapshot_id>/<key>/``,
+        the store's layout. Returns ``{key: directory of its new files}`` in
+        ``parts`` order for every key that got a row, or for every key with
+        ``keep_empty`` (a key without rows then gets one empty file of its
+        frame's schema, so it still reads)."""
+        from urllib.parse import unquote
+
+        snap_dir = os.path.join(self.table_dir, "data", snapshot_id)
+        keys_of: dict[int, tuple[DataFrame, list]] = {}
+        for part_key, df in parts.items():
+            keys_of.setdefault(id(df), (df, []))[1].append(part_key)
+
+        def write_one(item):
+            i, (df, keys) = item
+            out = os.path.join(snap_dir, f"__write{i}__")
+            writer = df.where(F.col(_PART_COL).isin(keys)).write.partitionBy(_PART_COL)
+            writer.mode("overwrite").parquet(out)
+            written = []
+            for d in os.listdir(out):
+                if d.startswith(f"{_PART_COL}="):
+                    written.append(unquote(d.split("=", 1)[1]))
+                    src, dest = os.path.join(out, d), os.path.join(snap_dir, written[-1])
+                    # exist_ok: a concurrent write of a nested key ("a/b"
+                    # under "a") may have made the directory already
+                    os.makedirs(dest, exist_ok=True)
+                    for f in os.listdir(src):
+                        os.rename(os.path.join(src, f), os.path.join(dest, f))
+            shutil.rmtree(out)
+            return written
+
+        items = list(enumerate(keys_of.values()))
+        written = set().union(*_write_concurrently(spark, write_one, items))
+        subs = {}
+        for part_key, df in parts.items():
+            sub = os.path.join(snap_dir, part_key)
+            if part_key in written:
+                subs[part_key] = sub
+            elif keep_empty:
+                subs[part_key] = _write_empty_part(sub, df)
+        return subs
 
     def publish(self, snapshot_id: str) -> str:
         """Flip HEAD to a snapshot staged with ``commit_partitions(...,
@@ -1001,9 +1085,9 @@ class SnapshotStore:
         Plan shape: each partition is read from exactly its own files and
         ``coalesce``-d (no shuffle) down to the target file count. The
         per-partition rewrites are independent jobs and run concurrently,
-        as in :meth:`commit_partitions`: results fold into the manifest in
-        partition order once every rewrite has finished, and a failed
-        rewrite commits nothing. ``predicate``
+        each building its scan in its own thread: results fold into the
+        manifest in partition order once every rewrite has finished, and a
+        failed rewrite commits nothing. ``predicate``
         restricts compaction to a partition family (e.g. only ``tier1h/``).
         Returns ``(snapshot_id | None, {partition: {files_before,
         files_after, bytes}})`` — snapshot_id is None when nothing needed
@@ -1044,13 +1128,7 @@ class SnapshotStore:
         file_stats = dict(m.get("file_stats", {}))
 
         def rewrite_one(part_key):
-            n_out = todo[part_key]
-            old_files = files[part_key]
-            # The compacted files inherit manifest stats on the union of the
-            # columns the replaced files carried stats for.
-            stat_cols = {
-                c for f in old_files for c in file_stats.get(f, {})
-            }
+            old_files, prev = files[part_key], metrics.get(part_key, {})
             part_dir = os.path.join(self.table_dir, "data", snapshot_id, part_key)
             t0 = time.time()
             # Live scan: outstanding positional deletes are applied here and
@@ -1061,44 +1139,22 @@ class SnapshotStore:
             # the file disjointness every stats-pruned read depends on —
             # the nightly maintain() would silently de-optimize the table.
             # Re-cluster on the recorded keys instead (range shuffle).
-            prev = metrics.get(part_key, {})
-            ckeys, cmode = prev.get("cluster_by"), prev.get("cluster_mode")
+            ckeys, n_out = prev.get("cluster_by"), todo[part_key]
             if ckeys:
-                if cmode == "zorder":
-                    z, _ = zorder_column(src, ckeys)
-                    src = (
-                        src.withColumn("__z", z)
-                        .repartitionByRange(n_out, "__z")
-                        .sortWithinPartitions("__z")
-                        .drop("__z")
-                    )
-                else:
-                    src = src.repartitionByRange(
-                        n_out, *ckeys
-                    ).sortWithinPartitions(*ckeys)
+                src = _cluster(src, ckeys, prev.get("cluster_mode"), n_out)
             else:
                 src = src.coalesce(n_out)
             src.write.mode("overwrite").parquet(part_dir)
-            new_files = _parquet_files(part_dir)
-            stats = _collect_file_stats(new_files, stat_cols) if stat_cols else {}
-            # Compaction rewrites bytes, not data: incremental consumers
-            # key off the last DATA write, carried through every rewrite.
-            data_snapshot_id = prev.get(
-                "data_snapshot_id", prev.get("snapshot_id")
+            # The compacted files inherit manifest stats on the union of the
+            # columns the replaced files carried stats for. Compaction
+            # rewrites bytes, not data: incremental consumers key off the
+            # last DATA write, carried through every rewrite.
+            return _register_part_files(
+                part_dir, [], {c for f in old_files for c in file_stats.get(f, {})},
+                snapshot_id, t0, compacted_from=len(old_files),
+                data_snapshot_id=prev.get("data_snapshot_id", prev.get("snapshot_id")),
+                **_cluster_layout(prev),
             )
-            metric = {
-                "n_files": len(new_files),
-                "n_rows": sum(_rows_per_file(new_files).values()),
-                "bytes": sum(os.path.getsize(f) for f in new_files),
-                "write_seconds": round(time.time() - t0, 3),
-                "snapshot_id": snapshot_id,
-                "compacted_from": len(old_files),
-                "data_snapshot_id": data_snapshot_id,
-            }
-            if ckeys:
-                metric["cluster_by"] = ckeys
-                metric["cluster_mode"] = cmode
-            return new_files, metric, stats
 
         parts = list(todo)
         report: dict[str, dict] = {}
@@ -1110,9 +1166,8 @@ class SnapshotStore:
                 "files_after": len(new_files),
                 "bytes": metric["bytes"],
             }
-            files[part_key] = new_files
+            files[part_key], metrics[part_key] = new_files, metric
             file_stats.update(stats)
-            metrics[part_key] = metric
 
         self._commit_manifest(
             self._new_manifest(
@@ -1169,51 +1224,33 @@ class SnapshotStore:
         Live (not raw) scans keep earlier merge-on-read deletes deleted: a
         raw rewrite would resurrect those rows because the new file sheds
         the parent's positional-delete entries. Every partition of a map is
-        written in ONE Spark job via dynamic partition directories, so on a
-        cluster the rewrites parallelize across executors instead of paying
-        one sequential job per partition; the maps' writes run side by side
-        (:func:`_write_concurrently`).
+        written in ONE Spark job by the store's one writer
+        (:meth:`_write_parts`), so on a cluster the rewrites parallelize
+        across executors instead of paying one sequential job per
+        partition; the maps' writes run side by side.
         Untouched files are carried by reference. A partition whose touched
         files lost every row keeps its untouched files, or is dropped when
         it has none (the expire_partitions shape, not a husk). Rewritten
         files get stats on the columns the replaced files carried stats
         for, and each rewritten partition keeps its cluster layout; its
         metric records ``{metric_key: number of files replaced}``."""
-        from urllib.parse import unquote
-
-        from pyspark.sql import functions as F
-
         files = dict(m["files"])
         metrics = dict(m.get("metrics", {}))
         file_stats = dict(m.get("file_stats", {}))
         writes = [w for w in writes if w]
         if not writes:
             return files, metrics, file_stats, []
-        snap_dir = os.path.join(self.table_dir, "data", snapshot_id)
-
-        def write_one(item):
-            i, touched = item
-            cow_dir = os.path.join(snap_dir, f"__cow{i}__")
-            rewritten = [
+        parts = {}
+        for touched in writes:
+            frame = functools.reduce(DataFrame.unionByName, [
                 row_fn(self._scan_live(spark, paths, m)).withColumn(
-                    "__cowpart", F.lit(part_key)
+                    _PART_COL, F.lit(part_key)
                 )
                 for part_key, paths in touched.items()
-            ]
-            n_out = max(1, sum(len(paths) for paths in touched.values()))
-            functools.reduce(DataFrame.unionByName, rewritten).coalesce(
-                n_out
-            ).write.partitionBy("__cowpart").mode("overwrite").parquet(cow_dir)
-            return {
-                unquote(d.split("=", 1)[1]): os.path.join(cow_dir, d)
-                for d in os.listdir(cow_dir)
-                if d.startswith("__cowpart=")
-            }
-
+            ]).coalesce(max(1, sum(len(paths) for paths in touched.values())))
+            parts.update(dict.fromkeys(touched, frame))
         t0 = time.time()
-        sub_by_part = {}
-        for subs in _write_concurrently(spark, write_one, list(enumerate(writes))):
-            sub_by_part.update(subs)
+        sub_by_part = self._write_parts(spark, snapshot_id, parts)
         dropped = []
         for part_key, paths in (kv for touched in writes for kv in touched.items()):
             replaced = frozenset(paths)
@@ -1288,8 +1325,6 @@ class SnapshotStore:
         Returns ``(snapshot_id | None, report)`` — ``None`` when the merge
         was a provable no-op (empty source, or no matches and nothing to
         insert)."""
-        from pyspark.sql import functions as F
-
         key_cols = list(key_cols)
         if when_not_matched not in ("insert", "ignore", "error"):
             raise ValueError(f"when_not_matched={when_not_matched!r}")
@@ -1413,20 +1448,19 @@ class SnapshotStore:
                             f"partition {insert_partition!r}"
                         )
                     unmatched = unmatched.select(*tgt_cols)
-                # A subdir of its own: an overwrite-mode write must never
-                # land on another output of this snapshot.
-                part_dir = os.path.join(
-                    self.table_dir, "data", snapshot_id, insert_partition,
-                    "__append__",
-                )
+                # A subdir of its own: the rewrite may have written the
+                # partition's directory of this snapshot already.
+                append = f"{insert_partition}/__append__"
                 t0 = time.time()
-                stat_cols = {c for f in existing for c in file_stats.get(f, {})}
-                with _stats_friendly_writes(spark):
-                    unmatched.write.mode("overwrite").parquet(part_dir)
+                (part_dir,) = self._write_parts(spark, snapshot_id, {
+                    append: unmatched.withColumn(_PART_COL, F.lit(append))
+                }, True).values()
                 before = metrics.get(insert_partition, {}).get("n_rows", 0)
                 files[insert_partition], metrics[insert_partition], stats = (
                     _register_part_files(
-                        part_dir, existing, stat_cols, snapshot_id, t0,
+                        part_dir, existing,
+                        {c for f in existing for c in file_stats.get(f, {})},
+                        snapshot_id, t0,
                         **_cluster_layout(metrics.get(insert_partition, {})),
                     )
                 )
@@ -1529,8 +1563,6 @@ class SnapshotStore:
         parquet write); merge-on-read writes one positional-delete file for
         all of them. Either way the delete lands in one commit, so a crash
         leaves every family as it was (a purge cannot stop half done)."""
-        from pyspark.sql import functions as F
-
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(
                 f"mode must be 'copy-on-write' or 'merge-on-read', got {mode!r}"
@@ -1623,8 +1655,6 @@ class SnapshotStore:
         their neighbors — re-cluster via :meth:`compact_partitions` if
         range pruning on that key matters. Returns
         ``(snapshot_id | None, report)`` — ``None`` when no row matched."""
-        from pyspark.sql import functions as F
-
         cond = F.expr(condition) if isinstance(condition, str) else condition
         m = self._head_manifest()
         if not set:
@@ -1994,8 +2024,6 @@ class SnapshotStore:
         rel = sorted({d for p in paths for d in dmap.get(p, [])})
         if not rel:
             return df
-        from pyspark.sql import functions as F
-
         dels = (
             self._parquet(spark, rel)
             .select(
@@ -2041,8 +2069,6 @@ class SnapshotStore:
         NULL-keyed rows). The key set rides a broadcast — equality deletes
         are tombstone-sized by construction (a CDC batch, a purge list),
         and compaction folds them into plain files before they grow."""
-        from pyspark.sql import functions as F
-
         keys = self._parquet(spark, entry["paths"]).dropDuplicates()
         cond = functools.reduce(
             lambda a, b: a & b,
@@ -2076,8 +2102,6 @@ class SnapshotStore:
         unioned) so a key re-inserted after its tombstone survives. No
         per-row file-path lookup table is ever built — epoch membership is
         decided at plan time from the manifest."""
-        from pyspark.sql import functions as F
-
         paths = list(paths)
 
         def build(group_paths):

@@ -1527,10 +1527,11 @@ def test_pipeline_refresh_purge_keep_their_families_jobs_and_files(
     """A cold ``run_pipeline`` commits the seven tier families per day in a
     fixed order, ``run_pipeline`` and a following ``refresh_pipeline`` each
     run a pinned number of Spark jobs and write a pinned number of files,
-    and ``purge_url`` deletes from exactly the row-keyed families: a
-    family dropped from, added to or reordered in the family table, or an
-    extra job in the day builder, fails here before it shows up as a slower
-    benchmark."""
+    the cold build's job count does not grow with the day count (each
+    family is one write over every day), and ``purge_url`` deletes from
+    exactly the row-keyed families: a family dropped from, added to or
+    reordered in the family table, or an extra job in the family builder,
+    fails here before it shows up as a slower benchmark."""
     import uuid
 
     from test_snapshot_concurrency import (
@@ -1548,7 +1549,7 @@ def test_pipeline_refresh_purge_keep_their_families_jobs_and_files(
     store = SnapshotStore(store_dir)
     sc = spark.sparkContext
 
-    def jobs_and_new_files(name, run):
+    def jobs_and_new_files(name, run, store=store):
         before = _live_files(store) if store.head() else set()
         group = f"{name}-{uuid.uuid4().hex}"
         sc.setJobGroup(group, name)
@@ -1558,31 +1559,41 @@ def test_pipeline_refresh_purge_keep_their_families_jobs_and_files(
             _clear_job_group(spark)
         return out, len(_jobs_in_group(spark, group)), len(_live_files(store) - before)
 
-    r1, jobs, files = jobs_and_new_files(
-        "run", lambda: run_pipeline(spark, base, store_dir)
-    )
     days = sorted(
         str(r["d"])
         for r in base.select(F.to_date("warc_ts").alias("d")).distinct().collect()
     )
+    two_dir = str(tmp_path / "two_days")
+    r0, jobs_two_days, _ = jobs_and_new_files(
+        "run-2d",
+        lambda: run_pipeline(
+            spark, base.where(F.to_date("warc_ts").isin(days[:2])), two_dir
+        ),
+        SnapshotStore(two_dir),
+    )
+    r1, jobs, files = jobs_and_new_files(
+        "run", lambda: run_pipeline(spark, base, store_dir)
+    )
     assert list(store.manifest()["files"]) == [
         f"{fam}/{day}" for day in days for fam in TIER_FAMILIES
     ]
-    assert (r1["days_built"], jobs, files) == (len(days), 144, 82)
+    assert (r0["days_built"], r1["days_built"]) == (2, len(days)) == (2, 7)
+    assert (jobs_two_days, jobs, files) == (47, 47, 81)
 
     r2, jobs, files = jobs_and_new_files(
         "refresh", lambda: refresh_pipeline(spark, late, store_dir)
     )
     assert r2["merged_days"] == days
-    assert (jobs, files) == (156, 104)
+    assert (jobs, files) == (30, 100)
 
     # purge: ONE delete over the six row-keyed families (one probe write,
-    # one snapshot) plus the kmv rebuild commit; at the six-deletes shape
-    # it was 37 jobs and 7 snapshots, then 53 and 7 for a second purge
+    # one snapshot) plus the kmv rebuild commit, one write over every day;
+    # at the six-deletes shape it was 37 jobs and 7 snapshots, then 53 and
+    # 7 for a second purge, and 20 and 26 jobs with a kmv write per day
     urls = sorted(r["url"] for r in pages.select("url").distinct().collect())
     for victim, want_jobs, want_deleted, want_pruned in (
-        (urls[0], 20, [93, 7, 93, 93, 240, 240], [0, 4, 1, 0, 8, 8]),
-        (urls[1], 26, [27, 3, 27, 27, 64, 64], [4, 7, 20, 4, 16, 16]),
+        (urls[0], 6, [93, 7, 93, 93, 240, 240], [0, 3, 1, 0, 6, 7]),
+        (urls[1], 8, [27, 3, 27, 27, 64, 64], [4, 6, 20, 4, 14, 15]),
     ):
         n_snapshots = len(store.history())
         report, jobs, _ = jobs_and_new_files(
@@ -1597,6 +1608,82 @@ def test_pipeline_refresh_purge_keep_their_families_jobs_and_files(
         }
         assert report["kmv_rebuilt_days"] == days
         assert (jobs, len(store.history()) - n_snapshots) == (want_jobs, 2)
+    pages.unpersist()
+
+
+def _rows(df):
+    """``df``'s rows as a sorted list (a multiset), floats to 12 digits."""
+    return sorted(
+        tuple(float(f"{v:.12g}") if isinstance(v, float) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def test_partitions_hold_their_days_rows_whatever_the_write_shape(
+    spark, tmp_path
+):
+    """Each family is built over every day at once and written in one
+    partitioned job, yet every ``{family}/{day}`` partition holds exactly
+    the rows that family's build gives over that day's input alone, and
+    the gorilla blobs are byte-equal per (url, chunk)."""
+    from streamchange_spark.operators import compress_series
+    from streamchange_spark.pipeline import _FAMILIES
+
+    pages = generate_pages(spark, n_urls=8, mean_snapshots=12).cache()
+    store = SnapshotStore(str(tmp_path / "shape"))
+    run_pipeline(spark, pages, store.table_dir)
+    days = sorted(k.split("/", 1)[1] for k in store.manifest()["files"] if k.startswith("tier1h/"))
+    assert len(days) == 7
+    metrics = extract_metrics(pages)
+    for day in days:
+        on_day = F.to_date("warc_ts") == F.lit(day)
+        day_metrics, day_pages = metrics.where(on_day), pages.where(on_day)
+        for fam in _FAMILIES:
+            if fam.build is None:
+                want = compress_series(
+                    _FAMILIES[0].build(day_metrics, day_pages), ["url"],
+                    "bucket_start", "sum_v", chunk_points=65536,
+                )
+            else:
+                want = fam.build(day_metrics, day_pages)
+            got = store.read(spark, prefix=f"{fam.prefix}/{day}")
+            assert got.columns == want.columns, fam.prefix
+            assert _rows(got) == _rows(want), (fam.prefix, day)
+    pages.unpersist()
+
+
+def test_refresh_after_retention_keeps_expired_partitions_expired(
+    spark, tmp_path
+):
+    """A late shard for days whose ``sig/`` partitions retention already
+    dropped (their ``tier1h/`` partitions still live) refreshes without
+    error: no expired partition comes back, and every live family equals a
+    clean rebuild over base and late rows."""
+    from streamchange_spark.pipeline import apply_retention_policy, refresh_pipeline
+
+    pages = generate_pages(spark, n_urls=8, mean_snapshots=12).cache()
+    late_slice = F.pmod(F.xxhash64("url", "warc_ts"), F.lit(4)) == 0
+    store_dir = str(tmp_path / "retained")
+    run_pipeline(spark, pages.where(~late_slice), store_dir)
+    store = SnapshotStore(store_dir)
+    _, dropped = apply_retention_policy(store, {"sig/": 1}, now="2024-01-07")
+    assert dropped == [f"sig/2024-01-0{d}" for d in range(1, 6)]
+
+    r = refresh_pipeline(spark, pages.where(late_slice), store_dir)
+    assert r["merged_days"] == [f"2024-01-0{d}" for d in range(1, 8)]
+    clean = SnapshotStore(str(tmp_path / "clean"))
+    run_pipeline(spark, pages, clean.table_dir)
+    keys = list(store.manifest()["files"])
+    assert not set(dropped) & set(keys)
+    assert sorted(keys) == sorted(set(clean.manifest()["files"]) - set(dropped))
+    for key in keys:
+        got, want = store.read(spark, prefix=key), clean.read(spark, prefix=key)
+        if key.startswith("qsketch1h/"):
+            # GK merges carry their error bound: not bit-equal by design
+            got, want = (
+                df.select("url", "bucket_start", "n_points") for df in (got, want)
+            )
+        assert _rows(got) == _rows(want), key
     pages.unpersist()
 
 
